@@ -175,6 +175,9 @@ HEADLINE = [
 # a query once the cap is hit, swap out the least-informative sibling
 # rather than growing the list.
 HEADLINE_CAP = 130
+# Key of the flagged-query map in a NOOP_AUDIT_r*.json receipt; written by
+# tools/noop_audit.py, read into the sidecar's noop_audit column.
+NOOP_AUDIT_FLAG_KEY = "flagged_noop_over_2x_count"
 
 # Frozen canary reference (the round-6 driver record, BENCH_r06.json):
 # box-level contention inflates whole runs uniformly (round 6 measured two
@@ -700,7 +703,7 @@ def main() -> None:
                 audit = json.load(fh)
             sidecar["noop_audit"] = {
                 "receipt": os.path.basename(noop_path),
-                "flagged": audit.get("flagged_noop_over_2x_count", {}),
+                "flagged": audit.get(NOOP_AUDIT_FLAG_KEY, {}),
             }
         except (OSError, ValueError, TypeError) as exc:
             print(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,25 +40,75 @@ def normalize_time_columns(df: DataFrame) -> DataFrame:
     return df
 
 
+def data_files(path: str) -> list[str]:
+    """The data files behind a table path: the path itself for a single-file
+    table, else every file under the directory except Spark's ``_``/``.``
+    metadata and checksum files."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(root, f)
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
+
+
+def resolve_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The raw on-disk schema of a parquet table, inferred from its footer
+    (a Spark job) once per (session, path).
+
+    The memo lives on the session object and keys each schema by the
+    table's data-file (path, mtime, size) signature, so a table rewritten
+    in place re-resolves. Only the schema is kept: callers still build a
+    fresh relation per read, so self-joins get distinct expression IDs. A
+    path that cannot be stat'ed (missing, or not local) is never memoized
+    and fails in Spark's own read, as an uncached read would.
+    """
+    try:
+        stats = [(f, os.stat(f)) for f in data_files(path)]
+    except OSError:
+        sig = None
+    else:
+        sig = tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats)
+    cache: dict | None = getattr(spark, "_dwfs_raw_schemas", None)
+    if cache is None:
+        cache = spark._dwfs_raw_schemas = {}
+    hit = cache.get(path)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    if sig is not None:
+        cache[path] = (sig, schema)
+    return schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Parquet scan → pushdown + pruning for free.
 
     Time columns are normalized to TimestampType (see
     ``normalize_time_columns``); everything downstream can assume real
-    event-time columns regardless of the on-disk encoding.
+    event-time columns regardless of the on-disk encoding. The raw schema
+    is resolved once per session (``resolve_schema``), so a repeated read
+    builds its relation without touching the footer or launching a job.
+    The two session conf pins are still set on every call: the caller may
+    be an external harness session, not ``session.get_spark``'s, and its
+    conf may have changed since the last call.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
-    # Defensive session pins (both runtime-settable; the caller may be an
-    # external harness session, not session.get_spark):
     # - UTC: the NTZ→TIMESTAMP cast in normalize_time_columns interprets
     #   wall-clock values in the session TZ; only UTC preserves the instant
     #   and matches DuckDB's naive-UTC read (registry determinism contract).
     # - nanosAsLong: keeps a legacy TIMESTAMP(NANOS) file readable (as
-    #   LongType, handled above) instead of erroring at scan time.
+    #   LongType, handled above) instead of erroring at scan time; it also
+    #   determines the raw schema resolve_schema infers for such a file.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_time_columns(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    path = f"{sf_dir}/{name}.parquet"
+    return normalize_time_columns(
+        spark.read.schema(resolve_schema(spark, path)).parquet(path)
+    )
 
 
 def ensure_scan_parallelism(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -1574,7 +1574,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One shuffle on (label, pos); 100 TB of vectors reduce to
     |labels| × dim rows."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _embs(spark, sf_dir)
     flat = emb.select(
         "label", F.posexplode("embedding").alias("pos0", "v")
     ).select(

@@ -18,20 +18,18 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     """Register the testdata tables the SQL references as temp views and
     run it.
 
-    r14 (guide §1.2 driver work): the original form re-registered ALL ten
-    testdata tables on EVERY invocation — ten `spark.read.parquet` schema
-    reads of driver-side listing per call, for queries that touch one or
-    two tables. Now only tables whose name appears in the SQL text are
-    registered (substring over-inclusion is harmless — a view nobody
-    reads costs one footer read; under-inclusion cannot happen because
-    FROM/JOIN must spell the table name), and registrations are memoized
-    per (session, sf_dir) so repeated invocations skip the read entirely.
-    A changed sf_dir re-registers — the memo maps view name → sf_dir.
+    Only tables whose name appears in the SQL text are registered
+    (substring over-inclusion is harmless — a view nobody reads costs one
+    relation build; under-inclusion cannot happen because FROM/JOIN must
+    spell the table name), and registrations are memoized per (session,
+    sf_dir) so repeated invocations skip `io.table` entirely. A changed
+    sf_dir re-registers — the memo maps view name → sf_dir. (Footer schema
+    reads are memoized one level down, per session and path, by
+    `io.resolve_schema`.)
 
-    r15 (VERDICT r14 #8): the substring match is case-insensitive — SQL
-    table identifiers are case-insensitive, so `SELECT ... FROM ORDERS`
-    must register the `orders` view exactly like the lowercase spelling
-    did before the r14 memoization narrowed registration."""
+    The substring match is case-insensitive, as SQL table identifiers
+    are: `SELECT ... FROM ORDERS` registers the `orders` view exactly
+    like the lowercase spelling."""
     registered: dict[str, str] | None = getattr(
         spark, "_dwfs_sql_views", None
     )

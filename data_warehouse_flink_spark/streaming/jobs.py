@@ -36,14 +36,21 @@ _SIZE_UNITS = {
     "g": 1 << 30, "gb": 1 << 30,
     "t": 1 << 40, "tb": 1 << 40,
 }
+_DEFAULT_ADVISORY_BYTES = 64 << 20
 
 
 def _parse_size_bytes(text: str) -> int:
     """Spark size-conf string ('64m', '64MB', '67108864b', '67108864')
-    to bytes."""
+    to bytes. Any other string ('0.5g', '1p', '1pb', '0') falls back to
+    the 64 MB advisory default: an odd conf value only costs the width
+    derivation its precision, never the stream."""
     s = text.strip().lower()
     digits = s.rstrip("kmgtb")
-    return int(digits) * _SIZE_UNITS[s[len(digits):]]
+    try:
+        size = int(digits) * _SIZE_UNITS[s[len(digits):]]
+    except (ValueError, KeyError):
+        return _DEFAULT_ADVISORY_BYTES
+    return size if size > 0 else _DEFAULT_ADVISORY_BYTES
 
 
 def adaptive_stateful_width(spark: SparkSession, input_bytes: int) -> int:

@@ -22,32 +22,30 @@ def source_bytes(sf_dir: str, table: str = "events") -> int:
     directory of part files."""
     import os
 
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-    return os.path.getsize(path)
+    from data_warehouse_flink_spark.io import data_files
+
+    return sum(
+        os.path.getsize(f)
+        for f in data_files(os.path.join(sf_dir, f"{table}.parquet"))
+    )
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: replay the events table as a file stream.
 
-    The raw schema is introspected from the parquet footer (a metadata-only
-    batch read) and the time columns go through the *same* normalization as
-    the batch reader (``io.normalize_time_columns``), so the stream and
+    The raw schema comes from the parquet footer, resolved once per session
+    by the batch reader's ``io.resolve_schema``, and the time columns go
+    through the *same* normalization as the batch reader
+    (``io.normalize_time_columns``), so the stream and
     ``io.table(spark, sf_dir, "events")`` can never disagree on ``ts``
     encoding again — tests assert schema equality between the two.
     """
-    from data_warehouse_flink_spark.io import normalize_time_columns
+    from data_warehouse_flink_spark.io import normalize_time_columns, resolve_schema
 
     # Same defensive session pins as io.table (see there for why).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = resolve_schema(spark, f"{sf_dir}/events.parquet")
     # The file stream source requires a directory; glob-filter to the one
     # table file inside the sf dir.
     raw = (

@@ -505,3 +505,28 @@ def test_bench_canary_reference_aligned():
     assert set(bench.CANARY_REF_R12) == set(bench.CANARY_REF)
     assert all(0 < v < 5 for v in bench.CANARY_REF_R12.values())
     assert bench.CANARY_REPS >= 5
+
+
+def test_noop_audit_receipt_uses_the_key_bench_reads():
+    """The audit tool writes its flagged queries under the key bench.py's
+    noop_audit sidecar column reads, in the receipt's {count, noop} shape."""
+    import os
+    import sys
+
+    from bench import NOOP_AUDIT_FLAG_KEY
+
+    tools_dir = os.path.join(os.path.dirname(conftest.__file__), "..", "tools")
+    sys.path.insert(0, tools_dir)
+    try:
+        from noop_audit import receipt
+    finally:
+        sys.path.remove(tools_dir)
+
+    got = receipt({
+        "pruned": {"count": 0.2, "noop": 1.5},  # > 2x count and count + 0.3
+        "small": {"count": 0.05, "noop": 0.2},  # 4x, under the 0.3 s floor
+        "even": {"count": 1.0, "noop": 1.1},
+        "broken": {"error": "boom"},
+    })
+    assert got[NOOP_AUDIT_FLAG_KEY] == {"pruned": {"count": 0.2, "noop": 1.5}}
+    assert got["n_flagged"] == 1

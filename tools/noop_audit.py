@@ -12,6 +12,8 @@ KEEP count() — every prior round, the canary references, and the driver's
 cross-round comparison are count()-based).
 
 Run: [SPARK_GRAFT_SF_DIR=...] python tools/noop_audit.py
+It prints the receipt's timing fields as one JSON object; bench.py reads
+the flags under NOOP_AUDIT_FLAG_KEY.
 """
 
 from __future__ import annotations
@@ -23,6 +25,20 @@ import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
+
+
+def receipt(per_query: dict[str, dict]) -> dict:
+    """Receipt of one audit: per-query {count, noop} min walls (or
+    {error}), and the flagged subset under the key bench.py reads."""
+    from bench import NOOP_AUDIT_FLAG_KEY
+
+    flag = {
+        k: v
+        for k, v in per_query.items()
+        if "error" not in v and v["noop"] > max(2 * v["count"], v["count"] + 0.3)
+    }
+    return {NOOP_AUDIT_FLAG_KEY: flag, "n_flagged": len(flag),
+            "per_query": per_query}
 
 
 def main() -> int:
@@ -38,7 +54,7 @@ def main() -> int:
     for warm in ("page_view", "tpch_q6", "doc_token_stats", "knn_bruteforce"):
         qs[warm].spark_fn(spark, sf_dir).count()
 
-    out: dict[str, tuple] = {}
+    out: dict[str, dict] = {}
     for name in HEADLINE:
         fn = qs[name].spark_fn
         try:
@@ -53,16 +69,10 @@ def main() -> int:
                     "overwrite"
                 ).save()
                 tn = min(tn, time.perf_counter() - t0)
-            out[name] = (round(tc, 3), round(tn, 3))
+            out[name] = {"count": round(tc, 3), "noop": round(tn, 3)}
         except Exception as exc:  # keep sweeping; surface in the map
-            out[name] = ("err", str(exc)[:80])
-    flag = {
-        k: v
-        for k, v in out.items()
-        if isinstance(v[0], float) and v[1] > max(2 * v[0], v[0] + 0.3)
-    }
-    print(json.dumps({"flagged": flag, "n_flagged": len(flag)}, indent=1))
-    json.dump(out, open("/tmp/count_vs_noop.json", "w"), indent=1)
+            out[name] = {"error": str(exc)[:80]}
+    print(json.dumps(receipt(out), indent=1))
     return 0
 
 
