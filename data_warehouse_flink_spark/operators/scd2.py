@@ -42,11 +42,10 @@ def scd2_apply(
     - new keys: appended as current
     - unchanged keys / historical rows: untouched
 
-    Precondition (unchanged since r1, now load-bearing for the join form):
-    `updates` carries at most one row per key — the operator's contract is
-    "one update batch", and both this and the pre-r15 anti-join form
-    produce a corrupt history (several is_current rows per key) when a
-    batch repeats a key.
+    Preconditions on `updates`: at most one row per key (a repeated key
+    corrupts the history with several is_current rows), and a non-NULL
+    key — the full outer join tells its sides apart by NULL keys, so a
+    NULL-key row fails the job (``raise_error``, checked at execution).
 
     r15 (guide §2.4, VERDICT r14 #1): one FULL OUTER join on the key
     replaces the former 3 joins + distinct (anti on key+hash to find
@@ -72,7 +71,11 @@ def scd2_apply(
         )
     )
     cur_h = cur.withColumn("_h", attr_hash)
-    upd_h = updates.select(key, *attrs).withColumn("_h", attr_hash)
+    null_key = F.raise_error(F.lit(f"scd2_apply: NULL business key {key}"))
+    checked_key = F.when(F.col(key).isNull(), null_key).otherwise(F.col(key))
+    upd_h = updates.select(checked_key.alias(key), *attrs).withColumn(
+        "_h", attr_hash
+    )
 
     joined = cur_h.alias("c").join(
         upd_h.alias("u"),

@@ -1640,7 +1640,6 @@ def streaming_user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction and the BATCH oracle applies verbatim.
     """
     import os
-    import shutil
     import tempfile
 
     from data_warehouse_flink_spark.streaming.jobs import (
@@ -1661,34 +1660,30 @@ def streaming_user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct("ts", "event_id", "event_type", "value")
         ).alias("last")
     )
-    work = tempfile.mkdtemp(prefix="cdc_snapshot_")
-    table = os.path.join(work, "snapshot")
-    # r15 (VERDICT r14 #1, guide §2.5): the struct-max partial-aggregates
-    # map-side to one row per user per map task, so the stateful width can
-    # follow the replayed input like the rollup twin's (scoped — the
-    # snapshot read-back below keeps the session default).
-    with scoped_shuffle_partitions(
-        spark, adaptive_stateful_width(spark, source_bytes(sf_dir))
-    ):
-        q = merge_upsert_foreachbatch(
-            latest, table, ["user_id"], n_buckets=16
-        )
+    with tempfile.TemporaryDirectory(prefix="cdc_snapshot_") as work:
+        table = os.path.join(work, "snapshot")
+        # the struct-max partial-aggregates map-side, so the stateful width
+        # can follow the replayed input (scoped to start())
+        with scoped_shuffle_partitions(
+            spark, adaptive_stateful_width(spark, source_bytes(sf_dir))
+        ):
+            q = merge_upsert_foreachbatch(
+                latest, table, ["user_id"], n_buckets=16
+            )
         q.awaitTermination()
-    snap = (
-        spark.read.parquet(table)
-        .filter(F.col("last.event_type") != "error")
-        .select(
-            "user_id",
-            F.col("last.event_type").alias("last_event_type"),
-            F.expr(
-                "CAST(CAST(last.value AS DECIMAL(18,6)) AS STRING)"
-            ).alias("last_value"),
-            F.unix_micros("last.ts").alias("last_ts_us"),
+        return (
+            spark.read.parquet(table)
+            .filter(F.col("last.event_type") != "error")
+            .select(
+                "user_id",
+                F.col("last.event_type").alias("last_event_type"),
+                F.expr(
+                    "CAST(CAST(last.value AS DECIMAL(18,6)) AS STRING)"
+                ).alias("last_value"),
+                F.unix_micros("last.ts").alias("last_ts_us"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return snap
 
 
 @register(
@@ -2192,7 +2187,6 @@ def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch union, against the same full-recompute oracle.
     """
     import os
-    import shutil
     import tempfile
 
     from data_warehouse_flink_spark.streaming.jobs import (
@@ -2216,25 +2210,22 @@ def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
         ).alias("sum_value_micro"),
     )
-    work = tempfile.mkdtemp(prefix="rollup_mart_")
-    table = os.path.join(work, "mart")
-    # r15 (VERDICT r14 #1, guide §2.5): (event_type, day) state is
-    # dimension-sized — width follows the replayed input, scoped to the
-    # stream's span so the mart read-back below keeps the session default.
-    with scoped_shuffle_partitions(
-        spark, adaptive_stateful_width(spark, source_bytes(sf_dir))
-    ):
-        q = merge_upsert_foreachbatch(
-            agg, table, ["event_type", "day"], n_buckets=16
-        )
+    with tempfile.TemporaryDirectory(prefix="rollup_mart_") as work:
+        table = os.path.join(work, "mart")
+        # (event_type, day) state is dimension-sized: width follows the
+        # replayed input (scoped to start())
+        with scoped_shuffle_partitions(
+            spark, adaptive_stateful_width(spark, source_bytes(sf_dir))
+        ):
+            q = merge_upsert_foreachbatch(
+                agg, table, ["event_type", "day"], n_buckets=16
+            )
         q.awaitTermination()
-    out = (
-        spark.read.parquet(table)
-        .select("event_type", "day", "cnt", "sum_value_micro")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        return (
+            spark.read.parquet(table)
+            .select("event_type", "day", "cnt", "sum_value_micro")
+            .localCheckpoint(eager=True)
+        )
 
 
 @register(
@@ -2329,12 +2320,15 @@ def _register_streaming_scd2() -> None:
         per-batch applies replay the identical day sequence.
         """
         import os
-        import shutil
         import tempfile
 
         from data_warehouse_flink_spark.operators.scd2 import (
             scd2_apply,
             scd2_init,
+        )
+        from data_warehouse_flink_spark.streaming.jobs import (
+            adaptive_stateful_width,
+            scoped_shuffle_partitions,
         )
 
         # ONE events scan feeds all four replay-day writes (the batch
@@ -2351,116 +2345,100 @@ def _register_streaming_scd2() -> None:
             .select("user_id", "ts", "value")
             .localCheckpoint(eager=True)
         )
-        work = tempfile.mkdtemp(prefix="scd2_stream_")
-        replay = os.path.join(work, "replay")
-        # SCD2 apply is order-dependent, and the file source orders
-        # same-mtime files by (random) part-file name — days written in
-        # quick succession can share an mtime tick and replay out of day
-        # order. Pin strictly increasing mtimes per day (the same
-        # discipline as the watermark replay test) so maxFilesPerTrigger=1
-        # delivers days in sequence deterministically.
-        #
-        # r15 (guide §2.4, the r14 near-dedup staging lesson): the four
-        # per-day coalesce(1) writes collapse into ONE day-partitioned
-        # write — repartition("_day") puts each day in exactly one task,
-        # so each day directory holds exactly one part file, which then
-        # moves into the flat replay dir under its pinned mtime. One job
-        # instead of four over the same checkpointed slice.
-        staged = os.path.join(work, "staged")
-        (
-            ev.withColumn("_day", F.to_date("ts").cast("string"))
-            .repartition("_day")
-            .write.partitionBy("_day")
-            .parquet(staged)
-        )
-        os.makedirs(replay, exist_ok=True)
-        for i, day in enumerate(_SCD2_DAYS):
-            part_dir = os.path.join(staged, f"_day={day}")
-            if not os.path.isdir(part_dir):
-                continue  # empty day: old form appended an empty file,
-                # whose batch the apply loop skipped — skipping the file
-                # keeps the same day sequence (mtimes still ordered by i)
-            parts = [
-                p
-                for p in os.listdir(part_dir)
-                if p.endswith(".parquet")
-            ]
-            if len(parts) != 1:
-                raise RuntimeError(
-                    f"expected one part file per day, got {parts} for {day}"
-                )
-            dst = os.path.join(replay, f"day{i}.parquet")
-            os.rename(os.path.join(part_dir, parts[0]), dst)
-            os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
-        from data_warehouse_flink_spark.streaming.jobs import (
-            adaptive_stateful_width,
-            scoped_shuffle_partitions,
-        )
-
-        stream = (
-            spark.readStream.schema(
-                "user_id long, ts timestamp, value double"
+        with tempfile.TemporaryDirectory(prefix="scd2_stream_") as work:
+            replay = os.path.join(work, "replay")
+            # SCD2 apply is order-dependent, and the file source orders
+            # same-mtime files by (random) part-file name. ONE
+            # day-partitioned write (repartition("_day"): one part file
+            # per day) stages the days; each file then moves into the flat
+            # replay dir under a strictly increasing pinned mtime, so
+            # maxFilesPerTrigger=1 delivers days in sequence.
+            staged = os.path.join(work, "staged")
+            (
+                ev.withColumn("_day", F.to_date("ts").cast("string"))
+                .repartition("_day")
+                .write.partitionBy("_day")
+                .parquet(staged)
             )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(replay)
-        )
-        state: dict = {"hist": None}
-
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            # foreachBatch re-reads the batch's file slice per action —
-            # persist once per batch. r15: the isEmpty probe and the
-            # day-floor collect fuse into ONE action (min over an empty
-            # batch is NULL, so the collect doubles as the emptiness
-            # check) — two driver round-trips per micro-batch, not three.
-            batch_df.persist()
-            try:
-                # the batch IS one day; its effective-from is that day's
-                # floor
-                day_us = batch_df.agg(
-                    F.min(F.unix_micros(F.date_trunc("DAY", "ts"))).alias(
-                        "d"
+            os.makedirs(replay, exist_ok=True)
+            for i, day in enumerate(_SCD2_DAYS):
+                part_dir = os.path.join(staged, f"_day={day}")
+                if not os.path.isdir(part_dir):
+                    continue  # empty day: no batch, order unchanged
+                parts = [
+                    p
+                    for p in os.listdir(part_dir)
+                    if p.endswith(".parquet")
+                ]
+                if len(parts) != 1:
+                    raise RuntimeError(
+                        f"expected one part file per day, got {parts} "
+                        f"for {day}"
                     )
-                ).collect()[0]["d"]
-                if day_us is None:
-                    return  # empty batch
-                s = F.sum(F.col("value").cast("decimal(18,6)"))
-                snap = batch_df.groupBy("user_id").agg(
-                    F.when(s >= 100, "gold")
-                    .when(s >= 10, "silver")
-                    .otherwise("bronze")
-                    .alias("tier")
+                dst = os.path.join(replay, f"day{i}.parquet")
+                os.rename(os.path.join(part_dir, parts[0]), dst)
+                os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
+            stream = (
+                spark.readStream.schema(
+                    "user_id long, ts timestamp, value double"
                 )
-                if state["hist"] is None:
-                    state["hist"] = scd2_init(
-                        snap, "user_id", ["tier"], day_us
-                    )
-                else:
-                    state["hist"] = scd2_apply(
-                        state["hist"], snap, "user_id", ["tier"], day_us
-                    )
-                state["hist"] = state["hist"].localCheckpoint(eager=True)
-            finally:
-                batch_df.unpersist()
-
-        # r15 (VERDICT r14 #1, guide §2.5): the apply chain's joins run on
-        # dimension-sized day slices — width follows the replay's on-disk
-        # size for the stream's span (the final history select below keeps
-        # the session default).
-        replay_bytes = sum(
-            os.path.getsize(os.path.join(replay, f))
-            for f in os.listdir(replay)
-        )
-        with scoped_shuffle_partitions(
-            spark, adaptive_stateful_width(spark, replay_bytes)
-        ):
-            q = (
-                stream.writeStream.outputMode("append")
-                .foreachBatch(per_batch)
-                .trigger(availableNow=True)
-                .start()
+                .option("maxFilesPerTrigger", "1")
+                .parquet(replay)
             )
+            state: dict = {"hist": None}
+
+            def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+                # foreachBatch re-reads the batch's file slice per action
+                # — persist once per batch. The day-floor collect doubles
+                # as the emptiness check (min over no rows is NULL).
+                batch_df.persist()
+                try:
+                    # the batch IS one day, effective from its floor
+                    day_us = batch_df.agg(
+                        F.min(
+                            F.unix_micros(F.date_trunc("DAY", "ts"))
+                        ).alias("d")
+                    ).collect()[0]["d"]
+                    if day_us is None:
+                        return  # empty batch
+                    s = F.sum(F.col("value").cast("decimal(18,6)"))
+                    snap = batch_df.groupBy("user_id").agg(
+                        F.when(s >= 100, "gold")
+                        .when(s >= 10, "silver")
+                        .otherwise("bronze")
+                        .alias("tier")
+                    )
+                    if state["hist"] is None:
+                        state["hist"] = scd2_init(
+                            snap, "user_id", ["tier"], day_us
+                        )
+                    else:
+                        state["hist"] = scd2_apply(
+                            state["hist"], snap, "user_id", ["tier"],
+                            day_us,
+                        )
+                    state["hist"] = state["hist"].localCheckpoint(
+                        eager=True
+                    )
+                finally:
+                    batch_df.unpersist()
+
+            # the apply chain's joins run on dimension-sized day slices:
+            # width follows the replay's size, scoped to start()
+            replay_bytes = sum(
+                os.path.getsize(os.path.join(replay, f))
+                for f in os.listdir(replay)
+            )
+            with scoped_shuffle_partitions(
+                spark, adaptive_stateful_width(spark, replay_bytes)
+            ):
+                q = (
+                    stream.writeStream.outputMode("append")
+                    .foreachBatch(per_batch)
+                    .trigger(availableNow=True)
+                    .start()
+                )
             q.awaitTermination()
-        shutil.rmtree(work, ignore_errors=True)
         return state["hist"].select(
             "user_id",
             "tier",

@@ -839,7 +839,8 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched window is upserted into a ranked mart (dynamic partition
     overwrite replaces each touched window's full top-N, so the mart always
     holds the latest correct ranking). The driver never materializes
-    pre-rank counts — only this final ≤ 3-per-window result.
+    pre-rank counts — only this final ≤ 3-per-window result, checkpointed
+    before the one temp dir holding the state table and the mart goes.
     """
     import os
     import tempfile
@@ -855,35 +856,41 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = streaming_windowed_count(
         stream, "ts", "1 hour", slide="15 minutes", keys=["user_id"]
     )
-    ranked_path = os.path.join(tempfile.mkdtemp(prefix="topn_ranked_"), "mart")
+    with tempfile.TemporaryDirectory(prefix="topn_state_") as work:
+        ranked_path = os.path.join(work, "mart")
 
-    def sink(ranked_df, epoch_id):
-        overwrite_touched_partitions(
-            ranked_df, ranked_path, partition_cols=["window_end_sec"]
+        def sink(ranked_df, epoch_id):
+            overwrite_touched_partitions(
+                ranked_df, ranked_path, partition_cols=["window_end_sec"]
+            )
+
+        q = streaming_topn_foreachbatch(
+            counts,
+            partition_cols=["window_end_sec"],
+            order_col="cnt",
+            n=3,
+            tiebreak_cols=["user_id"],
+            sink=sink,
+            state_path=os.path.join(work, "counts"),
         )
-
-    q = streaming_topn_foreachbatch(
-        counts,
-        partition_cols=["window_end_sec"],
-        order_col="cnt",
-        n=3,
-        tiebreak_cols=["user_id"],
-        sink=sink,
-    )
-    q.awaitTermination()
-    schema = "window_end_sec long, user_id long, cnt long, rn long"
-    has_mart = os.path.isdir(ranked_path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(ranked_path)
-    )
-    if not has_mart:  # no qualifying input: empty result, like the batch plan
-        return spark.createDataFrame([], schema=schema)
-    # partition-column type inference may narrow window_end_sec; cast back
-    return spark.read.parquet(ranked_path).select(
-        F.col("window_end_sec").cast("long"),
-        F.col("user_id").cast("long"),
-        F.col("cnt").cast("long"),
-        F.col("rn").cast("long"),
-    )
+        q.awaitTermination()
+        schema = "window_end_sec long, user_id long, cnt long, rn long"
+        has_mart = os.path.isdir(ranked_path) and any(
+            not e.startswith(("_", ".")) for e in os.listdir(ranked_path)
+        )
+        if not has_mart:  # no qualifying input: empty, like the batch plan
+            return spark.createDataFrame([], schema=schema)
+        # partition-column type inference may narrow window_end_sec; cast back
+        return (
+            spark.read.parquet(ranked_path)
+            .select(
+                F.col("window_end_sec").cast("long"),
+                F.col("user_id").cast("long"),
+                F.col("cnt").cast("long"),
+                F.col("rn").cast("long"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------------------------------------
@@ -918,34 +925,38 @@ def streaming_update_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_windowed_count,
     )
 
-    replay = os.path.join(tempfile.mkdtemp(prefix="w10_replay_"), "events")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    # one file per user bucket → each micro-batch touches a disjoint group
-    # set, so the emission multiset is independent of batch order
-    for b in range(4):
-        (
-            ev.filter(F.pmod(F.col("user_id"), F.lit(4)) == b)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(replay)
+    # the memory sink holds the emission log, so the replay dir can go as
+    # soon as the stream has run
+    with tempfile.TemporaryDirectory(prefix="w10_replay_") as work:
+        replay = os.path.join(work, "events")
+        # one file per user bucket → each micro-batch touches a disjoint
+        # group set, so the emission multiset is independent of batch order
+        for b in range(4):
+            (
+                ev.filter(F.pmod(F.col("user_id"), F.lit(4)) == b)
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(replay)
+            )
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, "
+                "event_type string, value double"
+            )
+            .option("maxFilesPerTrigger", "1")
+            .format("parquet")
+            .load(replay)
         )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double"
+        # watermark far beyond the data span: no group is ever late-dropped,
+        # so update mode reduces to pure emit-on-change (the FIRE_AND_PURGE
+        # analogue)
+        counts = streaming_windowed_count(
+            stream, "ts", "1 hour", keys=["user_id"], watermark="3650 days"
         )
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(replay)
-    )
-    # watermark far beyond the data span: no group is ever late-dropped, so
-    # update mode reduces to pure emit-on-change (the FIRE_AND_PURGE analogue)
-    counts = streaming_windowed_count(
-        stream, "ts", "1 hour", keys=["user_id"], watermark="3650 days"
-    )
-    return run_stream_to_table(counts, spark, output_mode="update")
+        return run_stream_to_table(counts, spark, output_mode="update")
 
 
 # --------------------------------------------------------------------------

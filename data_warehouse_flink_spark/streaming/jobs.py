@@ -80,10 +80,11 @@ def adaptive_stateful_width(spark: SparkSession, input_bytes: int) -> int:
 
 @contextlib.contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Set spark.sql.shuffle.partitions for the duration of a streaming
-    query's start→awaitTermination span and restore it after, so the
-    narrow stateful width never leaks into the session's batch queries
-    (those keep the default + AQE coalescing). No-op when n is None."""
+    """Set spark.sql.shuffle.partitions around a streaming query's
+    ``.start()`` call and restore it after: ``start()`` clones the session
+    conf into the query, so the stream keeps the narrow stateful width
+    while batch queries keep the default + AQE coalescing. No-op when n is
+    None."""
     if n is None:
         yield
         return
@@ -99,7 +100,6 @@ def run_stream_to_table(
     df: DataFrame,
     spark: SparkSession,
     output_mode: str = "complete",
-    name: str | None = None,
     input_bytes: int | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink and return
@@ -109,13 +109,17 @@ def run_stream_to_table(
     stand-in for a continuously running job; tests and the correctness gate
     compare this output against the batch plan on the same data.
 
-    `input_bytes` (optional, r15): the replayed source's on-disk size; when
+    Release contract: the memory sink's temp view is dropped before this
+    returns, also on failure, so no ``stream_out_*`` table is left in the
+    session; the returned DataFrame's analyzed plan holds the sink itself.
+
+    `input_bytes` (optional): the replayed source's on-disk size; when
     given, the query's stateful shuffle width is right-sized via
-    `adaptive_stateful_width` for the start→awaitTermination span only —
-    the returned batch table and everything after it keep the session
-    default. Results are unchanged (an aggregation's output does not
-    depend on its partition count)."""
-    table = name or f"stream_out_{uuid.uuid4().hex[:12]}"
+    `adaptive_stateful_width` (scoped to ``start()``) — the returned batch
+    table and everything after it keep the session default. Results are
+    unchanged (an aggregation's output does not depend on its partition
+    count)."""
+    table = f"stream_out_{uuid.uuid4().hex[:12]}"
     width = (
         adaptive_stateful_width(spark, input_bytes)
         if input_bytes is not None
@@ -129,8 +133,11 @@ def run_stream_to_table(
             .trigger(availableNow=True)
             .start()
         )
+    try:
         q.awaitTermination()
-    return spark.table(table)
+        return spark.table(table)
+    finally:
+        spark.catalog.dropTempView(table)
 
 
 def streaming_windowed_count(
@@ -167,19 +174,15 @@ def overwrite_touched_partitions(
 ) -> None:
     """Dynamic-partition overwrite of only the partitions present in
     `batch_df` (the foreachBatch upsert primitive; see streaming/mart.py for
-    the correctness constraint on partition granularity)."""
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            batch_df.repartition(*partition_cols)
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    the correctness constraint on partition granularity). The mode is a
+    per-write option, so the session conf is never touched."""
+    (
+        batch_df.repartition(*partition_cols)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def streaming_topn_foreachbatch(
@@ -189,7 +192,7 @@ def streaming_topn_foreachbatch(
     n: int,
     tiebreak_cols: list[str],
     sink: Callable[[DataFrame, int], None],
-    state_path: str | None = None,
+    state_path: str,
 ) -> "object":
     """T1/T2 streaming idiom: windowed counts → foreachBatch → rank → sink.
 
@@ -214,13 +217,11 @@ def streaming_topn_foreachbatch(
     table, and the driver only moves ≤ n × touched-windows ranked rows per
     batch (plus one tiny distinct() of touched window values). At 1000
     executors the state table is just another partitioned dataset.
+
+    `state_path` is required: the caller owns the state table and removes
+    it (e.g. a ``tempfile.TemporaryDirectory`` around query and read-back).
     """
     import os
-    import tempfile
-
-    state_path = state_path or os.path.join(
-        tempfile.mkdtemp(prefix="topn_state_"), "counts"
-    )
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():

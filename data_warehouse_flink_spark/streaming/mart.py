@@ -19,6 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from data_warehouse_flink_spark.streaming.jobs import (
+    overwrite_touched_partitions,
+)
+
 
 def upsert_partitions_foreachbatch(
     agg: DataFrame,
@@ -45,22 +49,7 @@ def upsert_partitions_foreachbatch(
         batch_df = batch_df.localCheckpoint(eager=True)
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.repartition(*partition_cols)
-                .write.mode("overwrite")
-                .partitionBy(*partition_cols)
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        overwrite_touched_partitions(batch_df, path, partition_cols)
 
     return (
         agg.writeStream.outputMode("update")
@@ -159,22 +148,9 @@ def merge_upsert_foreachbatch(
         else:
             merged = new  # first micro-batch: table does not exist yet
         merged.write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        overwrite_touched_partitions(
+            spark.read.parquet(staging), path, partition_cols=["bucket"]
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                staged.repartition("bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
 
     return (
         agg.writeStream.outputMode("update")

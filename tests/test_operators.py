@@ -344,6 +344,23 @@ def test_scd2_null_and_boundary_attrs(spark):
     assert hist2.count() == hist.count()
 
 
+def test_scd2_null_key_update_fails_loudly(spark):
+    """A NULL business key in an update batch must fail the job, not turn
+    into an all-NULL history row."""
+    from data_warehouse_flink_spark.operators.scd2 import scd2_apply, scd2_init
+
+    schema = "id long, tier string"
+    hist = scd2_init(
+        spark.createDataFrame([(1, "gold")], schema), "id", ["tier"], 100
+    )
+    upd = spark.createDataFrame([(1, "silver"), (None, "bronze")], schema)
+    with pytest.raises(Exception, match="NULL business key"):
+        scd2_apply(hist, upd, "id", ["tier"], ts_us=200).collect()
+    # non-NULL batches still apply
+    ok = scd2_apply(hist, upd.dropna(), "id", ["tier"], ts_us=200)
+    assert ok.filter(F.col("is_current")).collect()[0]["tier"] == "silver"
+
+
 def test_runtime_pruned_join_equals_plain(spark):
     from data_warehouse_flink_spark.io import table
     from data_warehouse_flink_spark.operators.skew import runtime_pruned_join

@@ -10,6 +10,10 @@ Float policy: engine queries are designed to be bit-identical across engines
 
 from __future__ import annotations
 
+import contextlib
+import os
+import tempfile
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -45,10 +49,50 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.reset_index(drop=True)
 
 
+def session_resources(spark) -> dict:
+    """What a query run could leave behind in the session and on disk."""
+    return {
+        "tables": {t.name for t in spark.catalog.listTables()},
+        "active streams": {q.name for q in spark.streams.active},
+        "temp dir entries": set(os.listdir(tempfile.gettempdir())),
+        "conf": set(dict(spark.conf.getAll).items()),
+    }
+
+
+@pytest.fixture(scope="module")
+def warm_jvm(spark):
+    """The JVM unpacks its native codecs (snappy, lz4) into the temp dir on
+    first use; do that once here so the leak guard only sees query runs."""
+    with tempfile.TemporaryDirectory() as d:
+        spark.range(8).repartition(2).write.parquet(d + "/t")
+        spark.read.parquet(d + "/t").collect()
+
+
+@contextlib.contextmanager
+def releases_what_it_creates(spark, name: str):
+    """Leak guard for streaming queries (all of them have oracles): a run
+    must leave the session's tables, active streams, conf and the temp dir
+    as it found them. (The temp dir is shared: another process writing it
+    meanwhile trips this.)"""
+    if not name.startswith("streaming_"):
+        yield
+        return
+    before = session_resources(spark)
+    yield
+    after = session_resources(spark)
+    changed = {
+        what: (sorted(after[what] - was), sorted(was - after[what]))
+        for what, was in before.items()
+        if after[what] != was
+    }
+    assert not changed, f"{name} changed (added, removed): {changed}"
+
+
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_query_matches_oracle(spark, name):
+def test_query_matches_oracle(spark, warm_jvm, name):
     q = QUERIES[name]
-    got = normalize(q.spark_fn(spark, SF_SMOKE).toPandas())
+    with releases_what_it_creates(spark, name):
+        got = normalize(q.spark_fn(spark, SF_SMOKE).toPandas())
     want = normalize(run_oracle(q.oracle, SF_SMOKE))
     assert list(got.columns) == list(want.columns), (
         f"{name}: columns {list(got.columns)} != {list(want.columns)}"

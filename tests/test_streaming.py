@@ -184,7 +184,7 @@ def test_tx_match_stream(spark, tmp_path):
     }
 
 
-def test_streaming_topn_foreachbatch(spark):
+def test_streaming_topn_foreachbatch(spark, tmp_path):
     stream = stream_events(spark, SF_SMOKE).filter(F.col("event_type") == "view")
     counts = streaming_windowed_count(
         stream, "ts", "1 hour", slide="15 minutes", keys=["user_id"]
@@ -201,6 +201,7 @@ def test_streaming_topn_foreachbatch(spark):
         n=3,
         tiebreak_cols=["user_id"],
         sink=sink,
+        state_path=str(tmp_path / "state"),
     )
     q.awaitTermination()
     got = (
@@ -625,7 +626,8 @@ def test_streaming_topn_correct_across_batches(spark, tmp_path):
         results.append(ranked_df.toPandas())
 
     q = streaming_topn_foreachbatch(
-        counts, ["window_start_sec"], "cnt", 1, ["user_id"], sink
+        counts, ["window_start_sec"], "cnt", 1, ["user_id"], sink,
+        str(tmp_path / "state"),
     )
     q.awaitTermination()
     final = results[-1]
@@ -1096,3 +1098,46 @@ def test_adaptive_stateful_width_and_scoped_conf(spark):
     # None = no-op
     with scoped_shuffle_partitions(spark, None):
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == default
+
+
+def test_stateful_width_is_cloned_at_start(spark, tmp_path):
+    """Spark behaviour the streaming helpers rely on: ``start()`` clones the
+    session conf into the query, so scoping the stateful width to the
+    ``start()`` call is enough. Inside the running batch the shared session
+    is back at its default, while the state store keeps the narrow width."""
+    import threading
+
+    from data_warehouse_flink_spark.streaming.jobs import (
+        scoped_shuffle_partitions,
+    )
+
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    path = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(k % 5, sec(k)) for k in range(20)], "user_id long, ts timestamp"
+    ).coalesce(1).write.parquet(path)
+    counts = read_replay(spark, path, "user_id long, ts timestamp").groupBy(
+        "user_id"
+    ).count()
+    scope_left = threading.Event()
+    seen: dict = {}
+
+    def sink(batch_df, epoch_id):
+        # the batch may start before start() returns: wait until the
+        # caller has left the scope, then read the shared session's conf
+        scope_left.wait(timeout=60)
+        seen["outer"] = spark.conf.get("spark.sql.shuffle.partitions")
+        seen["rows"] = batch_df.count()
+
+    with scoped_shuffle_partitions(spark, 3):
+        q = (
+            counts.writeStream.outputMode("complete")
+            .foreachBatch(sink)
+            .trigger(availableNow=True)
+            .start()
+        )
+    scope_left.set()
+    q.awaitTermination()
+    assert seen == {"outer": default, "rows": 5}
+    assert default != "3"
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3

@@ -1,8 +1,8 @@
 """Dump full `.explain("formatted")` output for named queries into
-plans/r14/<query>_<tag>.txt — the optimization round's before/after plan
-evidence (OPTIMIZATION_r14.md cites these files).
+plans/r<NN>/<query>_<tag>.txt — an optimization round's before/after plan
+evidence (OPTIMIZATION_r14.md cites the round-14 files).
 
-Run: python tools/r14_explain.py --tag before q1 q2 ...
+Run: python tools/explain.py --round 15 --tag before q1 q2 ...
 SF dir from $SPARK_GRAFT_SF_DIR (default sf0.1 — the bench tier, so the
 plans match what the bench measures).
 """
@@ -19,6 +19,7 @@ sys.path.insert(0, REPO_ROOT)
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("--round", type=int, required=True, help="writes plans/rNN/")
     ap.add_argument("--tag", required=True, help="before | after | <label>")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
@@ -27,9 +28,9 @@ def main() -> int:
     from data_warehouse_flink_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(REPO_ROOT, "plans", "r14")
+    out_dir = os.path.join(REPO_ROOT, "plans", f"r{args.round:02d}")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r14-explain")
+    spark = get_spark(f"r{args.round:02d}-explain")
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
