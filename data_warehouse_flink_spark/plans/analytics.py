@@ -1642,10 +1642,6 @@ def streaming_user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from data_warehouse_flink_spark.streaming.jobs import (
-        adaptive_stateful_width,
-        scoped_shuffle_partitions,
-    )
     from data_warehouse_flink_spark.streaming.mart import (
         merge_upsert_foreachbatch,
     )
@@ -1663,14 +1659,11 @@ def streaming_user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(prefix="cdc_snapshot_") as work:
         table = os.path.join(work, "snapshot")
         # the struct-max partial-aggregates map-side, so the stateful width
-        # can follow the replayed input (scoped to start())
-        with scoped_shuffle_partitions(
-            spark, adaptive_stateful_width(spark, source_bytes(sf_dir))
-        ):
-            q = merge_upsert_foreachbatch(
-                latest, table, ["user_id"], n_buckets=16
-            )
-        q.awaitTermination()
+        # can follow the replayed input
+        merge_upsert_foreachbatch(
+            latest, table, ["user_id"], n_buckets=16,
+            input_bytes=source_bytes(sf_dir),
+        )
         return (
             spark.read.parquet(table)
             .filter(F.col("last.event_type") != "error")
@@ -2189,10 +2182,6 @@ def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from data_warehouse_flink_spark.streaming.jobs import (
-        adaptive_stateful_width,
-        scoped_shuffle_partitions,
-    )
     from data_warehouse_flink_spark.streaming.mart import (
         merge_upsert_foreachbatch,
     )
@@ -2213,14 +2202,11 @@ def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(prefix="rollup_mart_") as work:
         table = os.path.join(work, "mart")
         # (event_type, day) state is dimension-sized: width follows the
-        # replayed input (scoped to start())
-        with scoped_shuffle_partitions(
-            spark, adaptive_stateful_width(spark, source_bytes(sf_dir))
-        ):
-            q = merge_upsert_foreachbatch(
-                agg, table, ["event_type", "day"], n_buckets=16
-            )
-        q.awaitTermination()
+        # replayed input
+        merge_upsert_foreachbatch(
+            agg, table, ["event_type", "day"], n_buckets=16,
+            input_bytes=source_bytes(sf_dir),
+        )
         return (
             spark.read.parquet(table)
             .select("event_type", "day", "cnt", "sum_value_micro")
@@ -2306,9 +2292,10 @@ def _register_streaming_scd2() -> None:
     ) -> DataFrame:
         """Streaming twin of `user_tier_scd2`: the nightly dimension merge
         as a continuous job — events replayed one day per micro-batch
-        (maxFilesPerTrigger=1 over day-ordered files, the engine's tested
-        replay harness), each batch building its day snapshot and applying
-        it to the running history with `scd2_apply` inside foreachBatch.
+        (`streaming.sources.ordered_replay` over the days in calendar
+        order, the engine's tested replay harness), each batch building its
+        day snapshot and applying it to the running history with
+        `scd2_apply` inside foreachBatch.
         The history chain localCheckpoints between batches exactly like
         the batch form, so state never re-plans the whole lineage.
 
@@ -2322,20 +2309,23 @@ def _register_streaming_scd2() -> None:
         import os
         import tempfile
 
+        from data_warehouse_flink_spark.io import data_files
         from data_warehouse_flink_spark.operators.scd2 import (
             scd2_apply,
             scd2_init,
         )
         from data_warehouse_flink_spark.streaming.jobs import (
-            adaptive_stateful_width,
-            scoped_shuffle_partitions,
+            run_foreach_batch,
+        )
+        from data_warehouse_flink_spark.streaming.sources import (
+            ordered_replay,
         )
 
-        # ONE events scan feeds all four replay-day writes (the batch
-        # twin's single-scan discipline): a pushdown-able half-open ts
-        # range (the days are consecutive, so range == the isin over
-        # to_date) plus an eager checkpoint of the dimension-sized slice —
-        # the per-day writes below then filter memory, not parquet.
+        # ONE events scan feeds the day-ordered replay (the batch twin's
+        # single-scan discipline): a pushdown-able half-open ts range (the
+        # days are consecutive, so range == the isin over to_date) plus an
+        # eager checkpoint of the dimension-sized slice — the replay's
+        # staging write then reads memory, not parquet.
         ev = (
             _events(spark, sf_dir)
             .filter(
@@ -2347,43 +2337,13 @@ def _register_streaming_scd2() -> None:
         )
         with tempfile.TemporaryDirectory(prefix="scd2_stream_") as work:
             replay = os.path.join(work, "replay")
-            # SCD2 apply is order-dependent, and the file source orders
-            # same-mtime files by (random) part-file name. ONE
-            # day-partitioned write (repartition("_day"): one part file
-            # per day) stages the days; each file then moves into the flat
-            # replay dir under a strictly increasing pinned mtime, so
-            # maxFilesPerTrigger=1 delivers days in sequence.
-            staged = os.path.join(work, "staged")
-            (
-                ev.withColumn("_day", F.to_date("ts").cast("string"))
-                .repartition("_day")
-                .write.partitionBy("_day")
-                .parquet(staged)
-            )
-            os.makedirs(replay, exist_ok=True)
-            for i, day in enumerate(_SCD2_DAYS):
-                part_dir = os.path.join(staged, f"_day={day}")
-                if not os.path.isdir(part_dir):
-                    continue  # empty day: no batch, order unchanged
-                parts = [
-                    p
-                    for p in os.listdir(part_dir)
-                    if p.endswith(".parquet")
-                ]
-                if len(parts) != 1:
-                    raise RuntimeError(
-                        f"expected one part file per day, got {parts} "
-                        f"for {day}"
-                    )
-                dst = os.path.join(replay, f"day{i}.parquet")
-                os.rename(os.path.join(part_dir, parts[0]), dst)
-                os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
-            stream = (
-                spark.readStream.schema(
-                    "user_id long, ts timestamp, value double"
-                )
-                .option("maxFilesPerTrigger", "1")
-                .parquet(replay)
+            # SCD2 apply is order-dependent: one micro-batch per day, in
+            # calendar order
+            stream = ordered_replay(
+                ev.withColumn("_day", F.to_date("ts").cast("string")),
+                "_day",
+                _SCD2_DAYS,
+                replay,
             )
             state: dict = {"hist": None}
 
@@ -2424,21 +2384,15 @@ def _register_streaming_scd2() -> None:
                     batch_df.unpersist()
 
             # the apply chain's joins run on dimension-sized day slices:
-            # width follows the replay's size, scoped to start()
-            replay_bytes = sum(
-                os.path.getsize(os.path.join(replay, f))
-                for f in os.listdir(replay)
+            # width follows the replay's size
+            run_foreach_batch(
+                stream,
+                per_batch,
+                output_mode="append",
+                input_bytes=sum(
+                    os.path.getsize(f) for f in data_files(replay)
+                ),
             )
-            with scoped_shuffle_partitions(
-                spark, adaptive_stateful_width(spark, replay_bytes)
-            ):
-                q = (
-                    stream.writeStream.outputMode("append")
-                    .foreachBatch(per_batch)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-            q.awaitTermination()
         return state["hist"].select(
             "user_id",
             "tier",

@@ -576,29 +576,21 @@ def streaming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from data_warehouse_flink_spark.streaming.retrieval import knn_stream
+    from data_warehouse_flink_spark.streaming.sources import ordered_replay
 
     embs = _embs(spark, sf_dir)
     queries = embs.filter(F.col("vec_id") < 20).select("vec_id", "embedding")
     with tempfile.TemporaryDirectory(prefix="knn_stream_") as work:
-        replay = os.path.join(work, "replay")
-        # 4 files → 4 micro-batches (order is irrelevant here: results are
-        # per-query and the union is batch-boundary-invariant)
-        for b in range(4):
-            (
-                queries.filter(F.pmod(F.col("vec_id"), F.lit(4)) == b)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(replay)
-            )
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", "1")
-            .format("parquet")
-            .load(replay)
+        # 4 vec_id residues → 4 micro-batches (order is irrelevant here:
+        # results are per-query and the union is batch-boundary-invariant)
+        stream = ordered_replay(
+            queries.withColumn("_b", F.pmod(F.col("vec_id"), F.lit(4))),
+            "_b",
+            range(4),
+            os.path.join(work, "replay"),
         )
         out = os.path.join(work, "ranked")
-        q = knn_stream(embs.localCheckpoint(eager=True), stream, out, k=5)
-        q.awaitTermination()
+        knn_stream(embs.localCheckpoint(eager=True), stream, out, k=5)
         # materialize before the working dir goes (see streaming_near_dedup)
         return spark.read.parquet(out).localCheckpoint(eager=True)
 
@@ -1421,71 +1413,30 @@ def streaming_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_near_dedup_oracle` unroll the stateful loop into a CTE chain —
     a value-exact SQL oracle for a stateful streaming operator."""
     import os
-    import shutil
     import tempfile
 
     from data_warehouse_flink_spark.streaming.curation import (
         near_dedup_stream,
     )
+    from data_warehouse_flink_spark.streaming.sources import ordered_replay
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     with tempfile.TemporaryDirectory(prefix="near_dedup_") as work:
-        replay = os.path.join(work, "replay")
-        staged = os.path.join(work, "staged")
-        # one file per doc_id residue → 4 deterministic micro-batches. r14:
-        # ONE corpus scan stages all four residue files in a single
-        # partitioned write (was 4 full scan+coalesce(1) writes — the scan
-        # and the single-threaded parquet encode ran per residue). Each
-        # residue lives in exactly one task (partitionBy splits by value
-        # within a task, and a residue's rows hash to one partition), so
-        # every _b dir holds exactly one part file with the (doc_id, text)
-        # schema — the partition column stays in the directory name.
-        (
-            docs.withColumn("_b", F.pmod(F.col("doc_id"), F.lit(4)))
-            .repartition(4, "_b")
-            .write.partitionBy("_b")
-            .mode("overwrite")
-            .parquet(staged)
+        # one micro-batch per doc_id residue, in residue order: the batch
+        # order decides the first-seen winner, which `_near_dedup_oracle`
+        # unrolls in the same order. ONE corpus scan stages all four.
+        stream = ordered_replay(
+            docs.withColumn("_b", F.pmod(F.col("doc_id"), F.lit(4))),
+            "_b",
+            range(4),
+            os.path.join(work, "replay"),
         )
-        os.makedirs(replay)
-        # the file source orders by (mtime, path): pin strictly increasing
-        # mtimes per residue — equal fs timestamps would fall back to random
-        # part-file names and make the batch order (hence the first-seen
-        # winner) nondeterministic
-        for b in range(4):
-            part_dir = os.path.join(staged, f"_b={b}")
-            if not os.path.isdir(part_dir):
-                # an empty residue class writes no _b dir (the pre-r14
-                # coalesce(1).append path wrote an empty part file instead);
-                # skipping keeps a stable batch index for the residues that
-                # do exist — an empty batch admits nothing either way
-                continue
-            parts = [
-                f for f in os.listdir(part_dir) if f.endswith(".parquet")
-            ]
-            if len(parts) != 1:
-                # loud, -O-proof guard (ADVICE r14): the one-file-per-residue
-                # invariant is what makes batch order deterministic — picking
-                # parts[0] of a wrong listing would silently reorder batches
-                raise RuntimeError(
-                    f"expected one part file for residue {b}, got {parts}"
-                )
-            dst = os.path.join(replay, f"batch{b}.parquet")
-            shutil.move(os.path.join(part_dir, parts[0]), dst)
-            os.utime(dst, (1_000_000_000 + b,) * 2)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .format("parquet")
-            .load(replay)
-        )
-        q = near_dedup_stream(
+        near_dedup_stream(
             stream,
             state_path=os.path.join(work, "ledger"),
             out_path=os.path.join(work, "admitted"),
             gram_hash="md5",
         )
-        q.awaitTermination()
         # materialize before removing the working dir (replay + ledger +
         # admitted are corpus-scale; leaking one per invocation — the bench
         # runs each query 3× — would fill /tmp)

@@ -846,6 +846,7 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from data_warehouse_flink_spark.streaming.jobs import (
+        has_committed_data,
         overwrite_touched_partitions,
         streaming_topn_foreachbatch,
         streaming_windowed_count,
@@ -864,7 +865,7 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ranked_df, ranked_path, partition_cols=["window_end_sec"]
             )
 
-        q = streaming_topn_foreachbatch(
+        streaming_topn_foreachbatch(
             counts,
             partition_cols=["window_end_sec"],
             order_col="cnt",
@@ -873,13 +874,11 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink=sink,
             state_path=os.path.join(work, "counts"),
         )
-        q.awaitTermination()
-        schema = "window_end_sec long, user_id long, cnt long, rn long"
-        has_mart = os.path.isdir(ranked_path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(ranked_path)
-        )
-        if not has_mart:  # no qualifying input: empty, like the batch plan
-            return spark.createDataFrame([], schema=schema)
+        if not has_committed_data(spark, ranked_path):
+            # no qualifying input: empty, like the batch plan
+            return spark.createDataFrame(
+                [], "window_end_sec long, user_id long, cnt long, rn long"
+            )
         # partition-column type inference may narrow window_end_sec; cast back
         return (
             spark.read.parquet(ranked_path)
@@ -899,10 +898,10 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 51-69) fires the window on every element and purges the buffer; the Spark
 # analogue is outputMode("update") on a streaming aggregate — each
 # micro-batch emits the groups it changed. The gate replays events in four
-# micro-batches with DISJOINT user buckets (one file per bucket,
-# maxFilesPerTrigger=1), so each group is emitted exactly once and the
-# accumulated emission log equals the batch group-by — hash-checkable while
-# still exercising the incremental emission path end-to-end.
+# micro-batches with DISJOINT user buckets (`ordered_replay`, one batch per
+# bucket), so each group is emitted exactly once and the accumulated
+# emission log equals the batch group-by — hash-checkable while still
+# exercising the incremental emission path end-to-end.
 # --------------------------------------------------------------------------
 @register(
     "streaming_update_emissions",
@@ -924,6 +923,7 @@ def streaming_update_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_table,
         streaming_windowed_count,
     )
+    from data_warehouse_flink_spark.streaming.sources import ordered_replay
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -931,24 +931,13 @@ def streaming_update_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the memory sink holds the emission log, so the replay dir can go as
     # soon as the stream has run
     with tempfile.TemporaryDirectory(prefix="w10_replay_") as work:
-        replay = os.path.join(work, "events")
-        # one file per user bucket → each micro-batch touches a disjoint
+        # one batch per user bucket → each micro-batch touches a disjoint
         # group set, so the emission multiset is independent of batch order
-        for b in range(4):
-            (
-                ev.filter(F.pmod(F.col("user_id"), F.lit(4)) == b)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(replay)
-            )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, "
-                "event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .format("parquet")
-            .load(replay)
+        stream = ordered_replay(
+            ev.withColumn("_b", F.pmod(F.col("user_id"), F.lit(4))),
+            "_b",
+            range(4),
+            os.path.join(work, "events"),
         )
         # watermark far beyond the data span: no group is ever late-dropped,
         # so update mode reduces to pure emit-on-change (the FIRE_AND_PURGE

@@ -7,8 +7,7 @@ encode the layout decisions that matter at 100 TB:
 
 - partition by low-cardinality time/day columns only (predicate pruning on
   read, no small-file explosion from high-cardinality keys);
-- explicit file sizing via repartition before write (one task = one file);
-- streaming variants ride foreachBatch/file sink with checkpointing.
+- explicit file sizing via repartition before write (one task = one file).
 """
 
 from __future__ import annotations
@@ -69,24 +68,6 @@ def write_partitioned(
         df.coalesce(files_per_partition).write.mode(mode).format(
             format
         ).save(path)
-
-
-def write_stream_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_cols: list[str] | None = None,
-    trigger_available_now: bool = True,
-):
-    """Streaming file sink with checkpointing (exactly-once per file batch)."""
-    w = df.writeStream.format("parquet").option("path", path).option(
-        "checkpointLocation", checkpoint
-    )
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def to_kafka_records(df: DataFrame, value_cols: list[str]) -> DataFrame:

@@ -14,25 +14,14 @@ established.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    """True if `path` holds at least one data file, probed via the Hadoop
-    FileSystem API so the path may live on any supported filesystem (HDFS,
-    object stores, local) — a driver-side os.listdir would pin the ledger to
-    the local disk and break the scale story."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return False
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if not (name.startswith("_") or name.startswith(".")):
-            return True
-    return False
+from data_warehouse_flink_spark.streaming.jobs import (
+    has_committed_data,
+    run_foreach_batch,
+)
 
 
 def curate_stream(
@@ -64,7 +53,7 @@ def near_dedup_stream(
     num_hashes: int = 64,
     bands: int = 16,
     gram_hash: str = "xxhash64",
-) -> "object":
+) -> StreamingQuery:
     """Continuous near-dup ingest: first-seen docs are admitted, later
     near-dups are dropped — the streaming form of MinHash/LSH dedup.
 
@@ -93,6 +82,8 @@ def near_dedup_stream(
     buckets, never corpus-sized. State growth is admitted-docs-linear, the
     same asymptote as the exact-dedup hash ledger. At 100 TB the ledger is
     one more partitioned dataset; nothing pre-join reaches the driver.
+
+    Returns the finished query (see `streaming.jobs.run_foreach_batch`).
     """
     from data_warehouse_flink_spark.functions.dedup import (
         incremental_dedup_batch,
@@ -110,7 +101,7 @@ def near_dedup_stream(
             spark = batch_df.sparkSession
             ledger = (
                 spark.read.parquet(state_path)
-                if _table_exists(spark, state_path)
+                if has_committed_data(spark, state_path)
                 else None
             )
             # one shared admission kernel with the batch ingest step — the
@@ -142,9 +133,4 @@ def near_dedup_stream(
         finally:
             batch_df.unpersist()
 
-    return (
-        documents.writeStream.outputMode("append")
-        .foreachBatch(per_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_foreach_batch(documents, per_batch, output_mode="append")

@@ -1,13 +1,17 @@
-"""Streaming job assembly: watermarked windowed aggregations, run helpers,
-and the foreachBatch top-N idiom (SURVEY.md §4.2).
+"""Streaming job assembly: watermarked windowed aggregations, the one
+availableNow runner, and the foreachBatch top-N idiom (SURVEY.md §4.2).
 
 Every batch operator in ``operators/windows.py`` runs unchanged on a
 streaming DataFrame — Catalyst plans the same windowed aggregate with a
 state store behind it. The helpers here add the streaming-only pieces:
 watermark assignment (the reference's assignAscendingTimestamps /
-BoundedOutOfOrdernessTimestampExtractor, SURVEY.md §2.2 P7), sink wiring,
-and the two-query top-N idiom (rank-after-streaming-agg is not allowed in a
-single continuous query, exactly like the reference's second keyBy).
+BoundedOutOfOrdernessTimestampExtractor, SURVEY.md §2.2 P7), the runner
+every availableNow query in the package starts through
+(`run_foreach_batch` / `run_stream_to_table`, which also own the stateful
+width scope), the committed-data check for parquet state tables
+(`has_committed_data`), and the two-query top-N idiom
+(rank-after-streaming-agg is not allowed in a single continuous query,
+exactly like the reference's second keyBy).
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from data_warehouse_flink_spark.operators.topn import top_n_per_group
 
@@ -96,6 +101,45 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _run_available_now(
+    writer: DataStreamWriter, spark: SparkSession, input_bytes: int | None
+) -> StreamingQuery:
+    """Start `writer` with the availableNow trigger and wait until it has
+    processed everything. When `input_bytes` is given, the stateful shuffle
+    width comes from `adaptive_stateful_width`, scoped to ``start()``."""
+    width = (
+        adaptive_stateful_width(spark, input_bytes)
+        if input_bytes is not None
+        else None
+    )
+    with scoped_shuffle_partitions(spark, width):
+        q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def run_foreach_batch(
+    df: DataFrame,
+    per_batch: Callable[[DataFrame, int], None],
+    output_mode: str = "update",
+    input_bytes: int | None = None,
+) -> StreamingQuery:
+    """Run a streaming DataFrame to completion through a foreachBatch sink
+    and return the finished query (its ``recentProgress`` stays readable;
+    ``awaitTermination()`` on it returns at once).
+
+    This is the one place an availableNow foreachBatch query is started.
+    `input_bytes` (optional): the replayed source's on-disk size; when
+    given, the stateful shuffle width is right-sized via
+    `adaptive_stateful_width`, scoped to ``start()`` like
+    `run_stream_to_table`."""
+    return _run_available_now(
+        df.writeStream.outputMode(output_mode).foreachBatch(per_batch),
+        df.sparkSession,
+        input_bytes,
+    )
+
+
 def run_stream_to_table(
     df: DataFrame,
     spark: SparkSession,
@@ -120,24 +164,35 @@ def run_stream_to_table(
     unchanged (an aggregation's output does not depend on its partition
     count)."""
     table = f"stream_out_{uuid.uuid4().hex[:12]}"
-    width = (
-        adaptive_stateful_width(spark, input_bytes)
-        if input_bytes is not None
-        else None
-    )
-    with scoped_shuffle_partitions(spark, width):
-        q = (
+    try:
+        _run_available_now(
             df.writeStream.outputMode(output_mode)
             .format("memory")
-            .queryName(table)
-            .trigger(availableNow=True)
-            .start()
+            .queryName(table),
+            spark,
+            input_bytes,
         )
-    try:
-        q.awaitTermination()
         return spark.table(table)
     finally:
         spark.catalog.dropTempView(table)
+
+
+def has_committed_data(spark: SparkSession, path: str) -> bool:
+    """True if `path` exists and holds an entry not prefixed with ``_`` or
+    ``.`` (a part file or a partition directory), probed through the Hadoop
+    FileSystem API so the path may live on any supported filesystem.
+
+    "Committed" is the point: a write killed between directory creation and
+    its first committed file leaves an empty or ``_temporary``-only
+    directory, which must read as "no table yet" — a bare existence test
+    would make every replay fail on schema inference. Dynamic-overwrite
+    commits write no root ``_SUCCESS``, so partition directories count."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.exists(hpath) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(hpath)
+    )
 
 
 def streaming_windowed_count(
@@ -193,7 +248,7 @@ def streaming_topn_foreachbatch(
     tiebreak_cols: list[str],
     sink: Callable[[DataFrame, int], None],
     state_path: str,
-) -> "object":
+) -> StreamingQuery:
     """T1/T2 streaming idiom: windowed counts → foreachBatch → rank → sink.
 
     Spark disallows row_number over a streaming aggregate in one continuous
@@ -220,8 +275,8 @@ def streaming_topn_foreachbatch(
 
     `state_path` is required: the caller owns the state table and removes
     it (e.g. a ``tempfile.TemporaryDirectory`` around query and read-back).
+    Returns the finished query (see `run_foreach_batch`).
     """
-    import os
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -231,12 +286,7 @@ def streaming_topn_foreachbatch(
         upsert_keys = [c for c in cols if c != order_col]
         batch_df = batch_df.localCheckpoint(eager=True)
         touched = batch_df.select(*partition_cols).distinct()
-        # dynamic-overwrite commits write no root _SUCCESS; state exists iff
-        # partition directories do (cluster deployments would ask the Hadoop FS)
-        has_state = os.path.isdir(state_path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(state_path)
-        )
-        if has_state:
+        if has_committed_data(spark, state_path):
             prev = (
                 spark.read.parquet(state_path)
                 .join(touched, on=partition_cols, how="left_semi")
@@ -259,12 +309,7 @@ def streaming_topn_foreachbatch(
         )
         sink(ranked, epoch_id)
 
-    return (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(per_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_foreach_batch(counts, per_batch)
 
 
 def streaming_session_count(

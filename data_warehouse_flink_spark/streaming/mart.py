@@ -18,9 +18,12 @@ idempotent under micro-batch replay.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 from data_warehouse_flink_spark.streaming.jobs import (
+    has_committed_data,
     overwrite_touched_partitions,
+    run_foreach_batch,
 )
 
 
@@ -28,12 +31,13 @@ def upsert_partitions_foreachbatch(
     agg: DataFrame,
     path: str,
     partition_cols: list[str],
-):
+) -> StreamingQuery:
     """Maintain a partitioned parquet mart from an update-mode streaming agg.
 
     `partition_cols` must equal the aggregate's grouping columns (see module
     docstring). Each micro-batch dynamically overwrites only the partitions
-    (= groups) whose values changed.
+    (= groups) whose values changed. Returns the finished query (see
+    `run_foreach_batch`).
     """
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -51,12 +55,7 @@ def upsert_partitions_foreachbatch(
             return
         overwrite_touched_partitions(batch_df, path, partition_cols)
 
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(per_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_foreach_batch(agg, per_batch)
 
 
 def merge_upsert_foreachbatch(
@@ -64,7 +63,8 @@ def merge_upsert_foreachbatch(
     path: str,
     key_cols: list[str],
     n_buckets: int = 64,
-):
+    input_bytes: int | None = None,
+) -> StreamingQuery:
     """MERGE-style keyed upsert for update-mode streaming aggregates whose
     grouping key is too fine to be a partition column (e.g. a per-user CDC
     snapshot: one partition per user would mean millions of directories).
@@ -89,6 +89,10 @@ def merge_upsert_foreachbatch(
     Without an ACID table format this is the classic parquet MERGE idiom;
     with Delta/Iceberg available the body becomes a single ``MERGE INTO``
     with identical semantics.
+
+    `input_bytes` is forwarded to `run_foreach_batch` (stateful width from
+    the replayed input's size, scoped to ``start()``). Returns the finished
+    query.
     """
     from pyspark.sql import functions as F
 
@@ -115,25 +119,12 @@ def merge_upsert_foreachbatch(
         touched = [
             r["bucket"] for r in new.select("bucket").distinct().collect()
         ]
-        # Existence is checked EXPLICITLY (Hadoop FS, works for any scheme):
-        # a broad try/except around the read would misclassify transient FS
-        # errors / corrupt footers as "first batch" and silently rewrite the
-        # touched buckets with only the new rows, dropping merged history.
-        # Any read failure on an existing table must propagate so the
-        # micro-batch fails and retries. "Exists" means COMMITTED data, not
-        # a bare directory: a write killed between directory creation and
-        # the first committed part file leaves an empty/_temporary-only dir,
-        # and a directory-existence test would then make every replay of
-        # the batch fail on schema inference forever — that state is a
-        # first batch.
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        has_data = fs.exists(hpath) and any(
-            not st.getPath().getName().startswith(("_", "."))
-            for st in fs.listStatus(hpath)
-        )
-        if has_data:
+        # Existence is checked EXPLICITLY: a broad try/except around the read
+        # would misclassify transient FS errors / corrupt footers as "first
+        # batch" and silently rewrite the touched buckets with only the new
+        # rows, dropping merged history. Any read failure on an existing
+        # table must propagate so the micro-batch fails and retries.
+        if has_committed_data(spark, path):
             existing = (
                 spark.read.parquet(path)
                 .filter(F.col("bucket").isin(touched))
@@ -152,9 +143,4 @@ def merge_upsert_foreachbatch(
             spark.read.parquet(staging), path, partition_cols=["bucket"]
         )
 
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(per_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_foreach_batch(agg, per_batch, input_bytes=input_bytes)

@@ -11,8 +11,10 @@ oracle verbatim, gate `streaming_knn`).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 from data_warehouse_flink_spark.functions.similarity import knn_bruteforce
+from data_warehouse_flink_spark.streaming.jobs import run_foreach_batch
 
 
 def knn_stream(
@@ -22,7 +24,7 @@ def knn_stream(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> "object":
+) -> StreamingQuery:
     """Exact cosine top-k for each streamed query vector.
 
     The corpus is a *batch* DataFrame captured by the foreachBatch closure
@@ -32,7 +34,8 @@ def knn_stream(
     corpus, exactly like the batch operator; results append to
     ``out_path``. Scale: corpus streams partition-local per batch, state
     is zero (retrieval is stateless), and the only shuffle is the
-    per-query rank — batch-size-bounded, never corpus-bounded.
+    per-query rank — batch-size-bounded, never corpus-bounded. Returns the
+    finished query (see `streaming.jobs.run_foreach_batch`).
     """
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -43,9 +46,4 @@ def knn_stream(
         )
         ranked.write.mode("append").parquet(out_path)
 
-    return (
-        query_stream.writeStream.outputMode("append")
-        .foreachBatch(per_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_foreach_batch(query_stream, per_batch, output_mode="append")

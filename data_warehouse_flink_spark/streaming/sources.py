@@ -4,7 +4,8 @@
   clusters; here the reader is constructed lazily and gated so local tests
   don't need a broker.
 - S2 file replay: the testdata parquet replayed as a stream — the local
-  stand-in for any append-only source, used by all streaming tests.
+  stand-in for any append-only source, used by all streaming tests — and
+  `ordered_replay`, the one stager of an ordered N-micro-batch replay.
 - S3 generator: the reference's SimulatedEventSource
   (DW-Flink/MarketAnalysis/.../source/SimulatedEventSource.scala:17-41)
   re-expressed over the `rate` source with deterministic column synthesis.
@@ -12,21 +13,75 @@
 
 from __future__ import annotations
 
+import os
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_warehouse_flink_spark.io import data_files
+
+
 def source_bytes(sf_dir: str, table: str = "events") -> int:
-    """On-disk size of a replayed source — the input-volume proxy
-    `jobs.adaptive_stateful_width` sizes a stateful stream's shuffle
+    """On-disk size of a replayed source — the input-volume proxy the
+    streaming runner's ``input_bytes`` sizes a stateful stream's shuffle
     width from. Handles both the single-file testdata layout and a
     directory of part files."""
-    import os
-
-    from data_warehouse_flink_spark.io import data_files
-
     return sum(
         os.path.getsize(f)
         for f in data_files(os.path.join(sf_dir, f"{table}.parquet"))
+    )
+
+
+def ordered_replay(
+    df: DataFrame, batch_col: str, order: Sequence, replay_dir: str
+) -> DataFrame:
+    """Stage `df` as an ordered file replay, one micro-batch per
+    `batch_col` value, and return the ``maxFilesPerTrigger=1`` stream over
+    it (schema: `df` without `batch_col`).
+
+    ONE partitioned write stages every batch: a hash repartition on
+    `batch_col` puts each value's rows in one task, so each value directory
+    holds one part file. Each file then moves into `replay_dir` under a
+    strictly increasing pinned mtime in `order`'s sequence — the file
+    source orders by mtime, and equal filesystem timestamps would leave the
+    order of an order-dependent stream to the directory listing.
+
+    A value of `order` with no rows is skipped (no file, no batch; the
+    others keep their order). A value with more than one part file, or
+    rows whose value is not in `order`, raise: either would silently
+    reorder or drop batches. Values must render as plain path names
+    (ints, ISO dates). Staging goes to the sibling ``<replay_dir>__staged``
+    and the files move with ``os.rename``, so the replay is local-disk
+    only; the caller owns (and removes) both directories.
+    """
+    staged = replay_dir.rstrip("/") + "__staged"
+    (
+        df.repartition(max(1, len(order)), batch_col)
+        .write.partitionBy(batch_col)
+        .parquet(staged)
+    )
+    dirs = {f"{batch_col}={v}": i for i, v in enumerate(order)}
+    unknown = sorted(
+        d for d in os.listdir(staged) if "=" in d and d not in dirs
+    )
+    if unknown:
+        raise ValueError(f"rows outside the replay order: {unknown}")
+    os.makedirs(replay_dir, exist_ok=True)
+    for name, i in dirs.items():
+        part_dir = os.path.join(staged, name)
+        if not os.path.isdir(part_dir):
+            continue  # no rows for this value: no batch
+        parts = data_files(part_dir)
+        if len(parts) != 1:
+            raise RuntimeError(f"expected one part file in {name}: {parts}")
+        dst = os.path.join(replay_dir, f"batch{i}.parquet")
+        os.rename(parts[0], dst)
+        os.utime(dst, (1_000_000_000 + i,) * 2)
+    return (
+        df.sparkSession.readStream.schema(df.drop(batch_col).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(replay_dir)
     )
 
 

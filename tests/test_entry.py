@@ -530,3 +530,29 @@ def test_noop_audit_receipt_uses_the_key_bench_reads():
     })
     assert got[NOOP_AUDIT_FLAG_KEY] == {"pruned": {"count": 0.2, "noop": 1.5}}
     assert got["n_flagged"] == 1
+
+
+def test_stream_start_and_replay_each_live_in_one_module():
+    """Every availableNow query starts through the runner in
+    streaming/jobs.py (which alone waits on it and scopes the stateful
+    width), and every ordered file replay is staged by
+    streaming/sources.py::ordered_replay."""
+    from pathlib import Path
+
+    pkg = Path(conftest.REPO_ROOT) / "data_warehouse_flink_spark"
+    owners = {
+        "trigger(availableNow": "streaming/jobs.py",
+        "awaitTermination": "streaming/jobs.py",
+        "scoped_shuffle_partitions": "streaming/jobs.py",
+        "adaptive_stateful_width": "streaming/jobs.py",
+        "maxFilesPerTrigger": "streaming/sources.py",
+        "os.utime": "streaming/sources.py",
+    }
+    stray = sorted(
+        (src.relative_to(pkg).as_posix(), needle)
+        for src in pkg.rglob("*.py")
+        for needle, owner in owners.items()
+        if src.relative_to(pkg).as_posix() != owner
+        and needle in src.read_text()
+    )
+    assert stray == []

@@ -1,18 +1,42 @@
-"""Golden tests: the six job families over the reference's own shipped
-fixtures (/root/reference/DW-Flink/files, read-only data). Expected values
-were measured independently from the files (FIXTURES.md / SURVEY.md §5.1).
+"""The six job families: golden tests over the reference's own shipped
+fixtures (read-only data, FILES below; skipped where that checkout is
+absent), plus property tests and an every-entry-point smoke over the
+seeded in-repo generator (tools/datagen.py). Golden values were measured
+independently from the reference files (FIXTURES.md / SURVEY.md §5.1).
 """
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
-from conftest import REPO_ROOT  # noqa: F401
+from conftest import REPO_ROOT
 from pyspark.sql import functions as F
 
 from data_warehouse_flink_spark.plans import flink_jobs as jobs
 from data_warehouse_flink_spark.sources import readers
 
 FILES = "/root/reference/DW-Flink/files"
+
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(FILES),
+    reason="reference fixtures not present (DW-Flink/files)",
+)
+
+
+@pytest.fixture(scope="module")
+def generated(tmp_path_factory):
+    """The seeded generator's output in the reference's six CSV schemas."""
+    out = str(tmp_path_factory.mktemp("gen"))
+    subprocess.run(
+        [sys.executable, "tools/datagen.py", out, "1"],
+        check=True,
+        cwd=str(REPO_ROOT),
+        capture_output=True,
+    )
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -35,6 +59,7 @@ def receipts(spark):
     return readers.receipt_log(spark, f"{FILES}/ReceiptLog.csv").cache()
 
 
+@needs_reference
 def test_apache_log_reader_and_hot_urls(spark):
     log = readers.apache_log(spark, f"{FILES}/apache.log")
     assert log.count() == 10000
@@ -53,6 +78,7 @@ def test_apache_log_reader_and_hot_urls(spark):
     assert urls.count() > 0
 
 
+@needs_reference
 def test_ad_blacklist(ad_clicks):
     flagged = jobs.ad_click_blacklist(ad_clicks, max_per_day=50)
     warns = flagged.filter(F.col("result_type") == "blacklist_warning")
@@ -70,6 +96,7 @@ def test_ad_blacklist(ad_clicks):
     assert mx == 50
 
 
+@needs_reference
 def test_ad_clicks_by_province(ad_clicks):
     out = jobs.ad_clicks_by_province(ad_clicks, slide="10 minutes")
     # beijing dominates; 143 records (142 newlines + unterminated last line)
@@ -82,6 +109,7 @@ def test_ad_clicks_by_province(ad_clicks):
     assert by_prov["beijing"] > by_prov.get("zhejiang", 0)
 
 
+@needs_reference
 def test_login_fail_warnings(logins):
     out = jobs.login_fail_warnings(logins, max_gap_sec=2).collect()
     # measured: user 1035 fails consecutively at 42→43 and 43→44
@@ -91,6 +119,7 @@ def test_login_fail_warnings(logins):
     }
 
 
+@needs_reference
 def test_order_timeout(orders):
     out = jobs.order_timeout(orders, timeout_sec=900)
     counts = {
@@ -103,6 +132,7 @@ def test_order_timeout(orders):
     assert counts == {"payed": 37, "timeout": 2}
 
 
+@needs_reference
 def test_tx_match(orders, receipts):
     out = jobs.tx_match(orders, receipts)
     counts = {
@@ -117,6 +147,7 @@ def test_tx_match(orders, receipts):
     }
 
 
+@needs_reference
 def test_tx_match_interval_join(orders, receipts):
     out = jobs.tx_match_interval_join(orders, receipts)
     n = out.count()
@@ -129,13 +160,21 @@ def test_tx_match_interval_join(orders, receipts):
     assert bad == 0
 
 
-def test_tx_match_window_join_subset_of_interval(orders, receipts, spark):
+def test_tx_match_window_join_subset_of_interval(spark, generated):
+    orders = readers.order_log(spark, f"{generated}/OrderLog.csv")
+    receipts = readers.receipt_log(spark, f"{generated}/ReceiptLog.csv")
     win = jobs.tx_match_window_join(orders, receipts, size="15 seconds")
+    assert win.count() > 0
     # same-bucket pairs are within 15 s of each other by construction
     bad = win.filter(
         F.abs(F.col("receipt_us") - F.col("pay_us")) >= 15_000_000
     ).count()
     assert bad == 0
+    # ... so every one is also an interval-join pair ([-15 s, +20 s])
+    interval = jobs.tx_match_interval_join(orders, receipts)
+    assert win.select("tx_id", "pay_us", "receipt_us").subtract(
+        interval.select("tx_id", "pay_us", "receipt_us")
+    ).count() == 0
 
 
 def test_hot_items_and_uv_on_synthetic(spark):
@@ -157,11 +196,23 @@ def test_hot_items_and_uv_on_synthetic(spark):
     assert uv["uv"] == 4
     pv = jobs.page_view(df).first()
     assert pv["pv"] == 7
+    marketing = df.select(
+        "user_id",
+        F.when(F.col("item_id") == 10, "UNINSTALL").otherwise("CLICK").alias(
+            "behavior"
+        ),
+        F.lit("weibo").alias("channel"),
+        "ts",
+    )
+    by_channel = jobs.app_marketing_by_channel(marketing, slide="1 hour")
+    assert {(r["behavior"], r["cnt"]) for r in by_channel.collect()} == {
+        ("CLICK", 3)
+    }
 
 
-def test_network_flow_streaming_matches_batch(spark, tmp_path):
+def test_network_flow_streaming_matches_batch(spark, tmp_path, generated):
     """The same reader + windowed count, batch vs streamed replay of the
-    reference's apache.log (SURVEY.md §5.2: batch output is the oracle)."""
+    generated apache.log (SURVEY.md §5.2: batch output is the oracle)."""
     import shutil
 
     from data_warehouse_flink_spark.operators.windows import windowed_count
@@ -172,9 +223,9 @@ def test_network_flow_streaming_matches_batch(spark, tmp_path):
 
     log_dir = tmp_path / "logs"
     log_dir.mkdir()
-    shutil.copy(f"{FILES}/apache.log", log_dir / "apache.log")
+    shutil.copy(f"{generated}/apache.log", log_dir / "apache.log")
 
-    batch = readers.apache_log(spark, f"{FILES}/apache.log").filter(
+    batch = readers.apache_log(spark, f"{generated}/apache.log").filter(
         ~F.col("url").rlike(r"\.(css|js)$")
     )
     want = (
@@ -202,9 +253,11 @@ def test_network_flow_streaming_matches_batch(spark, tmp_path):
     )
     import pandas as pd
 
+    assert len(want) > 0
     pd.testing.assert_frame_equal(got, want)
 
 
+@needs_reference
 def test_ad_clicks_reference_exact_config(spark, ad_clicks):
     """The reference's ACTUAL AdStatisticByGeo config — 1 h window / 10 s
     slide (DW-Flink MarketAnalysis app/AdStatisticByGeo.scala:39) — runs
@@ -262,23 +315,18 @@ def test_parse_csv_user_behavior_roundtrip(spark):
     assert back == "543462,1715671,1464116,pv,1511658000"
 
 
-def test_generated_fixtures_drive_all_jobs(spark, tmp_path):
+def test_generated_fixtures_drive_all_jobs(spark, generated):
     """FIXTURES.md cross-cutting requirement: a seeded generator backs the
     same schemas at any scale; every job family runs on its output and the
     guaranteed detection cases fire."""
-    import subprocess
-    import sys
-
-    out = str(tmp_path / "gen")
-    subprocess.run(
-        [sys.executable, "tools/datagen.py", out, "1"],
-        check=True,
-        cwd=str(REPO_ROOT),
-        capture_output=True,
-    )
+    out = generated
     ub = readers.user_behavior(spark, f"{out}/UserBehavior.csv")
     assert jobs.hot_items(ub).count() > 0
-    assert jobs.unique_visitors(ub).count() > 0
+    assert jobs.page_view(ub).count() > 0
+    uv = jobs.unique_visitors(ub).collect()
+    windows = {r["window_start_sec"] for r in uv}
+    approx = jobs.unique_visitors_approx(ub).collect()
+    assert windows and {r["window_start_sec"] for r in approx} == windows
 
     log = readers.apache_log(spark, f"{out}/apache.log")
     assert jobs.network_flow_hot_urls(log, slide="5 minutes").count() > 0
@@ -290,6 +338,14 @@ def test_generated_fixtures_drive_all_jobs(spark, tmp_path):
         F.col("result_type") == "blacklist_warning"
     )
     assert warns.count() >= 1  # the hot pair crosses the threshold
+    by_prov = jobs.ad_clicks_by_province(clicks, slide="10 minutes")
+    peak = {
+        r["province"]: r["m"]
+        for r in by_prov.groupBy("province")
+        .agg(F.max("cnt").alias("m"))
+        .collect()
+    }
+    assert peak["beijing"] > peak.get("zhejiang", 0)  # the hot pair's province
 
     logins = readers.login_log(spark, f"{out}/LoginLog.csv")
     fails = jobs.login_fail_warnings(logins, max_gap_sec=2)
@@ -311,3 +367,9 @@ def test_generated_fixtures_drive_all_jobs(spark, tmp_path):
         tx.get(k, 0) > 0
         for k in ("matched", "unmatched_pay", "unmatched_receipt")
     )
+    ij = jobs.tx_match_interval_join(orders, receipts)
+    assert ij.count() > 0
+    assert ij.filter(
+        (F.col("receipt_us") < F.col("pay_us") - 15_000_000)
+        | (F.col("receipt_us") > F.col("pay_us") + 20_000_000)
+    ).count() == 0

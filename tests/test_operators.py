@@ -148,7 +148,6 @@ def test_partitioned_sink_roundtrip(spark, tmp_path):
     from data_warehouse_flink_spark.sources.sinks import (
         to_kafka_records,
         write_partitioned,
-        write_stream_parquet,
     )
 
     ev = table(spark, SF_SMOKE, "events").withColumn(
@@ -168,7 +167,7 @@ def test_partitioned_sink_roundtrip(spark, tmp_path):
     vals = [r["value"] for r in recs.collect()]
     assert all("," in v for v in vals)
 
-    # streaming parquet sink with checkpoint
+    # the landed layout replays through a checkpointed streaming file sink
     stream = (
         spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string,"
@@ -176,10 +175,12 @@ def test_partitioned_sink_roundtrip(spark, tmp_path):
         )
         .parquet(out)
     )
-    q = write_stream_parquet(
-        stream,
-        str(tmp_path / "stream_out"),
-        checkpoint=str(tmp_path / "ckpt"),
+    q = (
+        stream.writeStream.format("parquet")
+        .option("path", str(tmp_path / "stream_out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination()
     assert spark.read.parquet(str(tmp_path / "stream_out")).count() == ev.count()

@@ -1141,3 +1141,29 @@ def test_stateful_width_is_cloned_at_start(spark, tmp_path):
     assert seen == {"outer": default, "rows": 5}
     assert default != "3"
     assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3
+
+
+def test_ordered_replay_delivers_batches_in_the_given_order(spark, tmp_path):
+    """`ordered_replay` stages one micro-batch per batch value and the
+    stream delivers them in the order given, not in sorted or file-name
+    order; a value with no rows yields no batch, and rows whose value is
+    outside the order fail loudly instead of being dropped."""
+    from data_warehouse_flink_spark.streaming.jobs import run_foreach_batch
+    from data_warehouse_flink_spark.streaming.sources import ordered_replay
+
+    df = spark.createDataFrame(
+        [(k, b) for b in (0, 1, 3) for k in range(5)], "k long, b long"
+    ).withColumn("_b", F.col("b"))
+    stream = ordered_replay(df, "_b", [3, 0, 2, 1], str(tmp_path / "replay"))
+    assert stream.columns == ["k", "b"]
+    epochs: list = []
+
+    def sink(batch_df, epoch_id):
+        epochs.append(sorted({r["b"] for r in batch_df.collect()}))
+
+    q = run_foreach_batch(stream, sink, output_mode="append")
+    assert not q.isActive
+    assert epochs == [[3], [0], [1]]
+
+    with pytest.raises(ValueError, match="outside the replay order"):
+        ordered_replay(df, "_b", [0, 1], str(tmp_path / "partial"))
