@@ -1665,7 +1665,8 @@ def streaming_user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             input_bytes=source_bytes(sf_dir),
         )
         return (
-            spark.read.parquet(table)
+            spark.read.schema(latest.schema)
+            .parquet(table)
             .filter(F.col("last.event_type") != "error")
             .select(
                 "user_id",
@@ -2173,11 +2174,12 @@ def streaming_dq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maintenance loop end-to-end: an update-mode streaming rollup
     whose per-micro-batch emissions land in a parquet mart through
-    `merge_upsert_foreachbatch` (touched-bucket read → replaced-key
-    anti-join → dynamic overwrite), then the mart is read back as the
-    result. Streaming twin of `events_rollup_incremental` — same merge
-    law, but exercised through the actual upsert sink instead of a
-    batch union, against the same full-recompute oracle.
+    `merge_upsert_foreachbatch` (one write on the first batch; later
+    batches: touched-bucket read → replaced-key anti-join → dynamic
+    overwrite), then the mart is read back, with the stream's known
+    schema, as the result. Streaming twin of `events_rollup_incremental`
+    — same merge law, but exercised through the actual upsert sink
+    instead of a batch union, against the same full-recompute oracle.
     """
     import os
     import tempfile
@@ -2208,7 +2210,8 @@ def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             input_bytes=source_bytes(sf_dir),
         )
         return (
-            spark.read.parquet(table)
+            spark.read.schema(agg.schema)
+            .parquet(table)
             .select("event_type", "day", "cnt", "sum_value_micro")
             .localCheckpoint(eager=True)
         )

@@ -1028,7 +1028,9 @@ def knn_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from data_warehouse_flink_spark.functions.similarity import knn_ivf
 
-    embs = _embs_wide(spark, sf_dir)
+    # the cached index replaces `embeddings`, so only the 20 query ids are
+    # read here: the plain scan, not the repartitioned wide one
+    embs = _embs(spark, sf_dir)
     queries = embs.filter(F.col("vec_id") < 20)
     return knn_ivf(
         embs, queries, k=5, assigned=_ivf_assigned(spark, sf_dir)

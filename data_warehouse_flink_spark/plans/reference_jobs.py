@@ -617,11 +617,17 @@ def streaming_page_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_table,
         streaming_windowed_count,
     )
-    from data_warehouse_flink_spark.streaming.sources import stream_events
+    from data_warehouse_flink_spark.streaming.sources import (
+        source_bytes,
+        stream_events,
+    )
 
     stream = stream_events(spark, sf_dir).filter(F.col("event_type") == "view")
     agg = streaming_windowed_count(stream, "ts", "1 hour", count_alias="pv")
-    return run_stream_to_table(agg, spark)
+    # hourly state is dimension-sized: width follows the replayed input
+    return run_stream_to_table(
+        agg, spark, input_bytes=source_bytes(sf_dir)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -834,22 +840,27 @@ def streaming_tx_match_window_join(
 def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 per sliding window via the streaming foreachBatch-rank idiom.
 
-    Fully engine-side: counts accumulate in a partitioned parquet state
-    table inside streaming_topn_foreachbatch, and the ranked top-N per
-    touched window is upserted into a ranked mart (dynamic partition
-    overwrite replaces each touched window's full top-N, so the mart always
-    holds the latest correct ranking). The driver never materializes
-    pre-rank counts — only this final ≤ 3-per-window result, checkpointed
-    before the one temp dir holding the state table and the mart goes.
+    Fully engine-side: counts accumulate in the bucketed MERGE state table
+    inside `streaming_topn_foreachbatch` (bucket key = window_end_sec), and
+    each batch's ranking — the top-N of every window in the touched
+    buckets — overwrites those buckets of a ranked mart bucketed the same
+    way, so the mart always holds the latest correct ranking. The driver
+    never materializes pre-rank counts — only this final ≤ 3-per-window
+    result, checkpointed before the one temp dir holding the state table
+    and the mart goes.
     """
     import os
     import tempfile
 
+    from pyspark.sql import types as T
+
     from data_warehouse_flink_spark.streaming.jobs import (
         has_committed_data,
         overwrite_touched_partitions,
-        streaming_topn_foreachbatch,
         streaming_windowed_count,
+    )
+    from data_warehouse_flink_spark.streaming.mart import (
+        streaming_topn_foreachbatch,
     )
     from data_warehouse_flink_spark.streaming.sources import stream_events
 
@@ -857,12 +868,17 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = streaming_windowed_count(
         stream, "ts", "1 hour", slide="15 minutes", keys=["user_id"]
     )
+    # what the ranker hands the sink: counts + row_number's int rank (the
+    # bucket partition column is discovered on read)
+    ranked_schema = T.StructType(
+        [*counts.schema.fields, T.StructField("rn", T.IntegerType())]
+    )
     with tempfile.TemporaryDirectory(prefix="topn_state_") as work:
         ranked_path = os.path.join(work, "mart")
 
         def sink(ranked_df, epoch_id):
             overwrite_touched_partitions(
-                ranked_df, ranked_path, partition_cols=["window_end_sec"]
+                ranked_df, ranked_path, partition_cols=["bucket"]
             )
 
         streaming_topn_foreachbatch(
@@ -879,14 +895,11 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
             return spark.createDataFrame(
                 [], "window_end_sec long, user_id long, cnt long, rn long"
             )
-        # partition-column type inference may narrow window_end_sec; cast back
         return (
-            spark.read.parquet(ranked_path)
+            spark.read.schema(ranked_schema)
+            .parquet(ranked_path)
             .select(
-                F.col("window_end_sec").cast("long"),
-                F.col("user_id").cast("long"),
-                F.col("cnt").cast("long"),
-                F.col("rn").cast("long"),
+                "window_end_sec", "user_id", "cnt", F.col("rn").cast("long")
             )
             .localCheckpoint(eager=True)
         )

@@ -7,9 +7,9 @@ This is the streaming twin of `plans.llm_ops.corpus_curation`. Exact
 dedup is a stateful dropDuplicates; near-dup ingest (``near_dedup_stream``)
 keeps the admitted corpus's LSH band buckets in a partitioned parquet
 state table — MinHash signatures are per-document, so only the *bucket
-ledger* needs to be global, and that ledger is exactly the foreachBatch
-state-table idiom `streaming/jobs.py::streaming_topn_foreachbatch`
-established.
+ledger* needs to be global, and that ledger is a foreachBatch
+parquet state table, like the one behind
+`streaming/mart.py::streaming_topn_foreachbatch`.
 """
 
 from __future__ import annotations
@@ -57,7 +57,7 @@ def near_dedup_stream(
     """Continuous near-dup ingest: first-seen docs are admitted, later
     near-dups are dropped — the streaming form of MinHash/LSH dedup.
 
-    Architecture (the ``streaming_topn_foreachbatch`` state-table idiom):
+    Architecture (a foreachBatch parquet state table):
     the *bucket ledger* — every (band, bucket) key of every admitted doc —
     lives in a parquet table partitioned by band. Each micro-batch:
 

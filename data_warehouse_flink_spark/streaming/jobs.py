@@ -1,5 +1,5 @@
-"""Streaming job assembly: watermarked windowed aggregations, the one
-availableNow runner, and the foreachBatch top-N idiom (SURVEY.md §4.2).
+"""Streaming job assembly: watermarked windowed aggregations and the one
+availableNow runner (SURVEY.md §4.2).
 
 Every batch operator in ``operators/windows.py`` runs unchanged on a
 streaming DataFrame — Catalyst plans the same windowed aggregate with a
@@ -9,9 +9,9 @@ BoundedOutOfOrdernessTimestampExtractor, SURVEY.md §2.2 P7), the runner
 every availableNow query in the package starts through
 (`run_foreach_batch` / `run_stream_to_table`, which also own the stateful
 width scope), the committed-data check for parquet state tables
-(`has_committed_data`), and the two-query top-N idiom
-(rank-after-streaming-agg is not allowed in a single continuous query,
-exactly like the reference's second keyBy).
+(`has_committed_data`) and the one dynamic partition overwrite
+(`overwrite_touched_partitions`). The foreachBatch sinks built on them,
+the top-N ranker included, live in ``streaming/mart.py``.
 """
 
 from __future__ import annotations
@@ -24,8 +24,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-
-from data_warehouse_flink_spark.operators.topn import top_n_per_group
 
 
 def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
@@ -238,78 +236,6 @@ def overwrite_touched_partitions(
         .partitionBy(*partition_cols)
         .parquet(path)
     )
-
-
-def streaming_topn_foreachbatch(
-    counts: DataFrame,
-    partition_cols: list[str],
-    order_col: str,
-    n: int,
-    tiebreak_cols: list[str],
-    sink: Callable[[DataFrame, int], None],
-    state_path: str,
-) -> StreamingQuery:
-    """T1/T2 streaming idiom: windowed counts → foreachBatch → rank → sink.
-
-    Spark disallows row_number over a streaming aggregate in one continuous
-    query (same reason the reference needs its second keyBy + ListState
-    buffer: ranking needs the window's full membership). Update mode emits
-    only the CHANGED (group, key) rows per micro-batch, so ranking a batch
-    alone would crown whatever happened to change.
-
-    The accumulator is therefore a *partitioned parquet state table* (the
-    engine-side analogue of the reference's ListState/MapState buffer,
-    DW-Flink HotItemsAnalysis app/HotItems.scala:82-134): each micro-batch
-
-    1. reads the state rows of only the window partitions the batch touched
-       (partition pruning — untouched windows are never scanned),
-    2. anti-joins away the keys the batch re-emitted, unions the batch rows,
-       and dynamic-partition-overwrites only those touched partitions,
-    3. ranks the merged counts (a Spark job) and hands the sink the
-       corrected top-N for the touched windows.
-
-    Nothing pre-rank ever reaches the driver: state volume lives in the
-    table, and the driver only moves ≤ n × touched-windows ranked rows per
-    batch (plus one tiny distinct() of touched window values). At 1000
-    executors the state table is just another partitioned dataset.
-
-    `state_path` is required: the caller owns the state table and removes
-    it (e.g. a ``tempfile.TemporaryDirectory`` around query and read-back).
-    Returns the finished query (see `run_foreach_batch`).
-    """
-
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        cols = list(batch_df.columns)
-        upsert_keys = [c for c in cols if c != order_col]
-        batch_df = batch_df.localCheckpoint(eager=True)
-        touched = batch_df.select(*partition_cols).distinct()
-        if has_committed_data(spark, state_path):
-            prev = (
-                spark.read.parquet(state_path)
-                .join(touched, on=partition_cols, how="left_semi")
-            )
-            carried = prev.join(
-                batch_df.select(*upsert_keys), on=upsert_keys, how="left_anti"
-            )
-            merged = batch_df.select(*cols).unionByName(
-                carried.select(
-                    *[F.col(c).cast(batch_df.schema[c].dataType) for c in cols]
-                )
-            )
-        else:
-            merged = batch_df.select(*cols)
-        # materialize BEFORE overwriting the partitions it was read from
-        merged = merged.localCheckpoint(eager=True)
-        overwrite_touched_partitions(merged, state_path, partition_cols)
-        ranked = top_n_per_group(
-            merged, partition_cols, order_col, n, tiebreak_cols
-        )
-        sink(ranked, epoch_id)
-
-    return run_foreach_batch(counts, per_batch)
 
 
 def streaming_session_count(

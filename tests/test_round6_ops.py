@@ -123,6 +123,68 @@ def test_ivf_pq_handles_out_of_corpus_queries(spark):
     assert foreign_n[1:] == native_n[:2]
 
 
+def test_merge_upsert_skips_batches_filtered_to_nothing(spark, tmp_path):
+    """MERGE fast paths on empty micro-batches: batches whose rows are all
+    filtered out before the aggregate — the first one, before the table
+    exists, and a later one, after it holds data — leave the mart as it
+    was, without error."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_flink_spark.streaming.mart import (
+        merge_upsert_foreachbatch,
+    )
+    from data_warehouse_flink_spark.streaming.sources import ordered_replay
+
+    rows = [(0, k, 0) for k in range(5)]  # batch 0: filtered to nothing
+    rows += [(1, k, 1) for k in range(5)]  # batch 1: the only data
+    rows += [(2, k, 0) for k in range(5)]  # batch 2: filtered to nothing
+    df = spark.createDataFrame(rows, "b long, k long, v long")
+    stream = ordered_replay(df, "b", [0, 1, 2], str(tmp_path / "replay"))
+    agg = stream.filter(F.col("v") > 0).groupBy("k").agg(
+        F.sum("v").alias("total")
+    )
+    table = str(tmp_path / "table")
+    q = merge_upsert_foreachbatch(agg, table, ["k"], n_buckets=4)
+
+    # one micro-batch per file (the scan's pushed-down filter reads 0 rows
+    # of batches 0 and 2, so numInputRows cannot show them)
+    assert [p["batchId"] for p in q.recentProgress] == [0, 1, 2]
+    got = spark.read.parquet(table).select("k", "total").collect()
+    assert sorted(map(tuple, got)) == [(k, 1) for k in range(5)]
+
+
+def test_merge_upsert_one_batch_stream_is_one_write(spark, tmp_path):
+    """A stream with one micro-batch writes the mart directly: no
+    ``__staging`` sibling is left, and the mart equals the batch
+    aggregate."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from data_warehouse_flink_spark.streaming.mart import (
+        merge_upsert_foreachbatch,
+    )
+
+    src = str(tmp_path / "src")
+    table = str(tmp_path / "table")
+    rows = [(k % 7, k) for k in range(50)]
+    spark.createDataFrame(rows, "k long, v long").coalesce(1).write.parquet(
+        src
+    )
+    stream = spark.readStream.schema("k long, v long").parquet(src)
+    agg = stream.groupBy("k").agg(F.sum("v").alias("total"))
+    q = merge_upsert_foreachbatch(agg, table, ["k"], n_buckets=4)
+
+    assert [p["numInputRows"] for p in q.recentProgress] == [50]
+    assert not os.path.exists(table + "__staging")
+    want = {}
+    for k, v in rows:
+        want[k] = want.get(k, 0) + v
+    got = spark.read.parquet(table).select("k", "total").collect()
+    assert dict(map(tuple, got)) == want
+    assert len(got) == len(want)
+
+
 def test_merge_upsert_recovers_from_uncommitted_table_dir(spark, tmp_path):
     """Round-6 fix pin: a target directory left behind by a write that died
     before committing any part file (only _temporary/.hidden entries) must

@@ -16,8 +16,10 @@ from data_warehouse_flink_spark.operators.windows import windowed_count
 from data_warehouse_flink_spark.io import table
 from data_warehouse_flink_spark.streaming.jobs import (
     run_stream_to_table,
-    streaming_topn_foreachbatch,
     streaming_windowed_count,
+)
+from data_warehouse_flink_spark.streaming.mart import (
+    streaming_topn_foreachbatch,
 )
 from data_warehouse_flink_spark.streaming.sources import stream_events
 from data_warehouse_flink_spark.streaming.state import (
@@ -598,8 +600,10 @@ def test_streaming_topn_correct_across_batches(spark, tmp_path):
     ranking a batch alone crowns whatever changed. The accumulator must keep
     the true leader on top when a later batch updates only a trailing key."""
     from data_warehouse_flink_spark.streaming.jobs import (
-        streaming_topn_foreachbatch,
         streaming_windowed_count,
+    )
+    from data_warehouse_flink_spark.streaming.mart import (
+        streaming_topn_foreachbatch,
     )
 
     schema = "user_id long, ts timestamp"
@@ -636,6 +640,89 @@ def test_streaming_topn_correct_across_batches(spark, tmp_path):
     # still be rank 1 — a per-batch rank would wrongly crown user 3
     assert list(w0.user_id) == [1]
     assert int(w0.cnt.iloc[0]) == 10
+
+
+def test_streaming_topn_carries_other_windows_of_a_touched_bucket(
+    spark, tmp_path
+):
+    """The top-N state is bucketed on the window column, so one bucket holds
+    several windows. Batch 2 touches only window A (and overturns A's
+    leader); window B shares A's bucket, so its rows must be carried
+    through the bucket rewrite unchanged, and the sink must receive the
+    top-N of BOTH windows, as the batch plan ranks them."""
+    from data_warehouse_flink_spark.operators.topn import top_n_per_group
+    from data_warehouse_flink_spark.streaming import mart
+    from data_warehouse_flink_spark.streaming.jobs import (
+        streaming_windowed_count,
+    )
+
+    # pigeonhole: among n_buckets + 1 one-minute windows two share a bucket
+    n = mart._TOPN_BUCKETS
+    starts = [int(T0.timestamp()) + 60 * i for i in range(n + 1)]
+    buckets = {}
+    for r in (
+        spark.createDataFrame([(s,) for s in starts], "w long")
+        .select(
+            "w", F.pmod(F.xxhash64("w"), F.lit(n)).alias("b")
+        )
+        .collect()
+    ):
+        buckets.setdefault(r["b"], []).append(r["w"])
+    wa, wb = next(ws for ws in buckets.values() if len(ws) > 1)[:2]
+
+    def at(w, s):
+        return dt.datetime.fromtimestamp(w, dt.timezone.utc).replace(
+            tzinfo=None
+        ) + dt.timedelta(seconds=s)
+
+    schema = "user_id long, ts timestamp"
+    # batch 1: window A user 1 x3 > user 2 x2; window B user 5 x4 > user 6 x1
+    b1 = (
+        [{"user_id": 1, "ts": at(wa, i)} for i in range(3)]
+        + [{"user_id": 2, "ts": at(wa, 10 + i)} for i in range(2)]
+        + [{"user_id": 5, "ts": at(wb, i)} for i in range(4)]
+        + [{"user_id": 6, "ts": at(wb, 10)}]
+    )
+    # batch 2: only window A changes — user 2 reaches 4 and takes the lead
+    b2 = [{"user_id": 2, "ts": at(wa, 20 + i)} for i in range(2)]
+    src = str(tmp_path / "src")
+    for rows, mode in ((b1, "overwrite"), (b2, "append")):
+        spark.createDataFrame(pd.DataFrame(rows), schema=schema).coalesce(
+            1
+        ).write.mode(mode).parquet(src)
+    counts = streaming_windowed_count(
+        read_replay(spark, src, schema), "ts", "1 minute",
+        keys=["user_id"], watermark="1 hour",
+    )
+    results: list = []
+    state = str(tmp_path / "state")
+    q = streaming_topn_foreachbatch(
+        counts, ["window_start_sec"], "cnt", 1, ["user_id"],
+        lambda ranked_df, epoch_id: results.append(ranked_df.toPandas()),
+        state,
+    )
+    q.awaitTermination()
+
+    def top1(pdf):
+        return sorted(
+            (int(r.window_start_sec), int(r.user_id), int(r.cnt))
+            for r in pdf.itertuples()
+        )
+
+    want = [(wa, 2, 4), (wb, 5, 4)]
+    assert len(results) == 2
+    assert top1(results[-1]) == want
+    # the state table holds every count, window B's untouched by batch 2
+    stored = spark.read.parquet(state).select(
+        "window_start_sec", "user_id", "cnt"
+    )
+    assert sorted(map(tuple, stored.collect())) == [
+        (wa, 1, 3), (wa, 2, 4), (wb, 5, 4), (wb, 6, 1),
+    ]
+    ranked = top_n_per_group(
+        stored, ["window_start_sec"], "cnt", 1, ["user_id"]
+    )
+    assert top1(ranked.toPandas()) == want
 
 
 def test_kafka_source_options_match_reference_consumer():
