@@ -1632,7 +1632,8 @@ def streaming_user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered on read, exactly like the batch compaction.
 
     Update mode + keyed merge is the 100 TB shape: each micro-batch rewrites
-    only the buckets containing changed keys. The previous complete-mode
+    only the buckets containing changed keys (hashed, so nearly all of them
+    once a batch changes a few hundred keys). The previous complete-mode
     form re-emitted (and rewrote) the ENTIRE snapshot every micro-batch —
     correct, but state-volume-bound. Correctness argument is unchanged: the
     struct max on (ts, event_id, ...) is associative and commutative, so

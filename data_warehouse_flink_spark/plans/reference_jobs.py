@@ -841,18 +841,16 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 per sliding window via the streaming foreachBatch-rank idiom.
 
     Fully engine-side: counts accumulate in the bucketed MERGE state table
-    inside `streaming_topn_foreachbatch` (bucket key = window_end_sec), and
-    each batch's ranking — the top-N of every window in the touched
-    buckets — overwrites those buckets of a ranked mart bucketed the same
-    way, so the mart always holds the latest correct ranking. The driver
-    never materializes pre-rank counts — only this final ≤ 3-per-window
-    result, checkpointed before the one temp dir holding the state table
-    and the mart goes.
+    inside `streaming_topn_foreachbatch` (bucketed by time range of
+    window_end_sec), and each batch's ranking — the top-N of every window
+    in the touched buckets — overwrites those buckets of a ranked mart
+    bucketed the same way, so the mart always holds the latest correct
+    ranking. The driver never materializes pre-rank counts — only this
+    final ≤ 3-per-window result, checkpointed before the one temp dir
+    holding the state table and the mart goes.
     """
     import os
     import tempfile
-
-    from pyspark.sql import types as T
 
     from data_warehouse_flink_spark.streaming.jobs import (
         has_committed_data,
@@ -867,11 +865,6 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_events(spark, sf_dir).filter(F.col("event_type") == "view")
     counts = streaming_windowed_count(
         stream, "ts", "1 hour", slide="15 minutes", keys=["user_id"]
-    )
-    # what the ranker hands the sink: counts + row_number's int rank (the
-    # bucket partition column is discovered on read)
-    ranked_schema = T.StructType(
-        [*counts.schema.fields, T.StructField("rn", T.IntegerType())]
     )
     with tempfile.TemporaryDirectory(prefix="topn_state_") as work:
         ranked_path = os.path.join(work, "mart")
@@ -896,8 +889,7 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [], "window_end_sec long, user_id long, cnt long, rn long"
             )
         return (
-            spark.read.schema(ranked_schema)
-            .parquet(ranked_path)
+            spark.read.parquet(ranked_path)
             .select(
                 "window_end_sec", "user_id", "cnt", F.col("rn").cast("long")
             )

@@ -18,17 +18,20 @@ idempotent under micro-batch replay.
 ``merge_upsert_foreachbatch`` (and the top-N ranker on top of it,
 ``streaming_topn_foreachbatch``) is the bucketed MERGE, the one path for
 parquet streaming state. It is exact at a bucket key COARSER than the merge
-key (a fixed ``pmod(xxhash64(bucket key), n)`` bucket count, or a prefix of
-the key such as a window column), because every touched bucket is rewritten
-from its carried rows re-merged with the batch — unchanged groups are read
-back and written again, never dropped.
+key (a fixed ``pmod(xxhash64(key), n)`` bucket count, or a time range of a
+window column), because every touched bucket is rewritten from its carried
+rows re-merged with the batch — unchanged groups are read back and written
+again, never dropped. What a later batch costs is the size of the buckets
+it touches: a hashed key spreads a batch of a few times n keys over
+nearly every bucket, a time-range bucket confines a batch of recent
+windows to the latest one or two ranges.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -39,13 +42,19 @@ from data_warehouse_flink_spark.streaming.jobs import (
     run_foreach_batch,
 )
 
-# Buckets of the top-N state table, keyed on the window column. Measured on
-# streaming_hot_items_topn (one data batch, 4 cores, warm median): sf0.01
-# (2,685 windows) 1.6 s at 4 buckets, 1.8 s at 16, 3.4 s at 64, against
-# 37-58 s for one partition per window; sf0.1 1.7 / 1.8 / 3.3 s. Fewer
-# buckets rewrite more carried windows per later batch; 16 keeps that to
-# 1/16 of the state for about 0.2 s over 4.
-_TOPN_BUCKETS = 16
+# Time range of one top-N state bucket on the window column (3 days). A
+# stream's later batches carry recent windows, so each touches only the
+# latest one or two ranges; hashed window buckets have no locality and a
+# later batch rewrote all 16 of them. Measured on hot_items' counts, 4
+# cores, sf0.1 views replayed as 10 time-ordered 3-day batches, median
+# addBatch per later batch: one partition per window 12.5 s (6.6 s growing
+# to 15.8 s with history), 16 hashed buckets 3.6-4.5 s (16 touched), 1-day
+# ranges 2.7 s (4), 3-day 2.7-3.5 s (2), 7-day 3.1 s (1-2), the stateful
+# aggregate alone 1.3 s; sf0.01 as 30 daily batches ranks them the same.
+# One data batch (streaming_hot_items_topn, sf0.01, warm): 16 hashed 4.6 s,
+# 1 day 4.7 s, 3 days 4.3 s, 7 days 4.0 s. A wider range writes fewer
+# directories but rewrites more carried windows per later batch.
+_TOPN_BUCKET_SPAN_S = 259_200
 
 
 def upsert_partitions_foreachbatch(
@@ -82,17 +91,17 @@ def merge_into_buckets(
     batch_df: DataFrame,
     path: str,
     key_cols: list[str],
-    n_buckets: int,
-    bucket_cols: list[str] | None = None,
+    bucket: Column,
 ) -> DataFrame | None:
     """MERGE one update-mode micro-batch into the bucketed parquet state
     table at `path` and return the merged rows of every bucket it touched.
 
-    The table is partitioned by ``bucket = pmod(xxhash64(bucket_cols),
-    n_buckets)``; `bucket_cols` defaults to `key_cols` and may be any
-    prefix of them (every key of one window then lands in one bucket).
-    A batch row replaces the stored row with the same `key_cols`; every
-    other row of a touched bucket is carried over unchanged.
+    The table is partitioned by ``bucket``, the value of the `bucket`
+    expression over the batch's columns. It must depend on `key_cols` only
+    (a hash of the key, or a time range of its window column), so one key
+    never spans two buckets. A batch row replaces the stored row with the
+    same `key_cols`; every other row of a touched bucket is carried over
+    unchanged.
 
     - No committed data yet (first batch, or a torn first write): nothing
       reads the table, so the bucketed batch is written with ONE dynamic
@@ -102,22 +111,22 @@ def merge_into_buckets(
     - Otherwise: the batch is materialized once (eager localCheckpoint —
       foreachBatch re-executes the stateful plan behind `batch_df` on
       every action, and persist() breaks its attribute rebinding), its
-      touched buckets are collected (≤ n_buckets small ints: STATIC
-      partition pruning on the read-back; an empty collect ends the
-      batch), the stored rows of those buckets minus the batch's keys are
-      unioned with the batch, staged through a ``<path>__staging`` sibling
-      (the merge reads the path its overwrite rewrites; staging breaks
-      that cycle without leaking a cached block per batch), and the
-      touched buckets are overwritten from the stage.
+      touched buckets are collected (a few small ints: STATIC partition
+      pruning on the read-back; an empty collect ends the batch), the
+      stored rows of those buckets minus the batch's keys are unioned
+      with the batch, staged through a ``<path>__staging`` sibling (the
+      merge reads the path its overwrite rewrites; staging breaks that
+      cycle without leaking a cached block per batch), and the touched
+      buckets are overwritten from the stage.
 
     Every read uses the schema already known from the batch, never footer
     inference. Returns the merged touched buckets (with their ``bucket``
     column) read back from parquet, valid until the next call on `path`;
-    None when the batch carried no rows. Per-batch IO is proportional to
-    the touched buckets, never the whole table.
+    None when the batch carried no rows. A later batch reads and rewrites
+    every row of the buckets it touches, so its cost follows how many
+    buckets its keys spread over (see the module docstring).
     """
     spark = batch_df.sparkSession
-    bucket = F.pmod(F.xxhash64(*(bucket_cols or key_cols)), F.lit(n_buckets))
     if not has_committed_data(spark, path):
         new = batch_df.withColumn("bucket", bucket)
         overwrite_touched_partitions(new, path, partition_cols=["bucket"])
@@ -155,10 +164,13 @@ def merge_upsert_foreachbatch(
     Each micro-batch goes through `merge_into_buckets`: the table holds a
     FIXED number of ``pmod(xxhash64(key), n_buckets)`` bucket partitions,
     independent of key cardinality, and a batch rewrites only the buckets
-    it touched, re-merged with their carried rows. That is the scale-safe
-    replacement for a complete-mode re-emission, which rewrites ALL state
-    every micro-batch (a killer at 100 TB of keys). The first batch is one
-    write.
+    it touched, re-merged with their carried rows. The first batch is one
+    write. A hashed key has no locality: a later batch of k distinct keys
+    touches about ``n_buckets·(1 − (1 − 1/n_buckets)^k)`` buckets, so a
+    batch of a few hundred keys rewrites nearly the whole table — O(state)
+    per later batch, like a complete-mode re-emission; what the MERGE
+    saves over complete mode is the stateful operator re-emitting every
+    group, not the table rewrite.
 
     Without an ACID table format this is the classic parquet MERGE idiom;
     with Delta/Iceberg available the body becomes a single ``MERGE INTO``
@@ -170,7 +182,12 @@ def merge_upsert_foreachbatch(
     """
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_into_buckets(batch_df, path, key_cols, n_buckets)
+        merge_into_buckets(
+            batch_df,
+            path,
+            key_cols,
+            F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)),
+        )
 
     return run_foreach_batch(agg, per_batch, input_bytes=input_bytes)
 
@@ -195,13 +212,16 @@ def streaming_topn_foreachbatch(
     The accumulator is therefore the bucketed MERGE state table at
     `state_path` (the engine-side analogue of the reference's ListState
     buffer, DW-Flink HotItemsAnalysis app/HotItems.scala:82-134): merge key
-    = every column but `order_col`, bucket key = `partition_cols`, in
-    `_TOPN_BUCKETS` (16) buckets, so a window's counts never span two
-    buckets. Each micro-batch `merge_into_buckets` returns the merged
-    counts of the touched buckets; they are ranked, and `sink` receives the
-    top-`n` of EVERY window in the touched buckets (not only the windows
-    the batch changed), with their ``bucket`` column so the sink can store
-    them bucketed the same way. The sink is not called for a batch without
+    = every column but `order_col`, bucket = the time range of
+    ``partition_cols[0]`` (the window's epoch seconds, as
+    `streaming_windowed_count` emits) in `_TOPN_BUCKET_SPAN_S` steps, so a
+    window's counts never span two buckets and a batch of recent windows
+    touches only the latest one or two ranges, never older history. Each
+    micro-batch `merge_into_buckets` returns the merged counts of the
+    touched buckets; they are ranked, and `sink` receives the top-`n` of
+    EVERY window in the touched buckets (not only the windows the batch
+    changed), with their ``bucket`` column so the sink can store them
+    bucketed the same way. The sink is not called for a batch without
     rows.
 
     Nothing pre-rank ever reaches the driver. `state_path` is required: the
@@ -215,8 +235,7 @@ def streaming_topn_foreachbatch(
             batch_df,
             state_path,
             [c for c in batch_df.columns if c != order_col],
-            _TOPN_BUCKETS,
-            bucket_cols=partition_cols,
+            F.floor(F.col(partition_cols[0]) / _TOPN_BUCKET_SPAN_S),
         )
         if merged is not None:
             sink(

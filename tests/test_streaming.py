@@ -645,30 +645,24 @@ def test_streaming_topn_correct_across_batches(spark, tmp_path):
 def test_streaming_topn_carries_other_windows_of_a_touched_bucket(
     spark, tmp_path
 ):
-    """The top-N state is bucketed on the window column, so one bucket holds
-    several windows. Batch 2 touches only window A (and overturns A's
-    leader); window B shares A's bucket, so its rows must be carried
-    through the bucket rewrite unchanged, and the sink must receive the
-    top-N of BOTH windows, as the batch plan ranks them."""
+    """The top-N state is bucketed by time range of the window column, so
+    one bucket holds several windows. Batch 2 touches only window A (and
+    overturns A's leader); window B shares A's bucket, so its rows must be
+    carried through the bucket rewrite unchanged, and the sink must receive
+    the top-N of BOTH windows, as the batch plan ranks them. Window C lies
+    in an older bucket: batch 2 must neither rewrite nor re-rank it."""
     from data_warehouse_flink_spark.operators.topn import top_n_per_group
     from data_warehouse_flink_spark.streaming import mart
     from data_warehouse_flink_spark.streaming.jobs import (
         streaming_windowed_count,
     )
 
-    # pigeonhole: among n_buckets + 1 one-minute windows two share a bucket
-    n = mart._TOPN_BUCKETS
-    starts = [int(T0.timestamp()) + 60 * i for i in range(n + 1)]
-    buckets = {}
-    for r in (
-        spark.createDataFrame([(s,) for s in starts], "w long")
-        .select(
-            "w", F.pmod(F.xxhash64("w"), F.lit(n)).alias("b")
-        )
-        .collect()
-    ):
-        buckets.setdefault(r["b"], []).append(r["w"])
-    wa, wb = next(ws for ws in buckets.values() if len(ws) > 1)[:2]
+    # two one-minute windows at the start of one bucket's time range
+    span = mart._TOPN_BUCKET_SPAN_S
+    assert span > 120
+    wa = int(T0.replace(tzinfo=dt.timezone.utc).timestamp()) // span * span
+    wb = wa + 60
+    wc = wa - 2 * span
 
     def at(w, s):
         return dt.datetime.fromtimestamp(w, dt.timezone.utc).replace(
@@ -682,6 +676,7 @@ def test_streaming_topn_carries_other_windows_of_a_touched_bucket(
         + [{"user_id": 2, "ts": at(wa, 10 + i)} for i in range(2)]
         + [{"user_id": 5, "ts": at(wb, i)} for i in range(4)]
         + [{"user_id": 6, "ts": at(wb, 10)}]
+        + [{"user_id": 7, "ts": at(wc, i)} for i in range(2)]
     )
     # batch 2: only window A changes — user 2 reaches 4 and takes the lead
     b2 = [{"user_id": 2, "ts": at(wa, 20 + i)} for i in range(2)]
@@ -711,18 +706,19 @@ def test_streaming_topn_carries_other_windows_of_a_touched_bucket(
 
     want = [(wa, 2, 4), (wb, 5, 4)]
     assert len(results) == 2
-    assert top1(results[-1]) == want
-    # the state table holds every count, window B's untouched by batch 2
+    assert top1(results[0]) == [(wc, 7, 2), (wa, 1, 3), (wb, 5, 4)]
+    assert top1(results[-1]) == want  # C's bucket is not re-ranked
+    # the state table holds every count, B's and C's untouched by batch 2
     stored = spark.read.parquet(state).select(
         "window_start_sec", "user_id", "cnt"
     )
     assert sorted(map(tuple, stored.collect())) == [
-        (wa, 1, 3), (wa, 2, 4), (wb, 5, 4), (wb, 6, 1),
+        (wc, 7, 2), (wa, 1, 3), (wa, 2, 4), (wb, 5, 4), (wb, 6, 1),
     ]
     ranked = top_n_per_group(
         stored, ["window_start_sec"], "cnt", 1, ["user_id"]
     )
-    assert top1(ranked.toPandas()) == want
+    assert top1(ranked.toPandas()) == [(wc, 7, 2), *want]
 
 
 def test_kafka_source_options_match_reference_consumer():
