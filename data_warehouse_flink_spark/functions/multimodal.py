@@ -2,10 +2,9 @@
 
 Images/audio/video ride through the engine as `binary` columns with a typed
 metadata struct; decode / feature-extraction run as Arrow-batched
-`mapInPandas` stages. The container ships no image/audio codecs, so the
-actual decode is stubbed (`NotImplementedError`) behind a deterministic fake
-featurizer — the Spark-side plumbing (schema, batch shape, partitioning) is
-real and tested.
+`mapInPandas` stages. No image/audio codec is a dependency, so a
+deterministic fake featurizer stands in for the decode — the Spark-side
+plumbing (schema, batch shape, partitioning) is real and tested.
 """
 
 from __future__ import annotations
@@ -41,13 +40,6 @@ FEATURE_SCHEMA = (
     "doc_id long, media_type string, n_bytes long, checksum long, "
     "feat array<double>"
 )
-
-
-def decode_image(payload: bytes) -> object:
-    """Real decode would use PIL/libjpeg — not present in this container."""
-    raise NotImplementedError(
-        "image codecs are not installed; use fake_features for plumbing tests"
-    )
 
 
 def fake_features(payload: bytes, n: int = 8) -> list[float]:
@@ -99,14 +91,6 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
             F.lit(None).cast("int").alias("height"),
             F.lit(None).cast("int").alias("sample_rate"),
         ).alias("meta"),
-    )
-
-
-def decode_audio(payload: bytes) -> object:
-    """Real decode would use soundfile/ffmpeg — not present in this container."""
-    raise NotImplementedError(
-        "audio codecs are not installed; frame_sample uses the deterministic "
-        "byte-chunk stand-in"
     )
 
 

@@ -622,7 +622,7 @@ def knn_ivf_pq(
     # bench reps) pass `assigned`/`query_cells` from a keyed cache so ONE
     # checkpoint block is reused; the per-invocation eager checkpoint here
     # is the one-shot default (it truncates the 128-centroid literal tree,
-    # but leaks its block for the session — see llm_ops._cached).
+    # but its block is not memoized, so session.release does not free it).
     if assigned is None:
         assigned = frozen_ivf_assign(
             embeddings, id_col=id_col, vec_col=vec_col

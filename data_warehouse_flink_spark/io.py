@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_warehouse_flink_spark.schemas import TESTDATA_TABLES
+from data_warehouse_flink_spark.session import memo
 
 
 def normalize_time_columns(df: DataFrame) -> DataFrame:
@@ -56,31 +57,23 @@ def data_files(path: str) -> list[str]:
 
 def resolve_schema(spark: SparkSession, path: str) -> T.StructType:
     """The raw on-disk schema of a parquet table, inferred from its footer
-    (a Spark job) once per (session, path).
+    (a Spark job) once per session and path.
 
-    The memo lives on the session object and keys each schema by the
-    table's data-file (path, mtime, size) signature, so a table rewritten
-    in place re-resolves. Only the schema is kept: callers still build a
-    fresh relation per read, so self-joins get distinct expression IDs. A
-    path that cannot be stat'ed (missing, or not local) is never memoized
-    and fails in Spark's own read, as an uncached read would.
+    The schema is memoized (``session.memo``) under the table's data-file
+    (path, mtime, size) signature, so a table rewritten in place
+    re-resolves. Only the schema is kept: callers still build a fresh
+    relation per read, so self-joins get distinct expression IDs. A path
+    that cannot be stat'ed (missing, or not local) is never memoized and
+    fails in Spark's own read, as an uncached read would.
     """
     try:
         stats = [(f, os.stat(f)) for f in data_files(path)]
     except OSError:
-        sig = None
-    else:
-        sig = tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats)
-    cache: dict | None = getattr(spark, "_dwfs_raw_schemas", None)
-    if cache is None:
-        cache = spark._dwfs_raw_schemas = {}
-    hit = cache.get(path)
-    if sig is not None and hit is not None and hit[0] == sig:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    if sig is not None:
-        cache[path] = (sig, schema)
-    return schema
+        return spark.read.parquet(path).schema
+    sig = tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats)
+    return memo(
+        spark, ("schema", path, sig), lambda: spark.read.parquet(path).schema
+    )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -4,15 +4,67 @@ Local testing runs on ``local[N]`` (one JVM), but every config here is chosen
 to also make sense on a large multi-executor cluster: AQE for runtime
 re-planning (skew joins, partition coalescing), UTC session timezone for
 deterministic event-time windows, Arrow for the Python boundary.
+
+Everything a session remembers between queries (footer schemas, checkpointed
+shared intermediates, trained quantizer models) lives in one memo
+(``memo``), freed by one ``release``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# The memo of the live SparkContext, and the application that filled it.
+# One SparkContext lives per process, so entries of a stopped application
+# are dead and go at the next call from a new one. Kept at module level,
+# not on a session object: PySpark hands out several wrappers for one JVM
+# session (getActiveSession(), a foreachBatch frame's sparkSession).
+_memo: dict[Hashable, Any] = {}
+_memo_app: str | None = None
+
+
+def _entries(spark: SparkSession) -> dict[Hashable, Any]:
+    global _memo_app
+    app = spark.sparkContext.applicationId
+    if app != _memo_app:
+        _memo.clear()
+        _memo_app = app
+    return _memo
+
+
+def memo(spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
+    """The value memoized under `key` for `spark`'s application, built by
+    `build()` on the first call and after every ``release``.
+
+    The key must name everything the value depends on besides the
+    application (table directory, fit variant, data-file signature). A
+    frame value must be a ``localCheckpoint``, so ``release`` can free it.
+    A memoized frame must not be used after ``release``: its blocks are gone,
+    and the next call rebuilds it. Not synchronized: the engine calls it
+    from one driver thread at a time (a foreachBatch body runs while the
+    starting thread waits on the query).
+    """
+    entries = _entries(spark)
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
+
+
+def release(spark: SparkSession) -> None:
+    """Unpersist the checkpointed RDD behind every memoized frame and
+    empty the memo. Frames handed out before the call are invalid after
+    it; the next ``memo`` call builds a fresh one."""
+    entries = _entries(spark)
+    for value in entries.values():
+        if isinstance(value, DataFrame):
+            value._jdf.queryExecution().logical().rdd().unpersist(True)
+    entries.clear()
 
 
 def get_spark(

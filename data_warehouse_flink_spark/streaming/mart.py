@@ -2,18 +2,7 @@
 
 The missing piece between the reference's print-sink demos and a real
 warehouse: a continuously maintained, partitioned, queryable mart fed by an
-update-mode streaming aggregate through foreachBatch. Two sinks:
-
-``upsert_partitions_foreachbatch`` dynamically overwrites only the
-partitions the micro-batch touched. Its correctness constraint (learned the
-hard way, see
-tests/test_streaming.py::test_mart_upsert_incremental_two_batches): the
-partition columns MUST be the aggregate's full grouping key. Update mode
-emits only changed rows; overwriting a partition that is coarser than the
-grouping key (e.g. day-partitioning hourly windows) would drop that
-partition's unchanged groups. With partition == group key, each overwrite
-replaces exactly the changed group's row(s), which makes the sink
-idempotent under micro-batch replay.
+update-mode streaming aggregate through foreachBatch.
 
 ``merge_upsert_foreachbatch`` (and the top-N ranker on top of it,
 ``streaming_topn_foreachbatch``) is the bucketed MERGE, the one path for
@@ -55,36 +44,6 @@ from data_warehouse_flink_spark.streaming.jobs import (
 # 1 day 4.7 s, 3 days 4.3 s, 7 days 4.0 s. A wider range writes fewer
 # directories but rewrites more carried windows per later batch.
 _TOPN_BUCKET_SPAN_S = 259_200
-
-
-def upsert_partitions_foreachbatch(
-    agg: DataFrame,
-    path: str,
-    partition_cols: list[str],
-) -> StreamingQuery:
-    """Maintain a partitioned parquet mart from an update-mode streaming agg.
-
-    `partition_cols` must equal the aggregate's grouping columns (see module
-    docstring). Each micro-batch dynamically overwrites only the partitions
-    (= groups) whose values changed. Returns the finished query (see
-    `run_foreach_batch`).
-    """
-
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # foreachBatch does NOT cache the micro-batch frame: every action
-        # re-executes the streaming aggregate behind it, and this body
-        # takes two (isEmpty probe, the overwrite). Materialize once per
-        # batch — localCheckpoint, not persist(): persisting a stateful
-        # micro-batch plan hits attribute-rebinding errors on later
-        # actions, while the eager checkpoint severs the plan entirely.
-        # The checkpointed blocks are group-count-sized and freed by the
-        # context cleaner when the batch-local reference drops.
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
-            return
-        overwrite_touched_partitions(batch_df, path, partition_cols)
-
-    return run_foreach_batch(agg, per_batch)
 
 
 def merge_into_buckets(

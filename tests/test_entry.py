@@ -556,3 +556,37 @@ def test_stream_start_and_replay_each_live_in_one_module():
         and needle in src.read_text()
     )
     assert stray == []
+
+
+def test_session_state_lives_in_one_memo():
+    """Only session.py reads the applicationId (its memo drops a stopped
+    application's entries), and no plans/ module keeps a module-level
+    dict filled at run time: every per-session value goes through
+    ``session.memo``, so ``session.release`` reaches it."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(conftest.REPO_ROOT) / "data_warehouse_flink_spark"
+    readers = sorted(
+        src.relative_to(pkg).as_posix()
+        for src in pkg.rglob("*.py")
+        if "applicationId" in src.read_text()
+    )
+    assert readers == ["session.py"]
+
+    def empty_dict(node) -> bool:
+        return (isinstance(node, ast.Dict) and not node.keys) or (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id in ("dict", "defaultdict", "OrderedDict")
+        )
+
+    stores = sorted(
+        (src.name, ast.unparse(node))
+        for src in (pkg / "plans").glob("*.py")
+        for node in ast.parse(src.read_text()).body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        and node.value is not None
+        and empty_dict(node.value)
+    )
+    assert stores == []

@@ -1,6 +1,7 @@
 """io.table's per-session schema resolution: a table's parquet footer is read
 once per (session, path), a rewritten table re-resolves, and every call still
-returns a fresh relation."""
+returns a fresh relation. And the session memo behind it: ``release`` frees
+every memoized frame's blocks, and the next call rebuilds."""
 
 from __future__ import annotations
 
@@ -14,6 +15,8 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from data_warehouse_flink_spark.io import table
+from data_warehouse_flink_spark.plans import llm_ops
+from data_warehouse_flink_spark.session import release
 
 from conftest import SF_SMOKE
 
@@ -86,3 +89,48 @@ def test_repeated_read_launches_no_spark_job(spark, tmp_path):
         time.sleep(0.05)
     assert tracker.getJobIdsForGroup(groups[0])
     assert tracker.getJobIdsForGroup(groups[1]) == []
+
+
+def test_release_unpersists_memoized_frames_and_rebuilds(spark):
+    """``release`` unpersists the checkpointed RDD behind every memoized
+    frame and empties the memo; the next call builds a new frame (and
+    model) with the same content."""
+
+    def stored_rdds() -> set[int]:
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    def rdd_id(df) -> int:
+        return df._jdf.queryExecution().logical().rdd().id()
+
+    frame = llm_ops._kmeans_qdf(spark, SF_SMOKE)
+    model = llm_ops._kmeans_model(spark, SF_SMOKE)
+    rows = sorted(frame.collect())
+    assert rdd_id(frame) in stored_rdds()
+    assert len(llm_ops._DEDUP_CACHE) > 0
+
+    release(spark)
+    assert rdd_id(frame) not in stored_rdds()
+    assert len(llm_ops._DEDUP_CACHE) == 0
+
+    again = llm_ops._kmeans_qdf(spark, SF_SMOKE)
+    assert rdd_id(again) != rdd_id(frame)
+    assert rdd_id(again) in stored_rdds()
+    assert sorted(again.collect()) == rows
+    rebuilt = llm_ops._kmeans_model(spark, SF_SMOKE)
+    assert rebuilt is not model and rebuilt == model
+
+
+def test_memo_drops_the_entries_of_another_application():
+    """The memo belongs to one application: a call from another one (a
+    SparkContext started after the first stopped) finds it empty."""
+    from types import SimpleNamespace
+
+    from data_warehouse_flink_spark.session import memo
+
+    def app(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    key = ("test", uuid.uuid4().hex)
+    assert memo(app("app-a"), key, lambda: 1) == 1
+    assert memo(app("app-a"), key, lambda: 2) == 1
+    assert memo(app("app-b"), key, lambda: 3) == 3

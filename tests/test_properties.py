@@ -3109,43 +3109,6 @@ def test_merge_upsert_stream_matches_batch_aggregate(
     assert spark.read.parquet(path).count() == len(want)  # one row per key
 
 
-@settings(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(events=MART_EVENTS)
-def test_upsert_partitions_stream_matches_batch_aggregate(
-    spark, tmp_path, events
-):
-    """upsert_partitions_foreachbatch (dynamic partition overwrite keyed by
-    the grouping column) converges to the one-shot aggregate — stale
-    partition contents must be fully replaced, never unioned."""
-    import uuid as _uuid
-
-    from collections import Counter
-
-    from data_warehouse_flink_spark.streaming.mart import (
-        upsert_partitions_foreachbatch,
-    )
-
-    stream = _write_mart_batches(spark, tmp_path, events, 3)
-    agg = stream.groupBy("k").agg(F.sum("v").alias("total"))
-    path = str(tmp_path / _uuid.uuid4().hex)
-    q = upsert_partitions_foreachbatch(agg, path, ["k"])
-    q.awaitTermination()
-
-    got = {
-        r["k"]: r["total"]
-        for r in spark.read.parquet(path).select("k", "total").collect()
-    }
-    want = Counter()
-    for k, v, _ in events:
-        want[k] += v
-    assert got == dict(want)
-    assert spark.read.parquet(path).count() == len(want)
-
-
 # ---------------------------------------------------------------------------
 # End-to-end streaming-curation twins: the flagship near-dedup ingest loop
 # (shingle -> md5 minhash -> band -> ledger admission, replayed over three

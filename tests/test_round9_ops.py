@@ -112,7 +112,6 @@ def test_sampled_kmeans_fit_is_a_real_sample(spark):
         _KMEANS_SAMPLE_SQL,
         _kmeans_model,
         _kmeans_qdf,
-        _kmeans_sampled_model,
     )
 
     qdf = _kmeans_qdf(spark, SF)
@@ -120,7 +119,7 @@ def test_sampled_kmeans_fit_is_a_real_sample(spark):
     n_sample = qdf.filter(F.expr(_KMEANS_SAMPLE_SQL)).count()
     assert 0 < n_sample < n_all
 
-    m1 = _kmeans_sampled_model(spark, SF)
+    m1 = _kmeans_model(spark, SF, sampled=True)
     # bypass the session cache for the determinism re-run
     from data_warehouse_flink_spark.functions.clustering import (
         kmeans_quantized_train,
@@ -135,12 +134,9 @@ def test_sampled_kmeans_fit_is_a_real_sample(spark):
     assert m1 != _kmeans_model(spark, SF)
 
     # same non-vacuity for the PQ family's sampled codebooks
-    from data_warehouse_flink_spark.plans.llm_ops import (
-        _pq_sampled_model,
-        _pq_train_model,
-    )
+    from data_warehouse_flink_spark.plans.llm_ops import _pq_train_model
 
-    assert _pq_sampled_model(spark, SF) != _pq_train_model(spark, SF)
+    assert _pq_train_model(spark, SF, sampled=True) != _pq_train_model(spark, SF)
 
 
 def test_bpe_batched_m1_equals_sequential(spark):

@@ -397,7 +397,7 @@ def test_order_timeout_stream_on_rocksdb_state_store(spark, tmp_path):
 def test_mart_upsert_foreachbatch(spark, tmp_path):
     """Streaming hourly-count mart equals the batch aggregate after replay."""
     from data_warehouse_flink_spark.streaming.mart import (
-        upsert_partitions_foreachbatch,
+        merge_upsert_foreachbatch,
     )
     from data_warehouse_flink_spark.operators.windows import windowed_count
 
@@ -414,9 +414,7 @@ def test_mart_upsert_foreachbatch(spark, tmp_path):
         )
     )
     mart = str(tmp_path / "mart")
-    q = upsert_partitions_foreachbatch(
-        agg, mart, partition_cols=["window_start_sec"]
-    )
+    q = merge_upsert_foreachbatch(agg, mart, ["window_start_sec"])
     q.awaitTermination()
     got = (
         spark.read.parquet(mart)
@@ -437,19 +435,19 @@ def test_mart_upsert_foreachbatch(spark, tmp_path):
 
 
 def test_mart_upsert_incremental_two_batches(spark, tmp_path):
-    """Two micro-batches (split replay) updating overlapping partitions:
+    """Two micro-batches (split replay) updating an overlapping window:
     the mart must converge to the batch aggregate — the idempotent-upsert
     contract under incremental delivery."""
     from data_warehouse_flink_spark.operators.windows import windowed_count
     from data_warehouse_flink_spark.streaming.mart import (
-        upsert_partitions_foreachbatch,
+        merge_upsert_foreachbatch,
     )
 
     ev = table(spark, SF_SMOKE, "events").filter(F.col("event_type") == "view")
     src = str(tmp_path / "src")
     # time-ordered split at a half-hour boundary: the window containing the
-    # split point receives rows from BOTH batches, forcing a re-overwrite of
-    # an already-written partition; the split is time-ordered so batch 2 is
+    # split point receives rows from BOTH batches, forcing a re-merge of
+    # an already-written row; the split is time-ordered so batch 2 is
     # not behind the watermark
     split = "2024-01-15 12:30:00"
     ev.filter(F.col("ts") < split).coalesce(1).write.mode(
@@ -474,9 +472,7 @@ def test_mart_upsert_incremental_two_batches(spark, tmp_path):
         )
     )
     mart = str(tmp_path / "mart2")
-    q = upsert_partitions_foreachbatch(
-        agg, mart, partition_cols=["window_start_sec"]
-    )
+    q = merge_upsert_foreachbatch(agg, mart, ["window_start_sec"])
     q.awaitTermination()
     got = (
         spark.read.parquet(mart)
