@@ -675,9 +675,7 @@ def events_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SCD2_DAYS = ("2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04")
 
 
-@register(
-    "user_tier_scd2",
-    oracle="""
+_USER_TIER_SCD2_ORACLE = """
     WITH snaps AS (
       SELECT user_id, day,
              CASE WHEN s >= 100 THEN 'gold'
@@ -706,8 +704,10 @@ _SCD2_DAYS = ("2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04")
                   PARTITION BY user_id ORDER BY day) IS NULL
                 THEN 1 ELSE 0 END AS BIGINT) AS is_current
     FROM starts
-    """,
-)
+    """
+
+
+@register("user_tier_scd2", oracle=_USER_TIER_SCD2_ORACLE)
 def user_tier_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 history of a per-user `tier` dimension over four daily batches.
 
@@ -770,38 +770,9 @@ def user_tier_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_tier_point_in_time",
-    oracle="""
+    oracle=f"""
     WITH hist AS (
-      SELECT * FROM (
-    WITH snaps AS (
-      SELECT user_id, day,
-             CASE WHEN s >= 100 THEN 'gold'
-                  WHEN s >= 10 THEN 'silver'
-                  ELSE 'bronze' END AS tier
-      FROM (
-        SELECT user_id, CAST(ts AS DATE) AS day,
-               SUM(CAST(value AS DECIMAL(18,6))) AS s
-        FROM events
-        WHERE ts < TIMESTAMP '2024-01-05'
-        GROUP BY 1, 2
-      )
-    ), seq AS (
-      SELECT user_id, day, tier,
-             lag(tier) OVER (PARTITION BY user_id ORDER BY day) AS prev_tier
-      FROM snaps
-    ), starts AS (
-      SELECT user_id, day, tier
-      FROM seq WHERE prev_tier IS NULL OR tier <> prev_tier
-    )
-    SELECT user_id, tier,
-           epoch_us(CAST(day AS TIMESTAMP)) AS valid_from_us,
-           lead(epoch_us(CAST(day AS TIMESTAMP))) OVER (
-             PARTITION BY user_id ORDER BY day) AS valid_to_us,
-           CAST(CASE WHEN lead(day) OVER (
-                  PARTITION BY user_id ORDER BY day) IS NULL
-                THEN 1 ELSE 0 END AS BIGINT) AS is_current
-    FROM starts
-    ) _h
+      SELECT * FROM ({_USER_TIER_SCD2_ORACLE}) _h
     )
     SELECT coalesce(h.tier, 'unknown') AS tier,
            e.event_type,
@@ -1141,9 +1112,7 @@ def _hist_quantiles_from_bins(
     )
 
 
-@register(
-    "event_value_histogram_quantiles",
-    oracle="""
+_EVENT_VALUE_HISTOGRAM_QUANTILES_ORACLE = """
     WITH stats AS (
       SELECT min(value) AS lo, max(value) AS hi, count(*)::BIGINT AS n
       FROM events
@@ -1178,7 +1147,12 @@ def _hist_quantiles_from_bins(
                 / CAST(h.cnt AS DOUBLE)))
              * ((hi - lo) / 1000.0), 6) AS est_value
     FROM hits
-    """,
+    """
+
+
+@register(
+    "event_value_histogram_quantiles",
+    oracle=_EVENT_VALUE_HISTOGRAM_QUANTILES_ORACLE,
 )
 def event_value_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable quantile sketch via a fixed-width histogram: 1000 equi-width
@@ -1213,42 +1187,7 @@ def event_value_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "streaming_value_histogram_quantiles",
-    oracle="""
-    WITH stats AS (
-      SELECT min(value) AS lo, max(value) AS hi, count(*)::BIGINT AS n
-      FROM events
-    ), binned AS (
-      SELECT CASE WHEN s.hi = s.lo THEN 0 ELSE
-               CAST(least(floor((e.value - s.lo)
-                 / ((s.hi - s.lo) / 1000.0)), 999.0) AS BIGINT) END AS bin,
-             count(*)::BIGINT AS cnt
-      FROM events e CROSS JOIN stats s GROUP BY 1
-    ), cum AS (
-      SELECT bin, cnt,
-             sum(cnt) OVER (ORDER BY bin)::BIGINT AS cum,
-             coalesce(sum(cnt) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
-               PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cum_before
-      FROM binned
-    ), qs AS (
-      SELECT unnest(['p50', 'p90', 'p95', 'p99']) AS quantile,
-             unnest([0.5, 0.9, 0.95, 0.99]) AS p
-    ), hits AS (
-      SELECT q.quantile, q.p, s.lo, s.hi, s.n,
-             CAST(ceil(q.p * s.n) AS BIGINT) AS rank,
-             min_by(struct_pack(bin := c.bin, cnt := c.cnt,
-                                cum_before := c.cum_before), c.bin) AS h
-      FROM qs q CROSS JOIN stats s
-      JOIN cum c ON c.cum >= CAST(ceil(q.p * s.n) AS BIGINT)
-      GROUP BY 1, 2, 3, 4, 5
-    )
-    SELECT quantile,
-           h.bin AS bin,
-           round(lo + (CAST(h.bin AS DOUBLE)
-             + (CAST(rank - h.cum_before AS DOUBLE)
-                / CAST(h.cnt AS DOUBLE)))
-             * ((hi - lo) / 1000.0), 6) AS est_value
-    FROM hits
-    """,
+    oracle=_EVENT_VALUE_HISTOGRAM_QUANTILES_ORACLE,
 )
 def streaming_value_histogram_quantiles(
     spark: SparkSession, sf_dir: str
@@ -1556,9 +1495,7 @@ def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "user_cdc_snapshot",
-    oracle="""
+_USER_CDC_SNAPSHOT_ORACLE = """
     WITH log AS (
       SELECT user_id, event_type, value, epoch_us(ts)::BIGINT AS ts_us,
              event_id,
@@ -1572,8 +1509,10 @@ def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
            ts_us AS last_ts_us
     FROM log
     WHERE rn = 1 AND event_type <> 'error'
-    """,
-)
+    """
+
+
+@register("user_cdc_snapshot", oracle=_USER_CDC_SNAPSHOT_ORACLE)
 def user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC log compaction: treat the event stream as a change log keyed by
     user (every event an upsert; ``error`` a delete tombstone) and
@@ -1604,24 +1543,7 @@ def user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "streaming_user_cdc_snapshot",
-    oracle="""
-    WITH log AS (
-      SELECT user_id, event_type, value, epoch_us(ts)::BIGINT AS ts_us,
-             event_id,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    )
-    SELECT user_id,
-           event_type AS last_event_type,
-           (value::DECIMAL(18,6))::VARCHAR AS last_value,
-           ts_us AS last_ts_us
-    FROM log
-    WHERE rn = 1 AND event_type <> 'error'
-    """,
-)
+@register("streaming_user_cdc_snapshot", oracle=_USER_CDC_SNAPSHOT_ORACLE)
 def streaming_user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `user_cdc_snapshot`: the CDC apply as a continuous
     query — latest record per key maintained in the state store by an
@@ -1663,7 +1585,7 @@ def streaming_user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         # can follow the replayed input
         merge_upsert_foreachbatch(
             latest, table, ["user_id"], n_buckets=16,
-            input_bytes=source_bytes(sf_dir),
+            input_bytes=source_bytes(f"{sf_dir}/events.parquet"),
         )
         return (
             spark.read.schema(latest.schema)
@@ -1783,9 +1705,24 @@ def events_backfill_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_sessionize_gap_stats",
-    oracle="""
+def _session_size_bands(per_session: DataFrame) -> DataFrame:
+    """Roll (user_id, n_events, duration_us) sessions up into four size
+    bands: session and user counts, total and longest duration."""
+    band = (
+        F.when(F.col("n_events") == 1, "1")
+        .when(F.col("n_events") <= 3, "2-3")
+        .when(F.col("n_events") <= 7, "4-7")
+        .otherwise("8+")
+    )
+    return per_session.groupBy(band.alias("size_band")).agg(
+        F.count("*").alias("n_sessions"),
+        F.countDistinct("user_id").alias("n_users"),
+        F.sum("duration_us").alias("sum_duration_us"),
+        F.max("duration_us").alias("max_duration_us"),
+    )
+
+
+_EVENTS_SESSIONIZE_GAP_STATS_ORACLE = """
     WITH seq AS (
       SELECT user_id, epoch_us(ts)::BIGINT AS ts_us,
              lag(epoch_us(ts)::BIGINT) OVER (
@@ -1818,7 +1755,11 @@ def events_backfill_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
            sum(duration_us)::BIGINT AS sum_duration_us,
            max(duration_us)::BIGINT AS max_duration_us
     FROM per_session GROUP BY 1
-    """,
+    """
+
+
+@register(
+    "events_sessionize_gap_stats", oracle=_EVENTS_SESSIONIZE_GAP_STATS_ORACLE
 )
 def events_sessionize_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-size/duration distribution at a 30-minute inactivity gap —
@@ -1840,29 +1781,20 @@ def events_sessionize_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         (F.max("ts_us") - F.min("ts_us")).alias("duration_us"),
     )
-    band = (
-        F.when(F.col("n_events") == 1, "1")
-        .when(F.col("n_events") <= 3, "2-3")
-        .when(F.col("n_events") <= 7, "4-7")
-        .otherwise("8+")
-    )
-    return per_session.groupBy(band.alias("size_band")).agg(
-        F.count("*").alias("n_sessions"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum("duration_us").alias("sum_duration_us"),
-        F.max("duration_us").alias("max_duration_us"),
-    )
+    return _session_size_bands(per_session)
 
 
-@register(
-    "events_rollup_incremental",
-    oracle="""
+_EVENTS_ROLLUP_INCREMENTAL_ORACLE = """
     SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
            count(*)::BIGINT AS cnt,
            sum((value::DECIMAL(18,6) * 1000000)::BIGINT)::BIGINT AS sum_value_micro
     FROM events
     GROUP BY 1, 2
-    """,
+    """
+
+
+@register(
+    "events_rollup_incremental", oracle=_EVENTS_ROLLUP_INCREMENTAL_ORACLE
 )
 def events_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance, proven by construction:
@@ -1915,40 +1847,7 @@ def events_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_sessionize_gap_stats",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, epoch_us(ts)::BIGINT AS ts_us,
-             lag(epoch_us(ts)::BIGINT) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-      FROM events
-    ), flagged AS (
-      SELECT user_id, ts_us,
-             CASE WHEN prev_us IS NULL
-                    OR ts_us - prev_us > 1800000000 THEN 1 ELSE 0
-             END AS new_sess
-      FROM seq
-    ), sess AS (
-      SELECT user_id, ts_us,
-             sum(new_sess) OVER (
-               PARTITION BY user_id ORDER BY ts_us
-               ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM flagged
-    ), per_session AS (
-      SELECT user_id, session_id,
-             count(*)::BIGINT AS n_events,
-             (max(ts_us) - min(ts_us))::BIGINT AS duration_us
-      FROM sess GROUP BY 1, 2
-    )
-    SELECT CASE WHEN n_events = 1 THEN '1'
-                WHEN n_events <= 3 THEN '2-3'
-                WHEN n_events <= 7 THEN '4-7'
-                ELSE '8+' END AS size_band,
-           count(*)::BIGINT AS n_sessions,
-           count(DISTINCT user_id)::BIGINT AS n_users,
-           sum(duration_us)::BIGINT AS sum_duration_us,
-           max(duration_us)::BIGINT AS max_duration_us
-    FROM per_session GROUP BY 1
-    """,
+    oracle=_EVENTS_SESSIONIZE_GAP_STATS_ORACLE,
 )
 def streaming_sessionize_gap_stats(
     spark: SparkSession, sf_dir: str
@@ -1963,7 +1862,7 @@ def streaming_sessionize_gap_stats(
     """
     from data_warehouse_flink_spark.streaming.jobs import (
         run_stream_to_table,
-        with_watermark,
+        streaming_session_count,
     )
     from data_warehouse_flink_spark.streaming.sources import stream_events
 
@@ -1974,17 +1873,14 @@ def streaming_sessionize_gap_stats(
     # merge condition `diff <= 1800000000 us`, matching the oracle's
     # strict-> split exactly.
     gap_us = 1_800_000_001
-    stream = with_watermark(stream_events(spark, sf_dir), "ts", "0 seconds")
-    agg = stream.groupBy(
-        F.session_window("ts", "30 minutes 1 microsecond"), F.col("user_id")
-    ).agg(F.count("*").alias("n_events"))
-    sessions = agg.select(
+    sessions = streaming_session_count(
+        stream_events(spark, sf_dir), "ts", "30 minutes 1 microsecond",
+        keys=["user_id"],
+    ).select(
         "user_id",
         "n_events",
         (
-            F.unix_micros(F.col("session_window.end"))
-            - F.lit(gap_us)
-            - F.unix_micros(F.col("session_window.start"))
+            F.col("session_end_us") - F.lit(gap_us) - F.col("session_start_us")
         ).alias("duration_us"),
     )
     # r15, measured and deliberately left at the session default: unlike
@@ -1996,66 +1892,20 @@ def streaming_sessionize_gap_stats(
     # scale-portable derivation (it is a local[32] balance point), so the
     # width stays the compute default the cluster supplies.
     mat = run_stream_to_table(sessions, spark, output_mode="complete")
-    band = (
-        F.when(F.col("n_events") == 1, "1")
-        .when(F.col("n_events") <= 3, "2-3")
-        .when(F.col("n_events") <= 7, "4-7")
-        .otherwise("8+")
-    )
-    return mat.groupBy(band.alias("size_band")).agg(
-        F.count("*").alias("n_sessions"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum("duration_us").alias("sum_duration_us"),
-        F.max("duration_us").alias("max_duration_us"),
+    return _session_size_bands(mat)
+
+
+def _daily_counts(ev: DataFrame) -> DataFrame:
+    """Events per ``yyyy-MM-dd`` day, on a batch or a streaming frame."""
+    return ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
+        F.count("*").alias("cnt")
     )
 
 
-@register(
-    "events_dq_anomaly",
-    oracle="""
-    WITH daily AS (
-      SELECT strftime(ts, '%Y-%m-%d') AS day, count(*)::BIGINT AS cnt
-      FROM events GROUP BY 1
-    ), w AS (
-      SELECT day, cnt,
-             list(cnt) OVER (ORDER BY day
-                             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-               AS trail
-      FROM daily
-    ), m AS (
-      SELECT day, cnt, len(trail)::BIGINT AS n_trail,
-             list_sort(trail)[4]::BIGINT AS med7
-      FROM w
-    )
-    SELECT day, cnt, n_trail,
-           CASE WHEN n_trail < 7 THEN NULL ELSE med7 END AS med7,
-           CASE WHEN n_trail < 7 THEN 'warmup'
-                WHEN cnt * 10 > med7 * 13 THEN 'spike'
-                WHEN cnt * 10 < med7 * 7 THEN 'drop'
-                ELSE 'ok' END AS status
-    FROM m
-    """,
-)
-def events_dq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-over-day volume anomaly detection: each day's event count vs
-    the exact median of its trailing 7-day window — ±30% flags a
-    spike/drop, the first-line data-quality monitor an ingest pipeline
-    pages on. The 7-median is the 4th smallest of the window's counts
-    (exact integers, no percentile interpolation), the ±30% compare is an
-    integer cross-multiply — nothing floats.
-
-    Scale: the only corpus-sized work is the one day rollup; the ordered
-    window runs over day-grain METADATA (30 rows here, ~36.5k rows for a
-    century), so the single-partition ORDER BY is free at any corpus size
-    — same argument as the compaction planner.
-    """
-    from pyspark.sql import Window
-
-    daily = (
-        _events(spark, sf_dir)
-        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-        .agg(F.count("*").alias("cnt"))
-    )
+def _dq_flags(daily: DataFrame) -> DataFrame:
+    """Flag each day's count against the exact median of its trailing 7
+    days (the 4th smallest count): ``warmup`` until 7 days exist, then
+    ``spike``/``drop`` beyond ±30 %, else ``ok``."""
     w = Window.orderBy("day").rowsBetween(-6, 0)
     trail = daily.select(
         "day",
@@ -2080,9 +1930,7 @@ def events_dq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "streaming_dq_anomaly",
-    oracle="""
+_EVENTS_DQ_ANOMALY_ORACLE = """
     WITH daily AS (
       SELECT strftime(ts, '%Y-%m-%d') AS day, count(*)::BIGINT AS cnt
       FROM events GROUP BY 1
@@ -2104,8 +1952,27 @@ def events_dq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
                 WHEN cnt * 10 < med7 * 7 THEN 'drop'
                 ELSE 'ok' END AS status
     FROM m
-    """,
-)
+    """
+
+
+@register("events_dq_anomaly", oracle=_EVENTS_DQ_ANOMALY_ORACLE)
+def events_dq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-over-day volume anomaly detection: each day's event count vs
+    the exact median of its trailing 7-day window — ±30% flags a
+    spike/drop, the first-line data-quality monitor an ingest pipeline
+    pages on. The 7-median is the 4th smallest of the window's counts
+    (exact integers, no percentile interpolation), the ±30% compare is an
+    integer cross-multiply — nothing floats.
+
+    Scale: the only corpus-sized work is the one day rollup; the ordered
+    window runs over day-grain METADATA (30 rows here, ~36.5k rows for a
+    century), so the single-partition ORDER BY is free at any corpus size
+    — same argument as the compaction planner.
+    """
+    return _dq_flags(_daily_counts(_events(spark, sf_dir)))
+
+
+@register("streaming_dq_anomaly", oracle=_EVENTS_DQ_ANOMALY_ORACLE)
 def streaming_dq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `events_dq_anomaly`: the per-day counts are
     maintained by an update-mode streaming aggregate (day-keyed counts are
@@ -2121,56 +1988,20 @@ def streaming_dq_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events,
     )
 
-    stream = stream_events(spark, sf_dir)
-    daily = stream.groupBy(
-        F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.count("*").alias("cnt"))
     # r15 (VERDICT r14 #1, guide §2.5): day-keyed counts are O(days) state —
     # right-size the state-store width from the replayed input instead of
     # paying `shuffle.partitions` store commits per micro-batch.
     mat = run_stream_to_table(
-        daily,
+        _daily_counts(stream_events(spark, sf_dir)),
         spark,
         output_mode="complete",
-        input_bytes=source_bytes(sf_dir),
+        input_bytes=source_bytes(f"{sf_dir}/events.parquet"),
     )
-
-    from pyspark.sql import Window
-
-    w = Window.orderBy("day").rowsBetween(-6, 0)
-    trail = mat.select(
-        "day",
-        "cnt",
-        F.size(F.collect_list("cnt").over(w)).cast("long").alias("n_trail"),
-        F.expr("try_element_at(array_sort(collect_list(cnt) OVER "
-               "(ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)), 4)"
-               ).alias("raw_med7"),
-    )
-    return trail.select(
-        "day",
-        "cnt",
-        "n_trail",
-        F.when(F.col("n_trail") < 7, F.lit(None).cast("long"))
-        .otherwise(F.col("raw_med7"))
-        .alias("med7"),
-        F.when(F.col("n_trail") < 7, "warmup")
-        .when(F.col("cnt") * 10 > F.col("raw_med7") * 13, "spike")
-        .when(F.col("cnt") * 10 < F.col("raw_med7") * 7, "drop")
-        .otherwise("ok")
-        .alias("status"),
-    )
+    return _dq_flags(mat)
 
 
 @register(
-    "streaming_rollup_incremental",
-    oracle="""
-    SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-           count(*)::BIGINT AS cnt,
-           sum((value::DECIMAL(18,6) * 1000000)::BIGINT)::BIGINT
-             AS sum_value_micro
-    FROM events
-    GROUP BY 1, 2
-    """,
+    "streaming_rollup_incremental", oracle=_EVENTS_ROLLUP_INCREMENTAL_ORACLE
 )
 def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maintenance loop end-to-end: an update-mode streaming rollup
@@ -2208,7 +2039,7 @@ def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replayed input
         merge_upsert_foreachbatch(
             agg, table, ["event_type", "day"], n_buckets=16,
-            input_bytes=source_bytes(sf_dir),
+            input_bytes=source_bytes(f"{sf_dir}/events.parquet"),
         )
         return (
             spark.read.schema(agg.schema)
@@ -2282,131 +2113,104 @@ def events_late_arrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_streaming_scd2() -> None:
-    """Register the streaming SCD2 twin with the batch oracle VERBATIM —
-    fetched from the registry so the two can never drift apart."""
-    from data_warehouse_flink_spark.registry import _REGISTRY
+@register("streaming_user_tier_scd2", oracle=_USER_TIER_SCD2_ORACLE)
+def streaming_user_tier_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming twin of `user_tier_scd2`: the nightly dimension merge as
+    a continuous job — events replayed one day per micro-batch
+    (`streaming.sources.ordered_replay` over the days in calendar order,
+    the engine's tested replay harness), each batch building its day
+    snapshot and applying it to the running history with `scd2_apply`
+    inside foreachBatch. The history chain localCheckpoints between
+    batches exactly like the batch form, so state never re-plans the whole
+    lineage.
 
-    @register(
-        "streaming_user_tier_scd2",
-        oracle=_REGISTRY["user_tier_scd2"].oracle,
+    SCD2 apply is ORDER-DEPENDENT (unlike the mergeable counts/maxes behind
+    the other streaming twins), so the twin's correctness hinges on
+    in-order day delivery — which is precisely how a real CDC-dimension
+    pipeline consumes its upstream (per-partition order from the log). The
+    batch oracle applies verbatim because the per-batch applies replay the
+    identical day sequence.
+    """
+    import os
+    import tempfile
+
+    from data_warehouse_flink_spark.operators.scd2 import scd2_apply, scd2_init
+    from data_warehouse_flink_spark.streaming.jobs import run_foreach_batch
+    from data_warehouse_flink_spark.streaming.sources import (
+        ordered_replay,
+        source_bytes,
     )
-    def streaming_user_tier_scd2(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """Streaming twin of `user_tier_scd2`: the nightly dimension merge
-        as a continuous job — events replayed one day per micro-batch
-        (`streaming.sources.ordered_replay` over the days in calendar
-        order, the engine's tested replay harness), each batch building its
-        day snapshot and applying it to the running history with
-        `scd2_apply` inside foreachBatch.
-        The history chain localCheckpoints between batches exactly like
-        the batch form, so state never re-plans the whole lineage.
 
-        SCD2 apply is ORDER-DEPENDENT (unlike the mergeable counts/maxes
-        behind the other streaming twins), so the twin's correctness
-        hinges on in-order day delivery — which is precisely how a real
-        CDC-dimension pipeline consumes its upstream (per-partition order
-        from the log). The batch oracle applies verbatim because the
-        per-batch applies replay the identical day sequence.
-        """
-        import os
-        import tempfile
+    # ONE events scan feeds the day-ordered replay (the batch twin's
+    # single-scan discipline): a pushdown-able half-open ts range (the
+    # days are consecutive, so range == the isin over to_date) plus an
+    # eager checkpoint of the dimension-sized slice — the replay's
+    # staging write then reads memory, not parquet.
+    ev = (
+        _events(spark, sf_dir)
+        .filter(
+            (F.col("ts") >= F.lit(_SCD2_DAYS[0]).cast("timestamp"))
+            & (F.col("ts") < F.lit("2024-01-05").cast("timestamp"))
+        )
+        .select("user_id", "ts", "value")
+        .localCheckpoint(eager=True)
+    )
+    with tempfile.TemporaryDirectory(prefix="scd2_stream_") as work:
+        replay = os.path.join(work, "replay")
+        # SCD2 apply is order-dependent: one micro-batch per day, in
+        # calendar order
+        stream = ordered_replay(
+            ev.withColumn("_day", F.to_date("ts").cast("string")),
+            "_day",
+            _SCD2_DAYS,
+            replay,
+        )
+        state: dict = {"hist": None}
 
-        from data_warehouse_flink_spark.io import data_files
-        from data_warehouse_flink_spark.operators.scd2 import (
-            scd2_apply,
-            scd2_init,
-        )
-        from data_warehouse_flink_spark.streaming.jobs import (
-            run_foreach_batch,
-        )
-        from data_warehouse_flink_spark.streaming.sources import (
-            ordered_replay,
-        )
-
-        # ONE events scan feeds the day-ordered replay (the batch twin's
-        # single-scan discipline): a pushdown-able half-open ts range (the
-        # days are consecutive, so range == the isin over to_date) plus an
-        # eager checkpoint of the dimension-sized slice — the replay's
-        # staging write then reads memory, not parquet.
-        ev = (
-            _events(spark, sf_dir)
-            .filter(
-                (F.col("ts") >= F.lit(_SCD2_DAYS[0]).cast("timestamp"))
-                & (F.col("ts") < F.lit("2024-01-05").cast("timestamp"))
-            )
-            .select("user_id", "ts", "value")
-            .localCheckpoint(eager=True)
-        )
-        with tempfile.TemporaryDirectory(prefix="scd2_stream_") as work:
-            replay = os.path.join(work, "replay")
-            # SCD2 apply is order-dependent: one micro-batch per day, in
-            # calendar order
-            stream = ordered_replay(
-                ev.withColumn("_day", F.to_date("ts").cast("string")),
-                "_day",
-                _SCD2_DAYS,
-                replay,
-            )
-            state: dict = {"hist": None}
-
-            def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-                # foreachBatch re-reads the batch's file slice per action
-                # — persist once per batch. The day-floor collect doubles
-                # as the emptiness check (min over no rows is NULL).
-                batch_df.persist()
-                try:
-                    # the batch IS one day, effective from its floor
-                    day_us = batch_df.agg(
-                        F.min(
-                            F.unix_micros(F.date_trunc("DAY", "ts"))
-                        ).alias("d")
-                    ).collect()[0]["d"]
-                    if day_us is None:
-                        return  # empty batch
-                    s = F.sum(F.col("value").cast("decimal(18,6)"))
-                    snap = batch_df.groupBy("user_id").agg(
-                        F.when(s >= 100, "gold")
-                        .when(s >= 10, "silver")
-                        .otherwise("bronze")
-                        .alias("tier")
+        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+            # foreachBatch re-reads the batch's file slice per action —
+            # persist once per batch. The day-floor collect doubles as the
+            # emptiness check (min over no rows is NULL).
+            batch_df.persist()
+            try:
+                # the batch IS one day, effective from its floor
+                day_us = batch_df.agg(
+                    F.min(F.unix_micros(F.date_trunc("DAY", "ts"))).alias("d")
+                ).collect()[0]["d"]
+                if day_us is None:
+                    return  # empty batch
+                s = F.sum(F.col("value").cast("decimal(18,6)"))
+                snap = batch_df.groupBy("user_id").agg(
+                    F.when(s >= 100, "gold")
+                    .when(s >= 10, "silver")
+                    .otherwise("bronze")
+                    .alias("tier")
+                )
+                if state["hist"] is None:
+                    state["hist"] = scd2_init(snap, "user_id", ["tier"], day_us)
+                else:
+                    state["hist"] = scd2_apply(
+                        state["hist"], snap, "user_id", ["tier"], day_us
                     )
-                    if state["hist"] is None:
-                        state["hist"] = scd2_init(
-                            snap, "user_id", ["tier"], day_us
-                        )
-                    else:
-                        state["hist"] = scd2_apply(
-                            state["hist"], snap, "user_id", ["tier"],
-                            day_us,
-                        )
-                    state["hist"] = state["hist"].localCheckpoint(
-                        eager=True
-                    )
-                finally:
-                    batch_df.unpersist()
+                state["hist"] = state["hist"].localCheckpoint(eager=True)
+            finally:
+                batch_df.unpersist()
 
-            # the apply chain's joins run on dimension-sized day slices:
-            # width follows the replay's size
-            run_foreach_batch(
-                stream,
-                per_batch,
-                output_mode="append",
-                input_bytes=sum(
-                    os.path.getsize(f) for f in data_files(replay)
-                ),
-            )
-        return state["hist"].select(
-            "user_id",
-            "tier",
-            "valid_from_us",
-            "valid_to_us",
-            F.col("is_current").cast("long").alias("is_current"),
+        # the apply chain's joins run on dimension-sized day slices:
+        # width follows the replay's size
+        run_foreach_batch(
+            stream,
+            per_batch,
+            output_mode="append",
+            input_bytes=source_bytes(replay),
         )
-
-
-_register_streaming_scd2()
+    return state["hist"].select(
+        "user_id",
+        "tier",
+        "valid_from_us",
+        "valid_to_us",
+        F.col("is_current").cast("long").alias("is_current"),
+    )
 
 
 def classify_event_records(df: DataFrame) -> DataFrame:
@@ -2575,26 +2379,31 @@ def user_churn_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_weekday_hour_heatmap",
-    oracle="""
+def _weekday_hour_cell() -> list:
+    """The heatmap's (weekday, hour) cell key of ``ts``. DuckDB's
+    `dayofweek` is 0=Sunday, Spark's 1=Sunday: aligned via ``- 1``."""
+    return [
+        (F.dayofweek("ts") - 1).cast("long").alias("weekday"),
+        F.hour("ts").cast("long").alias("hour"),
+    ]
+
+
+_EVENTS_WEEKDAY_HOUR_HEATMAP_ORACLE = """
     SELECT dayofweek(ts)::BIGINT AS weekday,
            hour(ts)::BIGINT AS hour,
            count(*)::BIGINT AS n_events,
            count(DISTINCT user_id)::BIGINT AS n_users
     FROM events GROUP BY 1, 2
-    """,
+    """
+
+
+@register(
+    "events_weekday_hour_heatmap", oracle=_EVENTS_WEEKDAY_HOUR_HEATMAP_ORACLE
 )
 def events_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekday × hour activity heatmap (the load-shaping view capacity
-    planning reads): 7×24 exact counts from one rollup. DuckDB
-    `dayofweek` is 0=Sunday; Spark's `dayofweek` is 1=Sunday — aligned
-    via `dayofweek - 1`."""
-    ev = _events(spark, sf_dir)
-    return ev.groupBy(
-        (F.dayofweek("ts") - 1).cast("long").alias("weekday"),
-        F.hour("ts").cast("long").alias("hour"),
-    ).agg(
+    planning reads): 7×24 exact counts from one rollup."""
+    return _events(spark, sf_dir).groupBy(*_weekday_hour_cell()).agg(
         F.count("*").alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
     )
@@ -2651,13 +2460,7 @@ def orders_customer_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_weekday_hour_heatmap",
-    oracle="""
-    SELECT dayofweek(ts)::BIGINT AS weekday,
-           hour(ts)::BIGINT AS hour,
-           count(*)::BIGINT AS n_events,
-           count(DISTINCT user_id)::BIGINT AS n_users
-    FROM events GROUP BY 1, 2
-    """,
+    oracle=_EVENTS_WEEKDAY_HOUR_HEATMAP_ORACLE,
 )
 def streaming_weekday_hour_heatmap(
     spark: SparkSession, sf_dir: str
@@ -2669,22 +2472,15 @@ def streaming_weekday_hour_heatmap(
     from data_warehouse_flink_spark.streaming.jobs import run_stream_to_table
     from data_warehouse_flink_spark.streaming.sources import stream_events
 
-    stream = stream_events(spark, sf_dir)
-    agg = stream.groupBy(
-        (F.dayofweek("ts") - 1).cast("long").alias("weekday"),
-        F.hour("ts").cast("long").alias("hour"),
-    ).agg(F.count("*").alias("n_events"))
+    agg = stream_events(spark, sf_dir).groupBy(*_weekday_hour_cell()).agg(
+        F.count("*").alias("n_events")
+    )
     # exact distincts are not incrementally mergeable in a streaming agg
     # without keeping the id sets; materialize the counts stream, then
     # compute the exact distinct from the source in a batch pass over the
     # SAME grouping (the lambda-architecture reconciliation, one scan)
     mat = run_stream_to_table(agg, spark, output_mode="complete")
-    exact = (
-        _events(spark, sf_dir)
-        .groupBy(
-            (F.dayofweek("ts") - 1).cast("long").alias("weekday"),
-            F.hour("ts").cast("long").alias("hour"),
-        )
-        .agg(F.countDistinct("user_id").alias("n_users"))
+    exact = _events(spark, sf_dir).groupBy(*_weekday_hour_cell()).agg(
+        F.countDistinct("user_id").alias("n_users")
     )
     return mat.join(exact, ["weekday", "hour"])

@@ -47,17 +47,17 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PageView — DW-Flink NetworkFlowAnalysis app/PageView.scala:15-35
 # (filter behavior='pv' → 1 h tumbling count). W2/W7/P3.
 # --------------------------------------------------------------------------
-@register(
-    "page_view",
-    oracle="""
+_PAGE_VIEW_ORACLE = """
     SELECT (epoch_us(ts) // 3600000000) * 3600 AS window_start_sec,
            (epoch_us(ts) // 3600000000) * 3600 + 3600 AS window_end_sec,
            count(*) AS pv
     FROM events
     WHERE event_type = 'view'
     GROUP BY 1, 2
-    """,
-)
+    """
+
+
+@register("page_view", oracle=_PAGE_VIEW_ORACLE)
 def page_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly page views: tumbling event-time window count."""
     ev = _events(spark, sf_dir).filter(F.col("event_type") == "view")
@@ -69,9 +69,7 @@ def page_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (1 h / 5 min sliding count per item, then per-window top-3). W1/G1/G3/T1/T3.
 # Slide widened to 15 min to keep the 4× row replication of pane assignment.
 # --------------------------------------------------------------------------
-@register(
-    "hot_items_topn",
-    oracle="""
+_HOT_ITEMS_TOPN_ORACLE = """
     WITH assigned AS (
       SELECT ((epoch_us(ts) // 900000000) - g.k) * 900 AS window_start_sec,
              user_id
@@ -88,8 +86,10 @@ def page_view(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS rn
     FROM counted
     QUALIFY rn <= 3
-    """,
-)
+    """
+
+
+@register("hot_items_topn", oracle=_HOT_ITEMS_TOPN_ORACLE)
 def hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 hottest entities per 1 h sliding window (5→15 min slide)."""
     ev = _events(spark, sf_dir).filter(F.col("event_type") == "view")
@@ -161,17 +161,17 @@ def network_flow_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # UniqueVisitor — DW-Flink NetworkFlowAnalysis app/UniqueVisitor.scala:20-48
 # (1 h tumbling exact UV). W3/W8.
 # --------------------------------------------------------------------------
-@register(
-    "unique_visitors",
-    oracle="""
+_UNIQUE_VISITORS_ORACLE = """
     SELECT (epoch_us(ts) // 3600000000) * 3600 AS window_start_sec,
            (epoch_us(ts) // 3600000000) * 3600 + 3600 AS window_end_sec,
            count(DISTINCT user_id) AS uv
     FROM events
     WHERE event_type = 'view'
     GROUP BY 1, 2
-    """,
-)
+    """
+
+
+@register("unique_visitors", oracle=_UNIQUE_VISITORS_ORACLE)
 def unique_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly unique visitors: exact per-window distinct count."""
     ev = _events(spark, sf_dir).filter(F.col("event_type") == "view")
@@ -508,9 +508,7 @@ def tx_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # app/TxMatchWithJoin.scala:42-47 (15 s tumbling window join → 15 min here).
 # J2.
 # --------------------------------------------------------------------------
-@register(
-    "tx_match_window_join",
-    oracle="""
+_TX_MATCH_WINDOW_JOIN_ORACLE = """
     WITH pays AS (
       SELECT user_id, (epoch_us(ts) // 900000000) * 900 AS window_start_sec,
              event_id AS pay_event_id, epoch_us(ts) AS pay_us
@@ -524,8 +522,10 @@ def tx_match(spark: SparkSession, sf_dir: str) -> DataFrame:
            p.pay_event_id, p.pay_us, r.receipt_event_id, r.receipt_us
     FROM pays p JOIN receipts r
       ON p.user_id = r.user_id AND p.window_start_sec = r.window_start_sec
-    """,
-)
+    """
+
+
+@register("tx_match_window_join", oracle=_TX_MATCH_WINDOW_JOIN_ORACLE)
 def tx_match_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-join of pays and receipts within the same 15 min tumbling window."""
     ev = _events(spark, sf_dir)
@@ -600,33 +600,23 @@ def tx_match_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sink). Same oracle as the batch query: the correctness gate itself checks
 # batch/stream equivalence. SURVEY.md §5.2.
 # --------------------------------------------------------------------------
-@register(
-    "streaming_page_view",
-    oracle="""
-    SELECT (epoch_us(ts) // 3600000000) * 3600 AS window_start_sec,
-           (epoch_us(ts) // 3600000000) * 3600 + 3600 AS window_end_sec,
-           count(*) AS pv
-    FROM events
-    WHERE event_type = 'view'
-    GROUP BY 1, 2
-    """,
-)
+@register("streaming_page_view", oracle=_PAGE_VIEW_ORACLE)
 def streaming_page_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly page views via Structured Streaming, run to completion."""
-    from data_warehouse_flink_spark.streaming.jobs import (
-        run_stream_to_table,
-        streaming_windowed_count,
-    )
+    from data_warehouse_flink_spark.streaming.jobs import run_stream_to_table
     from data_warehouse_flink_spark.streaming.sources import (
         source_bytes,
         stream_events,
     )
 
     stream = stream_events(spark, sf_dir).filter(F.col("event_type") == "view")
-    agg = streaming_windowed_count(stream, "ts", "1 hour", count_alias="pv")
+    agg = windowed_count(
+        stream.withWatermark("ts", "0 seconds"), "ts", "1 hour",
+        count_alias="pv",
+    )
     # hourly state is dimension-sized: width follows the replayed input
     return run_stream_to_table(
-        agg, spark, input_bytes=source_bytes(sf_dir)
+        agg, spark, input_bytes=source_bytes(f"{sf_dir}/events.parquet")
     )
 
 
@@ -672,17 +662,7 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same oracle as the batch query (second batch/stream-equivalence probe in
 # the gate, this one with a distinct aggregation's state store).
 # --------------------------------------------------------------------------
-@register(
-    "streaming_unique_visitors",
-    oracle="""
-    SELECT (epoch_us(ts) // 3600000000) * 3600 AS window_start_sec,
-           (epoch_us(ts) // 3600000000) * 3600 + 3600 AS window_end_sec,
-           count(DISTINCT user_id) AS uv
-    FROM events
-    WHERE event_type = 'view'
-    GROUP BY 1, 2
-    """,
-)
+@register("streaming_unique_visitors", oracle=_UNIQUE_VISITORS_ORACLE)
 def streaming_unique_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly exact UV via Structured Streaming (dropDuplicates + count).
 
@@ -760,22 +740,7 @@ def ad_clicks_by_geo_fine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against the same batch oracle as `tx_match_window_join`.
 # --------------------------------------------------------------------------
 @register(
-    "streaming_tx_match_window_join",
-    oracle="""
-    WITH pays AS (
-      SELECT user_id, (epoch_us(ts) // 900000000) * 900 AS window_start_sec,
-             event_id AS pay_event_id, epoch_us(ts) AS pay_us
-      FROM events WHERE event_type = 'purchase'
-    ), receipts AS (
-      SELECT user_id, (epoch_us(ts) // 900000000) * 900 AS window_start_sec,
-             event_id AS receipt_event_id, epoch_us(ts) AS receipt_us
-      FROM events WHERE event_type = 'signup'
-    )
-    SELECT p.user_id, p.window_start_sec,
-           p.pay_event_id, p.pay_us, r.receipt_event_id, r.receipt_us
-    FROM pays p JOIN receipts r
-      ON p.user_id = r.user_id AND p.window_start_sec = r.window_start_sec
-    """,
+    "streaming_tx_match_window_join", oracle=_TX_MATCH_WINDOW_JOIN_ORACLE
 )
 def streaming_tx_match_window_join(
     spark: SparkSession, sf_dir: str
@@ -816,27 +781,7 @@ def streaming_tx_match_window_join(
 # the batch `hot_items_topn`. (Single-batch replay here; under continuous
 # micro-batches the sink upserts per window — see streaming/mart.py.)
 # --------------------------------------------------------------------------
-@register(
-    "streaming_hot_items_topn",
-    oracle="""
-    WITH assigned AS (
-      SELECT ((epoch_us(ts) // 900000000) - g.k) * 900 AS window_start_sec,
-             user_id
-      FROM events CROSS JOIN generate_series(0, 3) g(k)
-      WHERE event_type = 'view'
-    ), counted AS (
-      SELECT window_start_sec + 3600 AS window_end_sec, user_id,
-             count(*) AS cnt
-      FROM assigned GROUP BY 1, 2
-    )
-    SELECT window_end_sec, user_id, cnt,
-           CAST(row_number() OVER (
-             PARTITION BY window_end_sec ORDER BY cnt DESC, user_id) AS BIGINT
-           ) AS rn
-    FROM counted
-    QUALIFY rn <= 3
-    """,
-)
+@register("streaming_hot_items_topn", oracle=_HOT_ITEMS_TOPN_ORACLE)
 def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 per sliding window via the streaming foreachBatch-rank idiom.
 
@@ -855,7 +800,6 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehouse_flink_spark.streaming.jobs import (
         has_committed_data,
         overwrite_touched_partitions,
-        streaming_windowed_count,
     )
     from data_warehouse_flink_spark.streaming.mart import (
         streaming_topn_foreachbatch,
@@ -863,8 +807,9 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehouse_flink_spark.streaming.sources import stream_events
 
     stream = stream_events(spark, sf_dir).filter(F.col("event_type") == "view")
-    counts = streaming_windowed_count(
-        stream, "ts", "1 hour", slide="15 minutes", keys=["user_id"]
+    counts = windowed_count(
+        stream.withWatermark("ts", "0 seconds"), "ts", "1 hour",
+        slide="15 minutes", keys=["user_id"],
     )
     with tempfile.TemporaryDirectory(prefix="topn_state_") as work:
         ranked_path = os.path.join(work, "mart")
@@ -924,10 +869,7 @@ def streaming_update_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from data_warehouse_flink_spark.io import table as load_table
-    from data_warehouse_flink_spark.streaming.jobs import (
-        run_stream_to_table,
-        streaming_windowed_count,
-    )
+    from data_warehouse_flink_spark.streaming.jobs import run_stream_to_table
     from data_warehouse_flink_spark.streaming.sources import ordered_replay
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -947,8 +889,9 @@ def streaming_update_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
         # watermark far beyond the data span: no group is ever late-dropped,
         # so update mode reduces to pure emit-on-change (the FIRE_AND_PURGE
         # analogue)
-        counts = streaming_windowed_count(
-            stream, "ts", "1 hour", keys=["user_id"], watermark="3650 days"
+        counts = windowed_count(
+            stream.withWatermark("ts", "3650 days"), "ts", "1 hour",
+            keys=["user_id"],
         )
         return run_stream_to_table(counts, spark, output_mode="update")
 
@@ -992,24 +935,18 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from data_warehouse_flink_spark.streaming.jobs import (
         run_stream_to_table,
-        with_watermark,
+        streaming_session_count,
     )
     from data_warehouse_flink_spark.streaming.sources import stream_events
 
     gap_us = 21_600_000_000  # 6 h, matching the batch gate
-    stream = with_watermark(stream_events(spark, sf_dir), "ts", "0 seconds")
-    agg = (
-        stream.groupBy(
-            F.session_window("ts", "6 hours"), F.col("user_id")
-        ).agg(F.count("*").alias("n_events"))
-    )
-    out = agg.select(
+    out = streaming_session_count(
+        stream_events(spark, sf_dir), "ts", "6 hours", keys=["user_id"]
+    ).select(
         "user_id",
         "n_events",
-        F.unix_micros(F.col("session_window.start")).alias("start_us"),
-        (F.unix_micros(F.col("session_window.end")) - F.lit(gap_us)).alias(
-            "end_us"
-        ),
+        F.col("session_start_us").alias("start_us"),
+        (F.col("session_end_us") - F.lit(gap_us)).alias("end_us"),
     )
     return run_stream_to_table(out, spark, output_mode="complete")
 

@@ -1,17 +1,16 @@
-"""Streaming job assembly: watermarked windowed aggregations and the one
-availableNow runner (SURVEY.md §4.2).
+"""Streaming job assembly: the one availableNow runner (SURVEY.md §4.2).
 
 Every batch operator in ``operators/windows.py`` runs unchanged on a
-streaming DataFrame — Catalyst plans the same windowed aggregate with a
-state store behind it. The helpers here add the streaming-only pieces:
-watermark assignment (the reference's assignAscendingTimestamps /
-BoundedOutOfOrdernessTimestampExtractor, SURVEY.md §2.2 P7), the runner
-every availableNow query in the package starts through
+streaming DataFrame: a stream plus ``withWatermark`` (the reference's
+assignAscendingTimestamps / BoundedOutOfOrdernessTimestampExtractor,
+SURVEY.md §2.2 P7) gets the same windowed aggregate from Catalyst, with a
+state store behind it. The helpers here add the streaming-only pieces: the
+runner every availableNow query in the package starts through
 (`run_foreach_batch` / `run_stream_to_table`, which also own the stateful
-width scope), the committed-data check for parquet state tables
-(`has_committed_data`) and the one dynamic partition overwrite
-(`overwrite_touched_partitions`). The foreachBatch sinks built on them,
-the top-N ranker included, live in ``streaming/mart.py``.
+width scope), the session-window count, the committed-data check for
+parquet state tables (`has_committed_data`) and the one dynamic partition
+overwrite (`overwrite_touched_partitions`). The foreachBatch sinks built on
+them, the top-N ranker included, live in ``streaming/mart.py``.
 """
 
 from __future__ import annotations
@@ -24,12 +23,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-
-
-def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
-    """P7: bounded-out-of-orderness watermark (ascending sources use '0
-    seconds', mirroring assignAscendingTimestamps)."""
-    return df.withWatermark(ts_col, delay)
 
 
 _SIZE_UNITS = {
@@ -190,35 +183,6 @@ def has_committed_data(spark: SparkSession, path: str) -> bool:
     return fs.exists(hpath) and any(
         not st.getPath().getName().startswith(("_", "."))
         for st in fs.listStatus(hpath)
-    )
-
-
-def streaming_windowed_count(
-    stream: DataFrame,
-    ts_col: str,
-    size: str,
-    slide: str | None = None,
-    keys: list[str] | None = None,
-    watermark: str = "0 seconds",
-    count_alias: str = "cnt",
-) -> DataFrame:
-    """W1/W2 on a stream: watermarked sliding/tumbling count.
-
-    Same shape as operators.windows.windowed_count; update/complete output
-    mode reproduces the reference's per-pane emission (W10 FIRE_AND_PURGE
-    becomes update-mode emit-on-change for free).
-    """
-    keys = keys or []
-    wm = with_watermark(stream, ts_col, watermark)
-    win = F.window(ts_col, size, slide) if slide else F.window(ts_col, size)
-    agg = wm.groupBy(win, *[F.col(k) for k in keys]).agg(
-        F.count("*").alias(count_alias)
-    )
-    return agg.select(
-        F.unix_timestamp("window.start").alias("window_start_sec"),
-        F.unix_timestamp("window.end").alias("window_end_sec"),
-        *keys,
-        count_alias,
     )
 
 

@@ -173,7 +173,7 @@ def streaming_topn_foreachbatch(
     buffer, DW-Flink HotItemsAnalysis app/HotItems.scala:82-134): merge key
     = every column but `order_col`, bucket = the time range of
     ``partition_cols[0]`` (the window's epoch seconds, as
-    `streaming_windowed_count` emits) in `_TOPN_BUCKET_SPAN_S` steps, so a
+    `windowed_count` emits) in `_TOPN_BUCKET_SPAN_S` steps, so a
     window's counts never span two buckets and a batch of recent windows
     touches only the latest one or two ranges, never older history. Each
     micro-batch `merge_into_buckets` returns the merged counts of the

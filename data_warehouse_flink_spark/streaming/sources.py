@@ -22,15 +22,11 @@ from pyspark.sql import functions as F
 from data_warehouse_flink_spark.io import data_files
 
 
-def source_bytes(sf_dir: str, table: str = "events") -> int:
-    """On-disk size of a replayed source — the input-volume proxy the
-    streaming runner's ``input_bytes`` sizes a stateful stream's shuffle
-    width from. Handles both the single-file testdata layout and a
-    directory of part files."""
-    return sum(
-        os.path.getsize(f)
-        for f in data_files(os.path.join(sf_dir, f"{table}.parquet"))
-    )
+def source_bytes(path: str) -> int:
+    """On-disk size of a replayed source, a single-file table or a
+    directory of part files: the input-volume proxy the streaming runner's
+    ``input_bytes`` sizes a stateful stream's shuffle width from."""
+    return sum(os.path.getsize(f) for f in data_files(path))
 
 
 def ordered_replay(

@@ -590,3 +590,47 @@ def test_session_state_lives_in_one_memo():
         and empty_dict(node.value)
     )
     assert stores == []
+
+
+def test_equal_oracles_are_one_shared_string():
+    """A streaming twin shares its batch twin's oracle (a stream's output
+    equals the batch query over the same input), and it shares the one
+    string: two registered oracles equal after whitespace normalization
+    must be the same object. CPython merges byte-equal string constants of
+    a module into one object, so a pasted copy is also caught in the
+    source: no registered oracle's text may appear as more than one string
+    literal across the query modules."""
+    import ast
+    import importlib
+    import inspect
+    from collections import Counter
+
+    from data_warehouse_flink_spark import registry
+
+    def norm(text: str) -> str:
+        return " ".join(text.split())
+
+    by_text: dict[str, list] = {}
+    for name, oracle in registry.oracles().items():
+        by_text.setdefault(norm(oracle), []).append((name, oracle))
+    copies = sorted(
+        [name for name, _ in group]
+        for group in by_text.values()
+        if len({id(oracle) for _, oracle in group}) > 1
+    )
+    assert copies == []
+
+    literals = Counter(
+        norm(node.value)
+        for mod in registry._QUERY_MODULES
+        for node in ast.walk(
+            ast.parse(inspect.getsource(importlib.import_module(mod)))
+        )
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+    )
+    pasted = sorted(
+        [name for name, _ in by_text[text]]
+        for text, n in literals.items()
+        if n > 1 and text in by_text
+    )
+    assert pasted == []

@@ -216,10 +216,7 @@ def test_network_flow_streaming_matches_batch(spark, tmp_path, generated):
     import shutil
 
     from data_warehouse_flink_spark.operators.windows import windowed_count
-    from data_warehouse_flink_spark.streaming.jobs import (
-        run_stream_to_table,
-        streaming_windowed_count,
-    )
+    from data_warehouse_flink_spark.streaming.jobs import run_stream_to_table
 
     log_dir = tmp_path / "logs"
     log_dir.mkdir()
@@ -241,9 +238,9 @@ def test_network_flow_streaming_matches_batch(spark, tmp_path, generated):
     stream = readers.apache_log(spark, str(log_dir), streaming=True).filter(
         ~F.col("url").rlike(r"\.(css|js)$")
     )
-    agg = streaming_windowed_count(
-        stream, "event_time", "10 minutes", slide="5 minutes",
-        keys=["url"], watermark="1 second", count_alias="cnt",
+    agg = windowed_count(
+        stream.withWatermark("event_time", "1 second"), "event_time",
+        "10 minutes", slide="5 minutes", keys=["url"], count_alias="cnt",
     )
     got = (
         run_stream_to_table(agg, spark)

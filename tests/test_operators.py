@@ -104,10 +104,6 @@ def test_out_of_order_replay_invariance(spark, tmp_path):
     """Bounded-disorder replay must not change windowed-agg results
     (SURVEY.md §5.2 property). Deterministic seeds stand in for hypothesis
     here — each seed is a different disorder pattern."""
-    from data_warehouse_flink_spark.streaming.jobs import (
-        streaming_windowed_count,
-    )
-
     base = [
         {"user_id": i % 5, "ts": sec(i * 7 + (i % 3))} for i in range(60)
     ]
@@ -131,8 +127,9 @@ def test_out_of_order_replay_invariance(spark, tmp_path):
         stream = _write_stream_dir(
             tmp_path, spark, rows, schema, f"ooo{seed}"
         )
-        agg = streaming_windowed_count(
-            stream, "ts", "1 minute", keys=["user_id"], watermark="10 seconds"
+        agg = windowed_count(
+            stream.withWatermark("ts", "10 seconds"), "ts", "1 minute",
+            keys=["user_id"],
         )
         got = (
             run_stream_to_table(agg, spark)
@@ -403,10 +400,8 @@ def test_multimodal_frame_sampling_and_resize(spark):
 def test_late_beyond_watermark_rows_dropped(spark, tmp_path):
     """SURVEY §5.2: rows later than the watermark bound are dropped
     deterministically by streaming aggregation (batch keeps them)."""
-    from data_warehouse_flink_spark.streaming.jobs import (
-        run_stream_to_table,
-        streaming_windowed_count,
-    )
+    from data_warehouse_flink_spark.operators.windows import windowed_count
+    from data_warehouse_flink_spark.streaming.jobs import run_stream_to_table
 
     schema = "user_id long, ts timestamp"
     on_time = [{"user_id": 1, "ts": sec(i * 10)} for i in range(12)]
@@ -429,8 +424,9 @@ def test_late_beyond_watermark_rows_dropped(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    agg = streaming_windowed_count(
-        stream, "ts", "1 minute", keys=["user_id"], watermark="30 seconds"
+    agg = windowed_count(
+        stream.withWatermark("ts", "30 seconds"), "ts", "1 minute",
+        keys=["user_id"],
     )
     # append mode: a window is emitted once, when the watermark closes it;
     # late rows for closed windows are dropped. (Complete mode would keep

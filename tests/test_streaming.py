@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from data_warehouse_flink_spark.operators.windows import windowed_count
 from data_warehouse_flink_spark.io import table
-from data_warehouse_flink_spark.streaming.jobs import (
-    run_stream_to_table,
-    streaming_windowed_count,
-)
+from data_warehouse_flink_spark.streaming.jobs import run_stream_to_table
 from data_warehouse_flink_spark.streaming.mart import (
     streaming_topn_foreachbatch,
 )
@@ -61,7 +58,9 @@ def read_replay(spark, path: str, schema: str):
 
 def test_streaming_page_view_matches_batch(spark):
     stream = stream_events(spark, SF_SMOKE).filter(F.col("event_type") == "view")
-    agg = streaming_windowed_count(stream, "ts", "1 hour", count_alias="pv")
+    agg = windowed_count(
+        stream.withWatermark("ts", "0 seconds"), "ts", "1 hour", count_alias="pv"
+    )
     got = (
         run_stream_to_table(agg, spark)
         .toPandas()
@@ -80,8 +79,9 @@ def test_streaming_page_view_matches_batch(spark):
 
 def test_streaming_sliding_count_matches_batch(spark):
     stream = stream_events(spark, SF_SMOKE).filter(F.col("event_type") == "view")
-    agg = streaming_windowed_count(
-        stream, "ts", "1 hour", slide="15 minutes", keys=["user_id"]
+    agg = windowed_count(
+        stream.withWatermark("ts", "0 seconds"), "ts", "1 hour",
+        slide="15 minutes", keys=["user_id"],
     )
     got = (
         run_stream_to_table(agg, spark)
@@ -188,8 +188,9 @@ def test_tx_match_stream(spark, tmp_path):
 
 def test_streaming_topn_foreachbatch(spark, tmp_path):
     stream = stream_events(spark, SF_SMOKE).filter(F.col("event_type") == "view")
-    counts = streaming_windowed_count(
-        stream, "ts", "1 hour", slide="15 minutes", keys=["user_id"]
+    counts = windowed_count(
+        stream.withWatermark("ts", "0 seconds"), "ts", "1 hour",
+        slide="15 minutes", keys=["user_id"],
     )
     batches: list[pd.DataFrame] = []
 
@@ -595,9 +596,6 @@ def test_streaming_topn_correct_across_batches(spark, tmp_path):
     """The review-found bug: update-mode batches carry only CHANGED rows, so
     ranking a batch alone crowns whatever changed. The accumulator must keep
     the true leader on top when a later batch updates only a trailing key."""
-    from data_warehouse_flink_spark.streaming.jobs import (
-        streaming_windowed_count,
-    )
     from data_warehouse_flink_spark.streaming.mart import (
         streaming_topn_foreachbatch,
     )
@@ -617,8 +615,8 @@ def test_streaming_topn_correct_across_batches(spark, tmp_path):
         1
     ).write.mode("append").parquet(path)
     stream = read_replay(spark, path, schema)
-    counts = streaming_windowed_count(
-        stream, "ts", "1 minute", keys=["user_id"], watermark="1 hour"
+    counts = windowed_count(
+        stream.withWatermark("ts", "1 hour"), "ts", "1 minute", keys=["user_id"]
     )
     results: list = []
 
@@ -649,9 +647,6 @@ def test_streaming_topn_carries_other_windows_of_a_touched_bucket(
     in an older bucket: batch 2 must neither rewrite nor re-rank it."""
     from data_warehouse_flink_spark.operators.topn import top_n_per_group
     from data_warehouse_flink_spark.streaming import mart
-    from data_warehouse_flink_spark.streaming.jobs import (
-        streaming_windowed_count,
-    )
 
     # two one-minute windows at the start of one bucket's time range
     span = mart._TOPN_BUCKET_SPAN_S
@@ -681,9 +676,9 @@ def test_streaming_topn_carries_other_windows_of_a_touched_bucket(
         spark.createDataFrame(pd.DataFrame(rows), schema=schema).coalesce(
             1
         ).write.mode(mode).parquet(src)
-    counts = streaming_windowed_count(
-        read_replay(spark, src, schema), "ts", "1 minute",
-        keys=["user_id"], watermark="1 hour",
+    counts = windowed_count(
+        read_replay(spark, src, schema).withWatermark("ts", "1 hour"),
+        "ts", "1 minute", keys=["user_id"],
     )
     results: list = []
     state = str(tmp_path / "state")
