@@ -50,17 +50,12 @@ from pyspark.sql import functions as F
 QUANT_SCALE = 1_000_000
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    scale: int = QUANT_SCALE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame, scale: int = QUANT_SCALE) -> DataFrame:
     """(id, q: array<bigint>) with q_d = FLOOR(DOUBLE(x_d) * scale)."""
     return df.select(
-        id_col,
+        "vec_id",
         F.expr(
-            f"transform({vec_col}, "
+            "transform(embedding, "
             f"x -> CAST(FLOOR(CAST(x AS DOUBLE) * {scale}.0) AS BIGINT))"
         ).alias("q"),
     )
@@ -81,20 +76,18 @@ def _best_cell_sql(centroids: list[list[int]], vec_sql: str = "q") -> str:
     return f"array_min(array({structs}))"
 
 
-def _best_cell(centroids: list[list[int]], vec_sql: str = "q"):
-    """`_best_cell_sql` as a Column. A pure literal expression: any
-    projection using it stays map-only."""
-    return F.expr(_best_cell_sql(centroids, vec_sql))
+def _best_cell(centroids: list[list[int]]):
+    """`_best_cell_sql` over `q` as a Column. A pure literal expression:
+    any projection using it stays map-only."""
+    return F.expr(_best_cell_sql(centroids))
 
 
-def assign_quantized_cells(
-    qdf: DataFrame, centroids: list[list[int]], id_col: str = "vec_id"
-) -> DataFrame:
+def assign_quantized_cells(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """(id, cell, dist): nearest centroid by integer squared L2, ties to the
     lower cell id. Map-only — centroids ride as literals, no shuffle."""
     best = _best_cell(centroids)
     return qdf.select(
-        id_col,
+        "vec_id",
         best.getField("cell").alias("cell"),
         best.getField("dist").alias("dist"),
     )
@@ -133,12 +126,11 @@ def kmeans_quantized_train(
     qdf: DataFrame,
     k: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
 ) -> list[list[int]]:
     """`iters` Lloyd iterations over a quantized embedding table; returns
     the final centroid matrix (k × dim ints). Init: the quantized vectors
     of the k smallest ids, cell index in id order."""
-    init_rows = qdf.orderBy(id_col).limit(k).collect()
+    init_rows = qdf.orderBy("vec_id").limit(k).collect()
     if len(init_rows) < k:
         raise ValueError(f"need at least k={k} vectors, got {len(init_rows)}")
     centroids = [list(r["q"]) for r in init_rows]
@@ -227,7 +219,6 @@ def pq_kmeans_fused_train(
     sub_dim: int = 8,
     k: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
 ) -> list[list[list[int]]]:
     """All M per-subspace Lloyd runs fused into one scan per iteration —
     the production shape `kmeans_quantized_train`-per-slice documents but
@@ -238,7 +229,7 @@ def pq_kmeans_fused_train(
     lower-cell ties, same FLOOR(s/n) update with empty-cell
     carry-forward. Driver materializes M·k·(sub_dim+1) ints per
     iteration — the model."""
-    init_rows = qdf.orderBy(id_col).limit(k).collect()
+    init_rows = qdf.orderBy("vec_id").limit(k).collect()
     if len(init_rows) < k:
         raise ValueError(f"need at least k={k} vectors, got {len(init_rows)}")
     dim = len(init_rows[0]["q"])
@@ -315,7 +306,6 @@ def pq_trained_codes(
     qdf: DataFrame,
     books: list[list[list[int]]],
     sub_dim: int = 8,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(id, code0..code{M-1}) under trained codebooks — the compressed
     corpus representation (M small ints per vector; the floats stay in
@@ -331,14 +321,13 @@ def pq_trained_codes(
         ).alias(f"code{m}")
         for m, book in enumerate(books)
     ]
-    return qdf.select(id_col, *codes)
+    return qdf.select("vec_id", *codes)
 
 
 def pq_query_lookup(
     qdf: DataFrame,
     books: list[list[list[int]]],
     sub_dim: int = 8,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(id, dl0..dl{M-1}) — each query's per-subspace integer ADC lookup
     arrays (its exact distances to every codeword). Query-side only:
@@ -348,7 +337,7 @@ def pq_query_lookup(
         F.expr(dl).alias(f"dl{m}")
         for m, dl in enumerate(_adc_dist_exprs(books, sub_dim))
     ]
-    return qdf.select(id_col, *dls)
+    return qdf.select("vec_id", *dls)
 
 
 def adc_topk(
@@ -356,7 +345,6 @@ def adc_topk(
     lookups: DataFrame,
     k: int = 5,
     m_subspaces: int = 8,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Top-k by asymmetric distance: corpus codes join the broadcast
     query lookup tables; a candidate's distance is M array lookups
@@ -366,11 +354,11 @@ def adc_topk(
     from pyspark.sql import Window
 
     corpus = codes.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         *[F.col(f"code{m}") for m in range(m_subspaces)],
     )
     qs = lookups.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         *[F.col(f"dl{m}") for m in range(m_subspaces)],
     )
     adc = None

@@ -19,11 +19,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# The MinHash family shared by every MinHash gate, the streaming ledger and
+# the DuckDB oracle generators: 64 hashes, banded 16 bands x 4 rows.
+NUM_HASHES = 64
+BANDS = 16
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
+
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by content hash; canonical = min doc_id."""
     return (
-        df.select("doc_id", F.md5(F.lower(F.col(text_col))).alias("text_hash"))
+        df.select("doc_id", F.md5(F.lower(F.col("text"))).alias("text_hash"))
         .groupBy("text_hash")
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),
@@ -32,9 +37,7 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def word_ngrams(
-    df: DataFrame, n: int, text_col: str = "text", distinct: bool = True
-) -> DataFrame:
+def word_ngrams(df: DataFrame, n: int, distinct: bool = True) -> DataFrame:
     """(doc_id, gram) pairs — word n-gram shingles per doc, distinct by
     default.
 
@@ -48,9 +51,7 @@ def word_ngrams(
     duplicates then flow through the scan-local explode unharmed and the
     plan stays shuffle-free until something genuinely needs a key.
     """
-    toked = df.select(
-        "doc_id", F.split(F.col(text_col), " ").alias("_toks")
-    )
+    toked = df.select("doc_id", F.split(F.col("text"), " ").alias("_toks"))
     # guard: documents with fewer than n tokens yield no shingles (a bare
     # sequence(0, size-n) would descend through -1 and crash slice())
     grams = F.expr(
@@ -66,7 +67,6 @@ def word_ngrams(
 def jaccard_pairs(
     grams: DataFrame,
     threshold: float,
-    id_col: str = "doc_id",
     df_cap: int | None = None,
     hash_grams: bool = True,
 ) -> DataFrame:
@@ -100,7 +100,7 @@ def jaccard_pairs(
     `hash_grams=False` keeps the string path for the pin's A/B arm.
     """
     if hash_grams:
-        grams = grams.select(id_col, F.xxhash64("gram").alias("gram"))
+        grams = grams.select("doc_id", F.xxhash64("gram").alias("gram"))
     # The gram table feeds up to six consumers (sizes, the hot list, both
     # sides of the candidate join, both sides of the hot correction);
     # without materialization each one re-runs the scan+tokenize+explode
@@ -109,7 +109,7 @@ def jaccard_pairs(
     # hides the rescans; the win is the scan count at scale). Hashing
     # BEFORE the checkpoint also shrinks the materialized blocks ~3×.
     grams = grams.localCheckpoint(eager=True)
-    sizes = grams.groupBy(id_col).agg(F.count("*").alias("n"))
+    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n"))
     if df_cap is not None:
         # the hot list has ≤ |grams|/df_cap entries by construction, so it
         # broadcasts; the rare/hot split then costs no shuffle of `grams`
@@ -121,16 +121,16 @@ def jaccard_pairs(
         )
         rare = grams.join(F.broadcast(hot_list), "gram", "left_anti")
         hot = grams.join(F.broadcast(hot_list), "gram")
-        a = rare.select(F.col(id_col).alias("doc_a"), "gram")
-        b = rare.select(F.col(id_col).alias("doc_b"), "gram")
+        a = rare.select(F.col("doc_id").alias("doc_a"), "gram")
+        b = rare.select(F.col("doc_id").alias("doc_b"), "gram")
         common_rare = (
             a.join(b, on="gram")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").alias("c_rare"))
         )
-        ha = hot.select(F.col(id_col).alias("doc_a"), "gram")
-        hb = hot.select(F.col(id_col).alias("doc_b"), "gram")
+        ha = hot.select(F.col("doc_id").alias("doc_a"), "gram")
+        hb = hot.select(F.col("doc_id").alias("doc_b"), "gram")
         common_hot = (
             common_rare.select("doc_a", "doc_b")
             .join(ha, "doc_a")
@@ -149,16 +149,16 @@ def jaccard_pairs(
             )
         )
     else:
-        a = grams.select(F.col(id_col).alias("doc_a"), "gram")
-        b = grams.select(F.col(id_col).alias("doc_b"), "gram")
+        a = grams.select(F.col("doc_id").alias("doc_a"), "gram")
+        b = grams.select(F.col("doc_id").alias("doc_b"), "gram")
         common = (
             a.join(b, on="gram")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").alias("c"))
         )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("nb"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
     return (
         common.join(sa, "doc_a")
@@ -168,11 +168,11 @@ def jaccard_pairs(
     )
 
 
-def _affine_constants(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+def _affine_constants(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic odd multipliers + offsets for the affine hash family."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     p = 2_147_483_647  # 2^31 - 1 (Mersenne prime): a*g+b < 2^62, ANSI-safe
     consts = []
     for _ in range(num_hashes):
@@ -183,10 +183,7 @@ def _affine_constants(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
 
 
 def minhash_signatures(
-    grams: DataFrame,
-    num_hashes: int = 64,
-    id_col: str = "doc_id",
-    gram_hash: str = "xxhash64",
+    grams: DataFrame, num_hashes: int = NUM_HASHES, gram_hash: str = "xxhash64"
 ) -> DataFrame:
     """MinHash signature per doc: sig[i] = min over shingles of h_i(gram).
 
@@ -209,7 +206,7 @@ def minhash_signatures(
         g = F.expr("CAST(conv(substr(md5(gram), 1, 7), 16, 10) AS BIGINT)")
     else:
         raise ValueError(f"unknown gram_hash {gram_hash!r}")
-    base = grams.select(id_col, g.alias("g"))
+    base = grams.select("doc_id", g.alias("g"))
     prime = 2_147_483_647
     mins = [
         F.min(F.pmod(F.col("g") * F.lit(a) + F.lit(b), F.lit(prime))).alias(
@@ -217,18 +214,17 @@ def minhash_signatures(
         )
         for i, (a, b) in enumerate(_affine_constants(num_hashes))
     ]
-    sig = base.groupBy(id_col).agg(*mins)
+    sig = base.groupBy("doc_id").agg(*mins)
     return sig.select(
-        id_col,
+        "doc_id",
         F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature"),
     )
 
 
 def band_keys(
     signatures: DataFrame,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    id_col: str = "doc_id",
+    bands: int = BANDS,
+    rows_per_band: int = NUM_HASHES // BANDS,
 ) -> DataFrame:
     """LSH banding: one (id, band, bucket) row per signature band, where
     bucket = hash of the band's signature slice. Two docs are LSH
@@ -250,15 +246,14 @@ def band_keys(
         ]
     )
     return signatures.select(
-        id_col, F.posexplode(bands_col).alias("band", "bucket")
+        "doc_id", F.posexplode(bands_col).alias("band", "bucket")
     )
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    id_col: str = "doc_id",
+    bands: int = BANDS,
+    rows_per_band: int = NUM_HASHES // BANDS,
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs sharing any band bucket.
 
@@ -266,11 +261,9 @@ def lsh_candidate_pairs(
     follow collision probability, not corpus size. Dedup of pairs found in
     multiple bands via distinct.
     """
-    banded = band_keys(signatures, bands, rows_per_band, id_col)
-    left = banded.select(
-        F.col(id_col).alias("doc_a"), "band", "bucket"
-    )
-    right = banded.select(F.col(id_col).alias("doc_b"), "band", "bucket")
+    banded = band_keys(signatures, bands, rows_per_band)
+    left = banded.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
+    right = banded.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
     return (
         left.join(right, on=["band", "bucket"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -283,7 +276,6 @@ def verify_jaccard_on_candidates(
     candidates: DataFrame,
     grams: DataFrame,
     threshold: float,
-    id_col: str = "doc_id",
     hash_grams: bool = True,
 ) -> DataFrame:
     """Exact Jaccard for an explicit candidate-pair set only.
@@ -302,14 +294,10 @@ def verify_jaccard_on_candidates(
     url-dedup key swaps, applied to payload bytes instead of key bytes.
     """
     if hash_grams:
-        grams = grams.select(id_col, F.xxhash64("gram").alias("gram"))
-    sets = grams.groupBy(id_col).agg(F.collect_set("gram").alias("gs"))
-    a = sets.select(
-        F.col(id_col).alias("doc_a"), F.col("gs").alias("ga")
-    )
-    b = sets.select(
-        F.col(id_col).alias("doc_b"), F.col("gs").alias("gb")
-    )
+        grams = grams.select("doc_id", F.xxhash64("gram").alias("gram"))
+    sets = grams.groupBy("doc_id").agg(F.collect_set("gram").alias("gs"))
+    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("ga"))
+    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gb"))
     common = F.size(F.array_intersect("ga", "gb"))
     union = F.size("ga") + F.size("gb") - common
     jac = common.cast("double") / union
@@ -321,9 +309,9 @@ def verify_jaccard_on_candidates(
     )
 
 
-def _check_signature_width(signatures: DataFrame, num_hashes: int) -> None:
+def _check_signature_width(signatures: DataFrame) -> None:
     """Raise if a caller-supplied signature table's width differs from the
-    declared num_hashes the banding math will use — on ANY row, not just
+    NUM_HASHES the banding math uses — on ANY row, not just
     the first (a ragged table from a bad union/cache would pass a first()
     probe whenever its first row happened to match). One min/max aggregate
     on what is always a session-cached (localCheckpointed) table — a small
@@ -346,26 +334,23 @@ def _check_signature_width(signatures: DataFrame, num_hashes: int) -> None:
             f"signature rows (of {row['n_rows']}); banding would emit "
             f"NULL buckets"
         )
-    if row["lo"] != num_hashes or row["hi"] != num_hashes:
+    if row["lo"] != NUM_HASHES or row["hi"] != NUM_HASHES:
         raise ValueError(
             f"signatures table has widths in [{row['lo']}, {row['hi']}] "
-            f"but num_hashes={num_hashes}; banding would read past the "
+            f"but num_hashes={NUM_HASHES}; banding would read past the "
             f"array (NULL buckets) or ignore part of the signature"
         )
 
 
 def minhash_lsh_dedup(
     df: DataFrame,
-    ngram: int = 3,
     threshold: float = 0.3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    text_col: str = "text",
     gram_hash: str = "xxhash64",
     grams: DataFrame | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
-    """Full MinHash→LSH→verify pipeline: near-dup pairs with exact Jaccard.
+    """Full MinHash→LSH→verify pipeline over word trigrams: near-dup pairs
+    with exact Jaccard.
 
     Candidates come from LSH bands only; exact Jaccard (array_intersect over
     the candidate pairs, not the full inverted index) verifies them, so the
@@ -386,36 +371,31 @@ def minhash_lsh_dedup(
     3.12 s → 1.96 s per call at sf0.1 when three invocations share one
     table (SCALING.md round-7). The caller owns materialization then; an
     unmaterialized frame would silently reintroduce the 6-scan lineage.
-    When `grams` is provided, `ngram`/`text_col`/`df` are IGNORED — the
-    shingle config is whatever the caller baked into the table, so a
-    grams/ngram mismatch at a call site is silent by design; call sites
-    should not pass ngram alongside grams (ADVICE r7 #3).
+    When `grams` is provided, `df` is IGNORED — the shingle config is
+    whatever the caller baked into the table (ADVICE r7 #3).
 
     `signatures`: optionally pass an already-materialized signature table
     for the SAME grams (e.g. a session cache shared with the recall audit
     and the incremental gate) — skips the 64-min aggregation, the
-    pipeline's dominant stage. `gram_hash` is then ignored, but
-    `num_hashes` must MATCH the table's signature width (validated —
+    pipeline's dominant stage. `gram_hash` is then ignored, but the
+    table's signature width must be NUM_HASHES (validated —
     banding silently degenerates otherwise: getItem past the end is
     NULL, concat_ws drops NULLs, and the affected bands collide
     everything into one bucket).
     """
     if grams is None:
-        grams = word_ngrams(df, ngram, text_col).localCheckpoint(eager=True)
+        grams = word_ngrams(df, 3).localCheckpoint(eager=True)
     sigs = signatures
     if sigs is None:
-        sigs = minhash_signatures(grams, num_hashes, gram_hash=gram_hash)
+        sigs = minhash_signatures(grams, gram_hash=gram_hash)
     else:
-        _check_signature_width(sigs, num_hashes)
-    cands = lsh_candidate_pairs(sigs, bands, num_hashes // bands)
+        _check_signature_width(sigs)
+    cands = lsh_candidate_pairs(sigs)
     return verify_jaccard_on_candidates(cands, grams, threshold)
 
 
 def simhash_signatures(
-    df: DataFrame,
-    bits: int = 32,
-    text_col: str = "text",
-    tok_hash: str = "xxhash64",
+    df: DataFrame, bits: int = 32, tok_hash: str = "xxhash64"
 ) -> DataFrame:
     """Per-doc SimHash: bit j is the sign of Σ_token (±1) where the sign is
     bit j of the token hash. JVM-only bit arithmetic, one aggregation.
@@ -432,7 +412,7 @@ def simhash_signatures(
     else:
         raise ValueError(f"unknown tok_hash {tok_hash!r}")
     toks = (
-        df.select("doc_id", F.explode(F.split(F.col(text_col), " ")).alias("tok"))
+        df.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
         .distinct()
         .withColumn("h", h)
     )
@@ -511,8 +491,6 @@ def simhash_pairs(
 
 def span_dedup(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     span_tokens: int = 8,
     hash_key: bool = False,
 ) -> DataFrame:
@@ -537,9 +515,7 @@ def span_dedup(
     """
     from pyspark.sql.window import Window
 
-    toked = df.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("_toks")
-    )
+    toked = df.select("doc_id", F.split(F.col("text"), " ").alias("_toks"))
     spans = toked.select(
         "doc_id",
         F.posexplode(
@@ -575,11 +551,7 @@ def span_dedup(
     )
 
 
-def lsh_admit_batch(
-    keys: DataFrame,
-    ledger: DataFrame | None,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lsh_admit_batch(keys: DataFrame, ledger: DataFrame | None) -> DataFrame:
     """First-seen LSH admission: which keyed batch docs survive against an
     (optional) band ledger of previously admitted docs. A doc is dropped
     if (a) any of its (band, bucket) keys appears in the ledger (near-dup
@@ -588,7 +560,7 @@ def lsh_admit_batch(
     contains a smaller-id doc within the batch (keep-one-per-LSH-bucket;
     arrival order inside a batch is undefined, so the id is the
     deterministic tie-break). Returns the distinct admitted ids (single
-    `id_col` column) among docs present in `keys` — docs with no keys
+    `doc_id` column) among docs present in `keys` — docs with no keys
     (too short to shingle) are the CALLER's to admit, mirroring the
     batch-side join in the streaming loop.
 
@@ -601,20 +573,20 @@ def lsh_admit_batch(
     if ledger is not None:
         dup_of_state = (
             keys.join(ledger, on=["band", "bucket"], how="left_semi")
-            .select(id_col)
+            .select("doc_id")
             .distinct()
         )
-        clean = keys.join(dup_of_state, on=id_col, how="left_anti")
+        clean = keys.join(dup_of_state, on="doc_id", how="left_anti")
     else:
         dup_of_state = None
         clean = keys
     owners = clean.groupBy("band", "bucket").agg(
-        F.min(id_col).alias("owner")
+        F.min("doc_id").alias("owner")
     )
     dup_in_batch = (
         clean.join(owners, on=["band", "bucket"])
-        .filter(F.col(id_col) > F.col("owner"))
-        .select(id_col)
+        .filter(F.col("doc_id") > F.col("owner"))
+        .select("doc_id")
         .distinct()
     )
     dropped = (
@@ -623,9 +595,9 @@ def lsh_admit_batch(
         else dup_of_state.unionByName(dup_in_batch)
     )
     return (
-        keys.select(id_col)
+        keys.select("doc_id")
         .distinct()
-        .join(dropped, on=id_col, how="left_anti")
+        .join(dropped, on="doc_id", how="left_anti")
     )
 
 
@@ -633,10 +605,9 @@ def incremental_dedup_batch(
     batch_docs: DataFrame,
     ledger: DataFrame | None,
     ngram: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
+    num_hashes: int = NUM_HASHES,
+    bands: int = BANDS,
     gram_hash: str = "xxhash64",
-    text_col: str = "text",
 ) -> tuple[DataFrame, DataFrame]:
     """One ingest step of the first-seen near-dedup ledger loop, batch
     form: returns ``(admitted_docs, admitted_keys)`` where
@@ -663,9 +634,7 @@ def incremental_dedup_batch(
     # (doc_id, gram) pairs — a full-batch shuffle — before the signature
     # aggregation was pure waste; the explode now feeds the map-side
     # partial min directly (r14).
-    grams = word_ngrams(
-        batch, ngram, text_col=text_col, distinct=False
-    )  # id is doc_id
+    grams = word_ngrams(batch, ngram, distinct=False)
     sigs = minhash_signatures(grams, num_hashes, gram_hash=gram_hash)
     keys = band_keys(
         sigs, bands, num_hashes // bands
@@ -692,10 +661,6 @@ def incremental_minhash_dedup(
     grams: DataFrame,
     is_batch: Column,
     threshold: float = 0.3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    gram_hash: str = "xxhash64",
-    id_col: str = "doc_id",
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric near-dedup: docs where `is_batch` holds (the increment)
@@ -724,31 +689,29 @@ def incremental_minhash_dedup(
     `jaccard_pairs`/`minhash_lsh_dedup`; an unmaterialized word_ngrams
     frame would re-run the corpus scan + explode per consumer.
     `signatures` (optional) skips the signature stage exactly as in
-    `minhash_lsh_dedup` — gram_hash is then ignored, and num_hashes must
-    match the table's signature width (validated).
+    `minhash_lsh_dedup`; the table's signature width must be NUM_HASHES
+    (validated).
     """
     from pyspark.sql import Window
 
     sigs = signatures
     if sigs is None:
-        sigs = minhash_signatures(grams, num_hashes, id_col, gram_hash)
+        sigs = minhash_signatures(grams)
     else:
-        _check_signature_width(sigs, num_hashes)
-    banded = band_keys(sigs, bands, num_hashes // bands, id_col)
+        _check_signature_width(sigs)
+    banded = band_keys(sigs)
     batch = banded.filter(is_batch).select(
-        F.col(id_col).alias("doc_a"), "band", "bucket"
+        F.col("doc_id").alias("doc_a"), "band", "bucket"
     )
     ledger = banded.filter(~is_batch).select(
-        F.col(id_col).alias("doc_b"), "band", "bucket"
+        F.col("doc_id").alias("doc_b"), "band", "bucket"
     )
     cand = (
         batch.join(ledger, on=["band", "bucket"])
         .select("doc_a", "doc_b")
         .distinct()
     )
-    scored = verify_jaccard_on_candidates(
-        cand, grams, threshold, id_col=id_col
-    )
+    scored = verify_jaccard_on_candidates(cand, grams, threshold)
     w = Window.partitionBy("doc_a").orderBy(F.desc("jaccard"), F.asc("doc_b"))
     return (
         scored.withColumn("rn", F.row_number().over(w))

@@ -30,9 +30,9 @@ def _dot(a: str, b: str) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def with_norm(df: DataFrame) -> DataFrame:
     """Add `vecd` (double array) and `norm` columns."""
-    return df.withColumn("vecd", _as_double(vec_col)).withColumn(
+    return df.withColumn("vecd", _as_double("embedding")).withColumn(
         "norm", F.sqrt(_dot("vecd", "vecd"))
     )
 
@@ -46,24 +46,20 @@ def cosine_rounded(left_vec: str, right_vec: str, left_norm: str, right_norm: st
 
 
 def knn_bruteforce(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     The corpus side is the big side: it streams partition-local; queries are
     broadcast. One shuffle for the per-query rank.
     """
-    corpus = with_norm(embeddings, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
+    corpus = with_norm(embeddings).select(
+        F.col("vec_id").alias("neighbor_id"),
         F.col("vecd").alias("cvec"),
         F.col("norm").alias("cnorm"),
     )
-    qs = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
+    qs = with_norm(queries).select(
+        F.col("vec_id").alias("query_id"),
         F.col("vecd").alias("qvec"),
         F.col("norm").alias("qnorm"),
     )
@@ -84,27 +80,21 @@ def knn_bruteforce(
     )
 
 
-def bucketed_dedup_cosine(
-    embeddings: DataFrame,
-    threshold: float,
-    bucket_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def bucketed_dedup_cosine(embeddings: DataFrame, threshold: float) -> DataFrame:
     """Near-duplicate pairs by cosine ≥ threshold, paired only within a
     coarse bucket (IVF-cell stand-in) — the scale-path contract: candidate
     generation is bucket-local, so cost is Σ_bucket |bucket|², not n²."""
-    vecs = with_norm(embeddings, vec_col).select(
-        F.col(id_col), F.col(bucket_col).alias("bucket"), "vecd", "norm"
+    vecs = with_norm(embeddings).select(
+        F.col("vec_id"), F.col("label").alias("bucket"), "vecd", "norm"
     )
     a = vecs.select(
-        F.col(id_col).alias("vec_a"),
+        F.col("vec_id").alias("vec_a"),
         F.col("bucket"),
         F.col("vecd").alias("veca"),
         F.col("norm").alias("norma"),
     )
     b = vecs.select(
-        F.col(id_col).alias("vec_b"),
+        F.col("vec_id").alias("vec_b"),
         F.col("bucket"),
         F.col("vecd").alias("vecb"),
         F.col("norm").alias("normb"),
@@ -118,26 +108,22 @@ def bucketed_dedup_cosine(
     )
 
 
-def hyperplanes(n_planes: int = 8, dim: int = 64, seed: int = 42) -> "np.ndarray":
-    """The seeded hyperplane matrix — shared by the Spark bucket expression
+def hyperplanes(n_planes: int = 8, dim: int = 64) -> "np.ndarray":
+    """The seed-42 hyperplane matrix — shared by the Spark bucket expression
     and the generated DuckDB oracle so both embed the same literals."""
-    return np.random.default_rng(seed).standard_normal((n_planes, dim))
+    return np.random.default_rng(42).standard_normal((n_planes, dim))
 
 
 def random_hyperplane_buckets(
-    embeddings: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    vec_col: str = "embedding",
+    embeddings: DataFrame, n_planes: int = 8, dim: int = 64
 ) -> DataFrame:
     """LSH bucket id per vector: sign bits against seeded random hyperplanes.
 
     Planes are generated driver-side from a seeded RNG and embedded as
     literals — deterministic across runs and executors.
     """
-    planes = hyperplanes(n_planes, dim, seed)
-    vecd = _as_double(vec_col)
+    planes = hyperplanes(n_planes, dim)
+    vecd = _as_double("embedding")
     bucket = None
     tmp = embeddings.withColumn("vecd", vecd)
     for j in range(n_planes):
@@ -155,11 +141,7 @@ def random_hyperplane_buckets(
 
 
 def lsh_bucket_index(
-    embeddings: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, n_planes: int = 8, dim: int = 64
 ) -> DataFrame:
     """The materialized LSH index (id, bucket, vecd, norm): the bucket
     assignment plus the rank-ready double vector and its norm — what
@@ -167,9 +149,9 @@ def lsh_bucket_index(
     plane-dot aggregates over 64-literal arrays are the expensive part of
     every LSH call; materializing them once (see llm_ops._lsh_bucketed)
     is the `_ivf_assigned` discipline applied to the LSH tier."""
-    base = random_hyperplane_buckets(embeddings, n_planes, dim, vec_col=vec_col)
+    base = random_hyperplane_buckets(embeddings, n_planes, dim)
     return base.select(
-        id_col, "bucket", "vecd", F.sqrt(_dot("vecd", "vecd")).alias("norm")
+        "vec_id", "bucket", "vecd", F.sqrt(_dot("vecd", "vecd")).alias("norm")
     )
 
 
@@ -179,8 +161,6 @@ def knn_lsh(
     k: int = 5,
     n_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bucketed: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: rank only corpus vectors in the query's LSH bucket.
@@ -190,25 +170,25 @@ def knn_lsh(
     `knn_ivf`'s `assigned`: it REPLACES `embeddings` entirely — the corpus
     side reads it directly and the query side is looked up in it by
     `queries`' ids — so pass an index built over the corpus being searched
-    with the same id_col."""
+    with the same vec_id column."""
     if bucketed is not None:
-        if id_col not in bucketed.columns:
+        if "vec_id" not in bucketed.columns:
             raise ValueError(
-                f"bucketed index lacks id column {id_col!r}; it replaces "
+                "bucketed index lacks id column 'vec_id'; it replaces "
                 "`embeddings`, so it must be built over the corpus being "
-                "searched with the same id_col"
+                "searched with the same id column"
             )
         corpus = bucketed.select(
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             "bucket",
             F.col("vecd").alias("cvec"),
             F.col("norm").alias("cnorm"),
         )
-        q_ids = queries.select(F.col(id_col).alias("qid"))
+        q_ids = queries.select(F.col("vec_id").alias("qid"))
         qs = bucketed.join(
-            F.broadcast(q_ids), bucketed[id_col] == q_ids["qid"]
+            F.broadcast(q_ids), bucketed["vec_id"] == q_ids["qid"]
         ).select(
-            F.col(id_col).alias("query_id"),
+            F.col("vec_id").alias("query_id"),
             "bucket",
             F.col("vecd").alias("qvec"),
             F.col("norm").alias("qnorm"),
@@ -222,13 +202,13 @@ def knn_lsh(
         qs = F.broadcast(qs)
     else:
         corpus = random_hyperplane_buckets(embeddings, n_planes, dim).select(
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             "bucket",
             F.col("vecd").alias("cvec"),
         )
         corpus = corpus.withColumn("cnorm", F.sqrt(_dot("cvec", "cvec")))
         qs = random_hyperplane_buckets(queries, n_planes, dim).select(
-            F.col(id_col).alias("query_id"),
+            F.col("vec_id").alias("query_id"),
             "bucket",
             F.col("vecd").alias("qvec"),
         )
@@ -250,39 +230,7 @@ def knn_lsh(
     )
 
 
-def kmeans_ivf_assign(
-    embeddings: DataFrame,
-    n_cells: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse-quantizer TRAINING path: seeded KMeans over the embeddings;
-    returns each vector with its `cell` assignment (plus vecd/norm).
-
-    Uses pyspark.ml KMeans (distributed Lloyd's). This is the offline trainer
-    — `tools/train_ivf_centroids.py` runs it once and freezes the centroids
-    as literals (`functions/ivf_centroids.py`); the serving path
-    (`frozen_ivf_assign`/`knn_ivf`) assigns against those frozen centroids,
-    exactly as a production IVF index trains on a sample and assigns at scale.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = with_norm(embeddings, vec_col).select(id_col, "vecd", "norm")
-    feat = base.withColumn("features", array_to_vector("vecd"))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(feat)
-    assigned = model.transform(feat)
-    return assigned.select(
-        id_col, "vecd", "norm", F.col("prediction").alias("cell")
-    )
-
-
-def frozen_ivf_assign(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def frozen_ivf_assign(embeddings: DataFrame, id_col: str = "vec_id") -> DataFrame:
     """IVF serving path: assign each vector to its nearest FROZEN centroid
     (`functions/ivf_centroids.py`, trained offline — see
     `tools/train_ivf_centroids.py`).
@@ -295,7 +243,7 @@ def frozen_ivf_assign(
     """
     from data_warehouse_flink_spark.functions.ivf_centroids import CENTROIDS
 
-    tmp = with_norm(embeddings, vec_col)
+    tmp = with_norm(embeddings)
     structs = ", ".join(
         f"struct(round(aggregate(zip_with(vecd, "
         f"array({','.join(repr(v) for v in c)}), "
@@ -315,8 +263,6 @@ def knn_ivf(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: exact cosine rerank within the query's IVF cell
@@ -331,36 +277,34 @@ def knn_ivf(
     is given it REPLACES `embeddings` entirely (both the corpus side and
     the query-vector lookup read from it) — pass the index built over the
     corpus you mean to search, and note its columns are fixed to
-    (`id_col`, vecd, norm, cell) by `frozen_ivf_assign`, which itself
-    defaults id_col/vec_col (ADVICE r7 #2). Corpus identity is the
+    (vec_id, vecd, norm, cell) by `frozen_ivf_assign` (ADVICE r7 #2).
+    Corpus identity is the
     CALLER's contract: whether `assigned` covers the same rows as the
     `embeddings` frame you would otherwise have passed is not checkable
     here without scanning both — a filtered corpus next to a full-corpus
     index silently searches the full corpus."""
-    if assigned is not None and id_col not in assigned.columns:
+    if assigned is not None and "vec_id" not in assigned.columns:
         # loud schema check only (cheap); it cannot detect a same-schema
         # index built over a DIFFERENT corpus — see the docstring contract
         raise ValueError(
-            f"assigned index lacks id column {id_col!r}; it replaces "
+            "assigned index lacks id column 'vec_id'; it replaces "
             "`embeddings`, so it must be built over the corpus being "
-            "searched with the same id_col"
+            "searched with the same id column"
         )
     # materialize the assignment once — this IS the inverted-file index;
     # without it both the corpus side and the query side re-run the
     # 16-centroid argmin over a fresh scan of the embeddings
     if assigned is None:
-        assigned = frozen_ivf_assign(
-            embeddings, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint(eager=True)
+        assigned = frozen_ivf_assign(embeddings).localCheckpoint(eager=True)
     corpus = assigned.select(
-        F.col(id_col).alias("neighbor_id"), "cell",
+        F.col("vec_id").alias("neighbor_id"), "cell",
         F.col("vecd").alias("cvec"), F.col("norm").alias("cnorm"),
     )
-    q_ids = queries.select(F.col(id_col).alias("qid"))
+    q_ids = queries.select(F.col("vec_id").alias("qid"))
     qs = assigned.join(
-        F.broadcast(q_ids), assigned[id_col] == q_ids["qid"]
+        F.broadcast(q_ids), assigned["vec_id"] == q_ids["qid"]
     ).select(
-        F.col(id_col).alias("query_id"), "cell",
+        F.col("vec_id").alias("query_id"), "cell",
         F.col("vecd").alias("qvec"), F.col("norm").alias("qnorm"),
     )
     cos = cosine_rounded("qvec", "cvec", "qnorm", "cnorm").alias("cosine")
@@ -402,9 +346,7 @@ def _pq_codebook_df(spark):
     return spark.createDataFrame(rows, "m int, cidx int, cw array<double>")
 
 
-def _pq_subspace_dists(
-    df: DataFrame, id_out: str, id_col: str, vec_col: str
-) -> DataFrame:
+def _pq_subspace_dists(df: DataFrame, id_out: str) -> DataFrame:
     """Per (vector, subspace, codeword) rounded squared distance in integer
     micro-units: one explode to (vector, m, subvector) rows, one broadcast
     join against the codebook table. d_micro = round(d, 6) * 1e6 as BIGINT,
@@ -417,8 +359,8 @@ def _pq_subspace_dists(
 
     spark = df.sparkSession
     subs = df.select(
-        F.col(id_col).alias(id_out),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("vecd"),
+        F.col("vec_id").alias(id_out),
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("vecd"),
     ).select(
         id_out,
         F.explode(
@@ -441,11 +383,7 @@ def _pq_subspace_dists(
     )
 
 
-def pq_encode(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(embeddings: DataFrame) -> DataFrame:
     """Encode each vector to M=8 codebook indices (product quantization).
 
     The compressed representation: 8 small ints instead of 64 floats —
@@ -456,8 +394,8 @@ def pq_encode(
     """
     from data_warehouse_flink_spark.functions.pq_codebooks import M_SUBSPACES
 
-    d = _pq_subspace_dists(embeddings, "_pq_id", id_col, vec_col)
-    return d.groupBy(F.col("_pq_id").alias(id_col)).agg(
+    d = _pq_subspace_dists(embeddings, "_pq_id")
+    return d.groupBy(F.col("_pq_id").alias("vec_id")).agg(
         *[
             F.min(F.when(F.col("m") == m, F.struct("d_micro", "cidx")))[
                 "cidx"
@@ -471,8 +409,6 @@ def knn_pq(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k by asymmetric-distance computation (ADC) over the
@@ -498,9 +434,9 @@ def knn_pq(
     # join + 8-way struct-min groupBy) is the invocation's dominant stage.
     enc = codes
     if enc is None:
-        enc = pq_encode(embeddings, id_col=id_col, vec_col=vec_col)
+        enc = pq_encode(embeddings)
     codes_long = enc.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.explode(
             F.expr(
                 "array("
@@ -512,7 +448,7 @@ def knn_pq(
             )
         ).alias("c"),
     ).select("neighbor_id", "c.m", "c.code")
-    qd = _pq_subspace_dists(queries, "query_id", id_col, vec_col)
+    qd = _pq_subspace_dists(queries, "query_id")
     pairs = codes_long.join(
         F.broadcast(qd.withColumnRenamed("cidx", "code")), ["m", "code"]
     )
@@ -595,8 +531,6 @@ def knn_ivf_pq(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assigned: DataFrame | None = None,
     query_cells: DataFrame | None = None,
     codes: DataFrame | None = None,
@@ -624,16 +558,18 @@ def knn_ivf_pq(
     # is the one-shot default (it truncates the 128-centroid literal tree,
     # but its block is not memoized, so session.release does not free it).
     if assigned is None:
-        assigned = frozen_ivf_assign(
-            embeddings, id_col=id_col, vec_col=vec_col
-        ).select(id_col, "cell").localCheckpoint(eager=True)
+        assigned = (
+            frozen_ivf_assign(embeddings)
+            .select("vec_id", "cell")
+            .localCheckpoint(eager=True)
+        )
     # `codes`: same contract as knn_pq — a prebuilt pq_encode table skips
     # the per-invocation corpus encode.
     enc = codes
     if enc is None:
-        enc = pq_encode(embeddings, id_col=id_col, vec_col=vec_col)
-    codes_long = enc.join(assigned, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
+        enc = pq_encode(embeddings)
+    codes_long = enc.join(assigned, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"),
         "cell",
         F.explode(
             F.expr(
@@ -647,7 +583,7 @@ def knn_ivf_pq(
         ).alias("c"),
     ).select("neighbor_id", "cell", "c.m", "c.code")
 
-    qd = _pq_subspace_dists(queries, "query_id", id_col, vec_col)
+    qd = _pq_subspace_dists(queries, "query_id")
     # Query cells come from the query VECTORS (frozen_ivf_assign on the
     # queries frame), not from a join against the corpus assignment table —
     # identical for in-corpus queries (same frozen centroids, same rounded
@@ -661,10 +597,9 @@ def knn_ivf_pq(
         query_cells = (
             frozen_ivf_assign(
                 queries.select(
-                    F.col(id_col).alias("query_id"), F.col(vec_col)
+                    F.col("vec_id").alias("query_id"), F.col("embedding")
                 ),
                 id_col="query_id",
-                vec_col=vec_col,
             )
             .select("query_id", "cell")
             .localCheckpoint(eager=True)

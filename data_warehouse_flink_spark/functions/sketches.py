@@ -17,19 +17,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _bucket_expr(token_col: str, row: str, width: int) -> str:
-    """md5-derived bucket id: first 8 hex chars of md5(token '#' row)."""
-    return (
-        f"CAST(conv(substr(md5(concat({token_col}, '#', CAST({row} AS STRING)"
+def _token_cells(depth: int, width: int):
+    """One (row j, bucket) struct per hash row of `token`, exploded; the
+    md5-derived bucket id is the first 8 hex chars of md5(token '#' j)."""
+    bucket = (
+        "CAST(conv(substr(md5(concat(token, '#', CAST(j AS STRING)"
         f")), 1, 8), 16, 10) AS BIGINT) % {width}"
+    )
+    return F.explode(
+        F.expr(
+            f"transform(sequence(0, {depth - 1}), j -> "
+            f"struct(j AS row, {bucket} AS bucket))"
+        )
     )
 
 
 def cm_sketch_cells(
-    tokens_df: DataFrame,
-    token_col: str = "token",
-    depth: int = 4,
-    width: int = 256,
+    tokens_df: DataFrame, depth: int = 4, width: int = 256
 ) -> DataFrame:
     """Build the d x w counter grid: one row per (hash row, bucket).
 
@@ -39,15 +43,7 @@ def cm_sketch_cells(
     independent of corpus size (the mergeability that makes CM sketches
     cluster-friendly).
     """
-    cells = tokens_df.select(
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {depth - 1}), j -> "
-                f"struct(j AS row, {_bucket_expr(token_col, 'j', width)}"
-                " AS bucket))"
-            )
-        ).alias("cell")
-    )
+    cells = tokens_df.select(_token_cells(depth, width).alias("cell"))
     return cells.groupBy(
         F.col("cell.row").alias("row"), F.col("cell.bucket").alias("bucket")
     ).agg(F.count("*").cast("long").alias("cell_count"))
@@ -56,7 +52,6 @@ def cm_sketch_cells(
 def cm_estimate_for(
     tokens_of_interest: DataFrame,
     cells: DataFrame,
-    token_col: str = "token",
     depth: int = 4,
     width: int = 256,
 ) -> DataFrame:
@@ -67,30 +62,23 @@ def cm_estimate_for(
     count, which upper-bounds the true frequency.
     """
     probes = tokens_of_interest.select(
-        token_col,
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {depth - 1}), j -> "
-                f"struct(j AS row, {_bucket_expr(token_col, 'j', width)}"
-                " AS bucket))"
-            )
-        ).alias("probe"),
-    ).select(token_col, F.col("probe.row").alias("row"), F.col("probe.bucket").alias("bucket"))
+        "token", _token_cells(depth, width).alias("probe")
+    ).select(
+        "token",
+        F.col("probe.row").alias("row"),
+        F.col("probe.bucket").alias("bucket"),
+    )
     return (
         probes.join(F.broadcast(cells), on=["row", "bucket"])
-        .groupBy(token_col)
+        .groupBy("token")
         .agg(F.min("cell_count").cast("long").alias("cm_estimate"))
     )
 
 
 def cm_sketch_cells_from_counts(
-    token_counts: DataFrame,
-    token_col: str = "token",
-    count_col: str = "exact_count",
-    depth: int = 4,
-    width: int = 256,
+    token_counts: DataFrame, depth: int = 4, width: int = 256
 ) -> DataFrame:
-    """Cell grid from a pre-aggregated (token, count) table.
+    """Cell grid from a pre-aggregated (token, exact_count) table.
 
     Identical to ``cm_sketch_cells`` over the raw stream (a cell is the sum
     of the counts of every token hashing into it), but the explode runs
@@ -99,14 +87,7 @@ def cm_sketch_cells_from_counts(
     small reaggregation, not a second corpus scan.
     """
     cells = token_counts.select(
-        F.col(count_col).alias("c"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {depth - 1}), j -> "
-                f"struct(j AS row, {_bucket_expr(token_col, 'j', width)}"
-                " AS bucket))"
-            )
-        ).alias("cell"),
+        F.col("exact_count").alias("c"), _token_cells(depth, width).alias("cell")
     )
     return cells.groupBy(
         F.col("cell.row").alias("row"), F.col("cell.bucket").alias("bucket")

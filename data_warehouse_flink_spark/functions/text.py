@@ -34,21 +34,21 @@ def token_count(text_col: str | Column = "text") -> Column:
     return F.size(tokens(text_col)).cast("long")
 
 
-def stopword_count(text_col: str | Column = "text") -> Column:
-    toks = tokens(text_col)
+def stopword_count() -> Column:
+    toks = tokens()
     in_set = F.filter(toks, lambda t: t.isin(*STOPWORDS))
     return F.size(in_set).cast("long")
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Per-document quality signals: lengths, token stats, stopword ratio.
 
     All ratios are double divisions of exact integers → bit-identical across
     engines; rounded to 6 for output stability.
     """
-    n_tok = token_count(text_col)
-    n_stop = stopword_count(text_col)
-    n_chars = F.length(text_col).cast("long")
+    n_tok = token_count()
+    n_stop = stopword_count()
+    n_chars = F.length("text").cast("long")
     return df.select(
         "doc_id",
         n_chars.alias("n_chars_text"),
@@ -61,10 +61,10 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Deterministic document fingerprint: md5 over normalized text plus a
     64-bit prefix fingerprint (hex) for cheap equality bucketing."""
-    norm = F.lower(F.col(text_col))
+    norm = F.lower(F.col("text"))
     return df.select(
         "doc_id",
         F.md5(norm).alias("md5_hex"),
@@ -72,11 +72,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_id(
-    df: DataFrame,
-    text_col: str = "text",
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
+def language_id(df: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
     """Marker-token language ID: argmax of per-language marker counts.
 
     Deterministic tie-break: higher count wins, then lexicographic language
@@ -88,7 +84,7 @@ def language_id(
     stages into ONE projection chain over ONE scan instead of computing
     each stage on its own scan and joining them back on doc_id.
     """
-    toks = tokens(text_col)
+    toks = tokens()
 
     def marker_count(markers: tuple[str, ...]) -> Column:
         return F.size(F.filter(toks, lambda t: t.isin(*markers)))
@@ -108,9 +104,7 @@ def language_id(
     return scored.select("doc_id", *passthrough, pred.alias("pred_lang"))
 
 
-def repetition_features(
-    df: DataFrame, text_col: str = "text", n: int = 3
-) -> DataFrame:
+def repetition_features(df: DataFrame, n: int = 3) -> DataFrame:
     """Per-document repetition signal: duplicate n-gram fraction.
 
     The repeated-n-gram fraction is the standard text-quality repetition
@@ -134,7 +128,7 @@ def repetition_features(
     # hoisting lesson; this projection previously evaluated it twice, plus
     # a third time in the pushed-down filter).
     toked = df.select(
-        "doc_id", F.split(F.col(text_col), " ").alias("_toks")
+        "doc_id", F.split(F.col("text"), " ").alias("_toks")
     ).filter(F.size("_toks") >= n)
     grammed = toked.select(
         "doc_id",
@@ -171,14 +165,14 @@ PII_PATTERNS = (
 )
 
 
-def pii_redact(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Redact emails / IPv4s / phone numbers; per-doc counts + redacted text.
 
     Pure per-row ``regexp_replace``/``regexp_extract_all`` projections —
     zero shuffle, scan-linear, JVM-side (no Python in the loop). Returns
     ``doc_id``, one ``n_<kind>`` count per pattern, and ``redacted``.
     """
-    out = df.select("doc_id", F.col(text_col).alias("redacted"))
+    out = df.select("doc_id", F.col("text").alias("redacted"))
     for kind, pat, token in PII_PATTERNS:
         out = out.withColumn(
             f"n_{kind}",
@@ -209,9 +203,7 @@ QUALITY_WEIGHTS = {
 
 
 def linear_quality_score(
-    df: DataFrame,
-    text_col: str = "text",
-    passthrough: tuple[str, ...] = (),
+    df: DataFrame, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
     """Frozen-weight linear quality classifier over exact integer features.
 
@@ -230,8 +222,8 @@ def linear_quality_score(
     toked = df.select(
         "doc_id",
         *passthrough,
-        F.col(text_col).alias("_text"),
-        F.split(F.col(text_col), " ").alias("_toks"),
+        F.col("text").alias("_text"),
+        F.split(F.col("text"), " ").alias("_toks"),
     )
     # Hoist the trigram array into its own projection: the dup_ppm feature
     # references it four times (guard, two sizes, array_distinct), and
@@ -313,18 +305,14 @@ def canonicalize_url(url: Column) -> Column:
 # caveat inherited from the doc_bpe_encode repr pair: Java regex '.'
 # excludes \r (and a few Unicode line separators) that RE2's '.' does
 # not — the shipped corpora contain neither.
-BPE_BASE_REPR_TEMPLATE = (
-    "concat(' ', array_join(transform(split({col}, ' '), "
+BPE_BASE_REPR = (
+    "concat(' ', array_join(transform(split(text, ' '), "
     "w -> regexp_replace(w, '(.)', '$1 ')), '| '))"
 )
-BPE_BASE_REPR = BPE_BASE_REPR_TEMPLATE.format(col="text")
 
 
 def bpe_train_merges(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    checkpoint_every: int = 4,
+    docs: DataFrame, n_merges: int
 ) -> list[tuple[int, str, str, int]]:
     """The classic BPE pair-counting loop (Sennrich et al. 2016) as
     distributed aggregations: per rank, count adjacent non-boundary
@@ -336,13 +324,13 @@ def bpe_train_merges(
     (symbol-pair cardinality, not corpus size) and a 1-ROW driver
     collect — the model. The corpus rewrite applies as a chained
     map-only replace expression, RE-materialized only every
-    `checkpoint_every` ranks. Cadence is a STORAGE policy, not a time
+    4 ranks. Cadence is a STORAGE policy, not a time
     lever: an interleaved warm-JVM A/B at 1M docs measured per-rank /
     every-4 / never-materialize all at ~28-31 s for 8 ranks (earlier
     cross-session spreads of 60-246 s were JVM/codegen warmup) — but a
     per-rank checkpoint pins a corpus-sized block per rank for the
     session (9 blocks/invocation at n=8) where every-4 pins 2, so the
-    default bounds both the replace chain (≤3 per scan) and storage. Merge symbols ride
+    cadence bounds both the replace chain (≤3 per scan) and storage. Merge symbols ride
     as literal Columns, never f-string SQL (symbols may contain
     quotes). Documents shorter than two symbols are filtered before
     the pair transform — sequence(1, 0) is the DESCENDING [1, 0] in
@@ -369,21 +357,11 @@ def bpe_train_merges(
     amortizes one corpus count over up to `batch_size` merges per scan
     (this function IS its batch_size=1 path).
     """
-    return bpe_train_merges_batched(
-        docs,
-        n_merges,
-        text_col=text_col,
-        batch_size=1,
-        checkpoint_every=checkpoint_every,
-    )
+    return bpe_train_merges_batched(docs, n_merges, batch_size=1)
 
 
 def bpe_train_merges_batched(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    batch_size: int = 8,
-    checkpoint_every: int = 4,
+    docs: DataFrame, n_merges: int, batch_size: int = 8
 ) -> list[tuple[int, str, str, int]]:
     """Batched BPE training (VERDICT r8 #3): per EPOCH, count all
     adjacent pairs once, then greedily accept up to `batch_size`
@@ -407,8 +385,8 @@ def bpe_train_merges_batched(
     the DuckDB oracle CTEs grade that path).
 
     Model collects stay bounded: one ≤(4·batch_size+8)-row collect per
-    epoch (1 row when batch_size=1). `checkpoint_every` counts ACCEPTED
-    MERGES since the last materialization, exactly as in the sequential
+    epoch (1 row when batch_size=1). The every-4 checkpoint cadence
+    counts ACCEPTED MERGES since the last materialization, exactly as in the sequential
     form — counting epochs instead let the un-checkpointed replace
     chain grow past a dozen chained string rewrites per count scan and
     measured SLOWER than sequential at 1M docs (SCALING.md round 9).
@@ -416,7 +394,7 @@ def bpe_train_merges_batched(
     `bpe_train_merges`.
     """
     base = docs.select(
-        F.expr(BPE_BASE_REPR_TEMPLATE.format(col=text_col)).alias("r")
+        F.expr(BPE_BASE_REPR).alias("r")
     ).localCheckpoint(eager=True)
     repr_col: Column = F.col("r")
     pairs = F.explode(
@@ -466,7 +444,7 @@ def bpe_train_merges_batched(
                 repr_col, F.lit(f" {a} {b} "), F.lit(f" {a}{b} ")
             )
             pending += 1
-            if pending >= checkpoint_every:
+            if pending >= 4:
                 base = base.select(repr_col.alias("r")).localCheckpoint(
                     eager=True
                 )

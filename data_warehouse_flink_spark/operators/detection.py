@@ -10,7 +10,7 @@ as one shuffle + per-key sort; no Python in the hot path).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -138,7 +138,6 @@ def running_count_blacklist(
     ts_col: str,
     order_cols: list[str],
     max_count: int,
-    period_col: Column | None = None,
 ) -> DataFrame:
     """W11 + C7: per-key running count with a period reset and a one-time
     blacklist warning at the threshold crossing.
@@ -152,8 +151,9 @@ def running_count_blacklist(
     Output adds: `day` (date string), `rn`, `result_type` in
     {click, blacklist_warning}; rows past max+1 are dropped (suppressed).
     """
-    period = period_col if period_col is not None else F.to_date(F.col(ts_col))
-    with_day = df.withColumn("day", F.date_format(period, "yyyy-MM-dd"))
+    with_day = df.withColumn(
+        "day", F.date_format(F.to_date(F.col(ts_col)), "yyyy-MM-dd")
+    )
     w = Window.partitionBy(*keys, "day").orderBy(*[F.asc(c) for c in order_cols])
     ranked = with_day.withColumn("rn", F.row_number().over(w))
     return ranked.filter(F.col("rn") <= max_count + 1).withColumn(
@@ -169,7 +169,6 @@ def sessionize(
     key: str,
     ts_col: str,
     gap_sec: int,
-    order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Sessionization: split each key's event sequence at gaps > gap_sec.
 
@@ -179,8 +178,7 @@ def sessionize(
 
     Output: one row per event with `session_id` (0-based per key).
     """
-    order_cols = order_cols or [ts_col, "event_id"]
-    w = Window.partitionBy(key).orderBy(*[F.asc(c) for c in order_cols])
+    w = Window.partitionBy(key).orderBy(F.asc(ts_col), F.asc("event_id"))
     gap_us = gap_sec * 1_000_000
     prev_ts = F.lag(ts_col).over(w)
     new_sess = (

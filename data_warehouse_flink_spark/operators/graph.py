@@ -25,9 +25,9 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
 ) -> DataFrame:
-    """Label every node with the minimum node id in its component.
+    """Label every node with the minimum node id in its component (at most
+    25 propagation rounds).
 
     `edges` is an undirected pair table (each pair once, any orientation).
     Returns (node, component) for every node appearing in any edge.
@@ -47,7 +47,7 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(25):
         neighbor_min = (
             sym.join(labels, sym.u == labels.node)
             .groupBy(F.col("v").alias("node2"))

@@ -76,8 +76,6 @@ def full_outer_match(
     on: list[str],
     left_tag: str = "unmatched_left",
     right_tag: str = "unmatched_right",
-    matched_tag: str = "matched",
-    tag_alias: str = "result_type",
 ) -> DataFrame:
     """J1 batch semantics: matched pairs + both unmatched remainders.
 
@@ -99,9 +97,9 @@ def full_outer_match(
         F.when(
             F.col("l._l_present").isNotNull()
             & F.col("r._r_present").isNotNull(),
-            F.lit(matched_tag),
+            F.lit("matched"),
         )
         .when(F.col("l._l_present").isNotNull(), F.lit(left_tag))
         .otherwise(F.lit(right_tag))
     )
-    return joined.withColumn(tag_alias, tag).drop("_l_present", "_r_present")
+    return joined.withColumn("result_type", tag).drop("_l_present", "_r_present")

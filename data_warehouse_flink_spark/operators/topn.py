@@ -23,22 +23,16 @@ def top_n_per_group(
     order_col: str,
     n: int,
     tiebreak_cols: list[str],
-    rank_alias: str = "rn",
-    descending: bool = True,
 ) -> DataFrame:
-    """row_number() <= n per partition, with total-order tie-breaking.
+    """row_number() <= n per partition (as `rn`), with total-order tie-breaking.
 
     At scale this is a single hash shuffle on `partition_cols`; no global
     sort. Skewed partitions are bounded by per-partition top-N semantics
     (each task only tracks its partitions' rows).
     """
-    order = [F.desc(order_col) if descending else F.asc(order_col)]
-    order += [F.asc(c) for c in tiebreak_cols]
+    order = [F.desc(order_col)] + [F.asc(c) for c in tiebreak_cols]
     w = Window.partitionBy(*partition_cols).orderBy(*order)
-    return (
-        df.withColumn(rank_alias, F.row_number().over(w))
-        .filter(F.col(rank_alias) <= n)
-    )
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
 
 
 def format_topn_report(
@@ -46,9 +40,6 @@ def format_topn_report(
     group_col: str,
     entity_col: str,
     count_col: str,
-    rank_col: str = "rn",
-    entity_label: str = "商品ID",
-    count_label: str = "浏览量",
 ) -> DataFrame:
     """P9: render ranked rows as the reference's human-readable report lines
     ("No1: 商品ID=... 浏览量=..."; DW-Flink HotItemsAnalysis
@@ -56,8 +47,8 @@ def format_topn_report(
     this is the sink-side presentation step, JVM format_string only.
     """
     line = F.format_string(
-        f"No%d: {entity_label}=%s {count_label}=%d",
-        F.col(rank_col),
+        "No%d: 商品ID=%s 浏览量=%d",
+        F.col("rn"),
         F.col(entity_col).cast("string"),
         F.col(count_col),
     )
@@ -66,7 +57,7 @@ def format_topn_report(
         .groupBy(group_col)
         .agg(
             F.concat_ws(
-                "\n", F.sort_array(F.collect_list(F.struct(rank_col, "report_line")))
+                "\n", F.sort_array(F.collect_list(F.struct("rn", "report_line")))
                 .getField("report_line")
             ).alias("report")
         )
@@ -79,7 +70,6 @@ def top_n_per_group_partial(
     order_col: str,
     n: int,
     tiebreak_cols: list[str],
-    rank_alias: str = "rn",
 ) -> DataFrame:
     """T1/T3 for very large per-group cardinalities: local top-N per input
     partition before the rank shuffle.
@@ -114,6 +104,4 @@ def top_n_per_group_partial(
     reduced = df.mapInPandas(
         local_topn, schema=df.sparkSession.createDataFrame([], df.schema).schema
     )
-    return top_n_per_group(
-        reduced, partition_cols, order_col, n, tiebreak_cols, rank_alias
-    )
+    return top_n_per_group(reduced, partition_cols, order_col, n, tiebreak_cols)

@@ -81,22 +81,19 @@ def windowed_approx_distinct(
     ts_col: str,
     size: str,
     distinct_col: str,
-    rsd: float = 0.02,
-    slide: str | None = None,
-    alias: str = "uv_approx",
 ) -> DataFrame:
-    """Approximate per-window distinct (W9/W10; UvWithBloom.scala:74-113).
+    """Approximate per-window distinct (W9/W10; UvWithBloom.scala:74-113),
+    rsd 0.02, into `uv_approx`.
 
     The reference offloads a 2^28-bit Bloom bitmap to Redis to dedup "100M+"
     user ids. HyperLogLog++ (`approx_count_distinct`) is the Spark-native
     replacement: fixed O(1/rsd^2) sketch per window, mergeable map-side,
     no external store. At 100 TB this is the only sane UV path.
     """
-    win = F.window(ts_col, size, slide) if slide else F.window(ts_col, size)
-    agg = df.groupBy(win).agg(
-        F.approx_count_distinct(F.col(distinct_col), rsd).alias(alias)
+    agg = df.groupBy(F.window(ts_col, size)).agg(
+        F.approx_count_distinct(F.col(distinct_col), 0.02).alias("uv_approx")
     )
-    return with_window_bounds(agg, [alias])
+    return with_window_bounds(agg, ["uv_approx"])
 
 
 def windowed_approx_distinct_checked(

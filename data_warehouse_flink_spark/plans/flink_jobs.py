@@ -1,11 +1,12 @@
 """The six reference job families, assembled end-to-end over the reference's
 own input schemas (SURVEY.md §0, §3). A user of the reference switches here:
-each function is one of its ``main()`` pipelines with the hard-coded
-constants exposed as parameters (reference defaults preserved).
+each function is one of its ``main()`` pipelines; the reference's
+hard-coded constants that a caller varies are parameters (reference
+defaults preserved), the rest stay literals.
 
-All jobs run batch (`sources.readers`, streaming=False) or streaming
-(streaming=True + the streaming helpers); batch output is the oracle for the
-streaming run (SURVEY.md §5.2). Golden tests: tests/test_flink_jobs.py.
+All jobs run batch over `sources.readers` frames; their streaming twins
+(`streaming/`) take the batch output as their oracle (SURVEY.md §5.2).
+Golden tests: tests/test_flink_jobs.py.
 """
 
 from __future__ import annotations
@@ -55,10 +56,7 @@ def hot_items(
 
 
 def network_flow_hot_urls(
-    apache_log: DataFrame,
-    size: str = "10 minutes",
-    slide: str = "5 seconds",
-    n: int = 5,
+    apache_log: DataFrame, slide: str = "5 seconds"
 ) -> DataFrame:
     """NetworkFlow: top-N hot URLs per sliding window, static assets dropped.
 
@@ -67,21 +65,22 @@ def network_flow_hot_urls(
     """
     pages = apache_log.filter(~F.col("url").rlike(r"\.(css|js)$"))
     counts = windowed_count(
-        pages, "event_time", size, slide=slide, keys=["url"], count_alias="cnt"
+        pages, "event_time", "10 minutes", slide=slide, keys=["url"],
+        count_alias="cnt",
     )
     return top_n_per_group(
         counts.select("window_end_sec", "url", "cnt"),
         partition_cols=["window_end_sec"],
         order_col="cnt",
-        n=n,
+        n=5,
         tiebreak_cols=["url"],
     )
 
 
-def page_view(user_behavior: DataFrame, size: str = "1 hour") -> DataFrame:
+def page_view(user_behavior: DataFrame) -> DataFrame:
     """PageView: hourly pv count (NetworkFlowAnalysis app/PageView.scala:15-35)."""
     pv = user_behavior.filter(F.col("behavior") == "pv")
-    return windowed_count(pv, "ts", size, count_alias="pv")
+    return windowed_count(pv, "ts", "1 hour", count_alias="pv")
 
 
 def unique_visitors(user_behavior: DataFrame, size: str = "1 hour") -> DataFrame:
@@ -90,33 +89,32 @@ def unique_visitors(user_behavior: DataFrame, size: str = "1 hour") -> DataFrame
     return windowed_distinct_count(pv, "ts", size, "user_id", alias="uv")
 
 
-def unique_visitors_approx(
-    user_behavior: DataFrame, size: str = "1 hour", rsd: float = 0.02
-) -> DataFrame:
+def unique_visitors_approx(user_behavior: DataFrame) -> DataFrame:
     """UvWithBloom: approximate hourly UV (app/UvWithBloom.scala:27-113);
     HLL++ replaces the Redis Bloom bitmap."""
     pv = user_behavior.filter(F.col("behavior") == "pv")
-    return windowed_approx_distinct(pv, "ts", size, "user_id", rsd=rsd)
+    return windowed_approx_distinct(pv, "ts", "1 hour", "user_id")
 
 
 def app_marketing_by_channel(
-    marketing: DataFrame, size: str = "1 hour", slide: str = "10 seconds"
+    marketing: DataFrame, slide: str = "10 seconds"
 ) -> DataFrame:
     """AppMarketingByChannel (MarketAnalysis app/AppMarketingByChannel.scala:20-51)."""
     kept = marketing.filter(F.col("behavior") != "UNINSTALL")
     return windowed_count(
-        kept, "ts", size, slide=slide, keys=["channel", "behavior"],
+        kept, "ts", "1 hour", slide=slide, keys=["channel", "behavior"],
         count_alias="cnt",
     )
 
 
 def ad_clicks_by_province(
-    ad_clicks: DataFrame, size: str = "1 hour", slide: str = "10 seconds"
+    ad_clicks: DataFrame, slide: str = "10 seconds"
 ) -> DataFrame:
     """AdStatisticByGeo main output (app/AdStatisticByGeo.scala:21-68;
     intended semantics per SURVEY.md §2.9.1)."""
     return windowed_count(
-        ad_clicks, "ts", size, slide=slide, keys=["province"], count_alias="cnt"
+        ad_clicks, "ts", "1 hour", slide=slide, keys=["province"],
+        count_alias="cnt",
     )
 
 
@@ -215,12 +213,7 @@ def tx_match_window_join(
     )
 
 
-def tx_match_interval_join(
-    orders: DataFrame,
-    receipts: DataFrame,
-    lower_sec: int = -15,
-    upper_sec: int = 20,
-) -> DataFrame:
+def tx_match_interval_join(orders: DataFrame, receipts: DataFrame) -> DataFrame:
     """TxMatchWithJoin interval join (app/TxMatchWithJoin.scala:50-62):
     receipt within [-15 s, +20 s] of the pay."""
     pays = orders.filter(
@@ -229,7 +222,7 @@ def tx_match_interval_join(
     rec = receipts.select("tx_id", "ts")
     j = interval_join(
         pays, rec, key="tx_id", left_ts="ts", right_ts="ts",
-        lower_sec=lower_sec, upper_sec=upper_sec,
+        lower_sec=-15, upper_sec=20,
     )
     return j.select(
         F.col("l.tx_id").alias("tx_id"),

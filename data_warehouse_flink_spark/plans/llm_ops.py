@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from data_warehouse_flink_spark import session
 from data_warehouse_flink_spark.functions.dedup import (
+    BANDS,
+    NUM_HASHES,
     exact_dedup_groups,
     jaccard_pairs,
     minhash_lsh_dedup,
@@ -109,8 +111,10 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cached(
         spark,
         sf_dir,
-        "simhash_sigs_md5_48",
-        lambda: simhash_signatures(_docs(spark, sf_dir), bits=48, tok_hash="md5"),
+        f"simhash_sigs_md5_{_SIMHASH_BITS}",
+        lambda: simhash_signatures(
+            _docs(spark, sf_dir), bits=_SIMHASH_BITS, tok_hash="md5"
+        ),
     )
 
 
@@ -225,7 +229,7 @@ def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _candidate_pairs(spark, sf_dir)
 
 
-def _minhash_bands_sql(num_hashes: int = 64, bands: int = 16) -> str:
+def _minhash_bands_sql() -> str:
     """Shared CTE prefix (toks → grams → g → sig → bands) reproducing
     `word_ngrams` + `minhash_signatures(gram_hash="md5")` + `band_keys`.
 
@@ -239,9 +243,9 @@ def _minhash_bands_sql(num_hashes: int = 64, bands: int = 16) -> str:
     """
     from data_warehouse_flink_spark.functions.dedup import _affine_constants
 
-    consts = _affine_constants(num_hashes)
+    consts = _affine_constants(NUM_HASHES)
     p = 2_147_483_647
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // BANDS
     sig_cols = ",\n             ".join(
         f"MIN(({a} * g + {b}) % {p}) AS h{i}"
         for i, (a, b) in enumerate(consts)
@@ -253,7 +257,7 @@ def _minhash_bands_sql(num_hashes: int = 64, bands: int = 16) -> str:
                 f"h{b * rows_per_band + r}" for r in range(rows_per_band)
             ),
         )
-        for b in range(bands)
+        for b in range(BANDS)
     )
     return f"""toks AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
@@ -274,15 +278,18 @@ def _minhash_bands_sql(num_hashes: int = 64, bands: int = 16) -> str:
     )"""
 
 
-def _minhash_lsh_oracle(
-    threshold: float = 0.3, num_hashes: int = 64, bands: int = 16
-) -> str:
+# The symmetric MinHash gate's Jaccard threshold, shared by its Spark
+# builder and its generated oracle.
+_MINHASH_THRESHOLD = 0.3
+
+
+def _minhash_lsh_oracle() -> str:
     """Generated oracle for the full MinHash→LSH→verify pipeline (see
     `_minhash_bands_sql` for the cross-engine exactness argument; a
     colliding candidate pair must still pass the exact Jaccard threshold
     to reach the output)."""
     return f"""
-    WITH {_minhash_bands_sql(num_hashes, bands)}, cand AS (
+    WITH {_minhash_bands_sql()}, cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
@@ -300,7 +307,7 @@ def _minhash_lsh_oracle(
     FROM common
     JOIN sizes sa ON doc_a = sa.doc_id
     JOIN sizes sb ON doc_b = sb.doc_id
-    WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= {threshold}
+    WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= {_MINHASH_THRESHOLD}
     """
 
 
@@ -318,21 +325,26 @@ def doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return minhash_lsh_dedup(
         _docs(spark, sf_dir),
-        threshold=0.3,
+        threshold=_MINHASH_THRESHOLD,
         grams=_trigram_grams(spark, sf_dir),  # trigram table; ngram lives there
         signatures=_minhash_sigs(spark, sf_dir, "md5"),
     )
 
 
-def _simhash_sig_ctes(bits: int = 48) -> str:
+# The md5-path SimHash signature width every SimHash gate and oracle uses.
+_SIMHASH_BITS = 48
+
+
+def _simhash_sig_ctes() -> str:
     """Shared CTE chain `toks → hashed → bitsums → sig` reproducing the
     Spark md5-path SimHash signatures value-exactly in DuckDB."""
     bitsum_cols = ",\n             ".join(
         f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS s{j}"
-        for j in range(bits)
+        for j in range(_SIMHASH_BITS)
     )
     assemble = " + ".join(
-        f"(CASE WHEN s{j} > 0 THEN {2 ** j} ELSE 0 END)" for j in range(bits)
+        f"(CASE WHEN s{j} > 0 THEN {2 ** j} ELSE 0 END)"
+        for j in range(_SIMHASH_BITS)
     )
     return f"""toks AS (
       SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -349,11 +361,9 @@ def _simhash_sig_ctes(bits: int = 48) -> str:
     )"""
 
 
-def _simhash_block_cte(
-    name: str, bits: int, n_blocks: int
-) -> str:
+def _simhash_block_cte(name: str, n_blocks: int) -> str:
     """One pigeonhole block table over `sig` with n_blocks equal slices."""
-    width = bits // n_blocks
+    width = _SIMHASH_BITS // n_blocks
     mask = (1 << width) - 1
     idx = ", ".join(str(i) for i in range(n_blocks))
     return f"""{name} AS (
@@ -364,19 +374,19 @@ def _simhash_block_cte(
     )"""
 
 
-def _simhash_oracle(bits: int = 48, max_hamming: int = 3) -> str:
+def _simhash_oracle() -> str:
     """Generated oracle for SimHash: 48-bit md5 token hashes, per-bit ±1
     sums, sign-assembled signatures, then the same pigeonhole
     quarter-blocked join the Spark side uses (lossless for Hamming ≤ 3,
     so brute-force and blocked results are identical — the blocked form
     keeps the oracle n·|blocks|, not n²)."""
     return f"""
-    WITH {_simhash_sig_ctes(bits)}, {_simhash_block_cte("blocks", bits, 4)}
+    WITH {_simhash_sig_ctes()}, {_simhash_block_cte("blocks", 4)}
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
     FROM blocks a JOIN blocks b
       ON a.block = b.block AND a.key = b.key AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     """
 
 
@@ -394,7 +404,7 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation serves both (2.3 s → 1.1 s steady-state at sf0.1).
     """
     sigs = _simhash_sigs(spark, sf_dir)
-    return simhash_pairs(sigs, max_hamming=3, bits=48).withColumn(
+    return simhash_pairs(sigs, max_hamming=3, bits=_SIMHASH_BITS).withColumn(
         "hamming", F.col("hamming").cast("long")
     )
 
@@ -502,22 +512,22 @@ def knn_bruteforce_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_bruteforce(embs, queries, k=5)
 
 
-def _knn_lsh_oracle(n_planes: int = 8, dim: int = 64) -> str:
+def _knn_lsh_oracle() -> str:
     """Generated oracle: the seeded hyperplanes are embedded as literals in
     BOTH engines (`similarity.hyperplanes` is the single source), and the
     sign test rounds the dot to 6 decimals first, so bucket ids — and hence
     the candidate sets — are engine-exact."""
     from data_warehouse_flink_spark.functions.similarity import hyperplanes
 
-    planes = hyperplanes(n_planes, dim)
+    planes = hyperplanes()
     plane_cols = ",\n             ".join(
-        "[" + ", ".join(str(float(v)) for v in planes[j]) + f"] AS p{j}"
-        for j in range(n_planes)
+        "[" + ", ".join(str(float(v)) for v in plane) + f"] AS p{j}"
+        for j, plane in enumerate(planes)
     )
     bucket = " + ".join(
-        f"(CASE WHEN ROUND(list_sum(list_transform(range(1, {dim + 1}), "
+        "(CASE WHEN ROUND(list_sum(list_transform(range(1, 65), "
         f"i -> vecd[i] * p{j}[i])), 6) > 0 THEN {2 ** j} ELSE 0 END)"
-        for j in range(n_planes)
+        for j in range(len(planes))
     )
     return f"""
     WITH planes AS (
@@ -533,7 +543,7 @@ def _knn_lsh_oracle(n_planes: int = 8, dim: int = 64) -> str:
       FROM v CROSS JOIN planes
     ), pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             ROUND(list_sum(list_transform(range(1, {dim + 1}),
+             ROUND(list_sum(list_transform(range(1, 65),
                      i -> q.vecd[i] * c.vecd[i])) / (q.norm * c.norm), 6)
                AS cosine
       FROM b q JOIN b c ON q.bucket = c.bucket
@@ -725,13 +735,13 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _multimodal_frames_oracle(frame_bytes: int = 64, stride: int = 4) -> str:
+def _multimodal_frames_oracle() -> str:
     """Generated oracle for `frame_sample`'s byte-chunk stand-in: frame
-    indices come from range(0, max(len/frame_bytes, 1), stride); each
+    indices come from range(0, max(len/64, 1), 4); each
     frame's bytes are sliced out of hex(encode(text)) and CRC-32'd with the
     same literal-table list_reduce as `_multimodal_oracle`."""
     tab = "[" + ", ".join(str(v) for v in _crc32_table()) + "]::BIGINT[]"
-    fb2 = frame_bytes * 2  # hex chars per frame
+    fb2 = 128  # hex chars per 64-byte frame
     return f"""
     WITH t AS (
       SELECT {tab} AS tab
@@ -742,7 +752,7 @@ def _multimodal_frames_oracle(frame_bytes: int = 64, stride: int = 4) -> str:
       FROM documents
     ), fr AS (
       SELECT doc_id, media_type, h,
-             unnest(range(0, greatest(len // {frame_bytes}, 1), {stride}))
+             unnest(range(0, greatest(len // 64, 1), 4))
                AS frame_idx,
              len
       FROM hx
@@ -966,7 +976,7 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_ivf_oracle(dim: int = 64) -> str:
+def _knn_ivf_oracle() -> str:
     """Generated oracle: the frozen IVF centroids (trained offline by
     tools/train_ivf_centroids.py, committed as literals) are embedded in BOTH
     engines; squared distances round to 6 decimals before the argmin with
@@ -979,7 +989,7 @@ def _knn_ivf_oracle(dim: int = 64) -> str:
         for j, c in enumerate(CENTROIDS)
     )
     dists = ", ".join(
-        f"ROUND(list_sum(list_transform(range(1, {dim + 1}), "
+        "ROUND(list_sum(list_transform(range(1, 65), "
         f"i -> (vecd[i] - c{j}[i]) * (vecd[i] - c{j}[i]))), 6)"
         for j in range(len(CENTROIDS))
     )
@@ -1001,7 +1011,7 @@ def _knn_ivf_oracle(dim: int = 64) -> str:
       FROM a
     ), pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             ROUND(list_sum(list_transform(range(1, {dim + 1}),
+             ROUND(list_sum(list_transform(range(1, 65),
                      i -> q.vecd[i] * c.vecd[i])) / (q.norm * c.norm), 6)
                AS cosine
       FROM b q JOIN b c ON q.cell = c.cell
@@ -1062,10 +1072,9 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, sf_dir): shared by knn_ivf and knn_rrf so repeated calls
     neither re-checkpoint nor re-plan the centroid literal tree.
 
-    Built with `frozen_ivf_assign`'s DEFAULT id_col/vec_col
-    ("vec_id"/"embedding") — consumers passing this as `assigned` must use
-    the same id_col, since the index replaces their `embeddings` argument
-    outright (ADVICE r7 #2)."""
+    Built over the "vec_id"/"embedding" columns, which `knn_ivf` reads
+    too: the index replaces its `embeddings` argument outright (ADVICE
+    r7 #2)."""
     from data_warehouse_flink_spark.functions.similarity import (
         frozen_ivf_assign,
     )
@@ -1337,9 +1346,9 @@ def streaming_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------ streaming near-dedup ----
-def _near_dedup_oracle(n_batches: int = 4) -> str:
+def _near_dedup_oracle() -> str:
     """Generated oracle for the streaming first-seen ledger: the replay has
-    a FIXED batch structure (batch b = doc_id % n_batches, replayed in
+    a FIXED batch structure (batch b = doc_id % 4, replayed in
     order), so the stateful loop unrolls into a CTE chain — per batch:
     docs bucket-colliding with the ledger drop, bucket-minimal survivors
     among the remainder are admitted, and their keys accumulate into the
@@ -1348,11 +1357,11 @@ def _near_dedup_oracle(n_batches: int = 4) -> str:
     stages = []
     prev_ledger = None
     drop_names = []
-    for b in range(n_batches):
+    for b in range(4):
         bn, cn, dn, ln = f"b{b}", f"clean{b}", f"drop{b}", f"led{b}"
         stages.append(
             f"""{bn} AS MATERIALIZED (
-      SELECT doc_id, band, bucket FROM bands WHERE doc_id % {n_batches} = {b}
+      SELECT doc_id, band, bucket FROM bands WHERE doc_id % 4 = {b}
     )"""
         )
         if prev_ledger is None:
@@ -2087,7 +2096,7 @@ def token_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -------------------------------------------- product quantization ANN ----
-def _knn_pq_oracle(k: int = 5) -> str:
+def _knn_pq_oracle() -> str:
     """Generated oracle: the frozen PQ codebooks (trained offline by
     tools/train_pq_codebooks.py, committed as literals) are embedded in BOTH
     engines. Per-subspace squared distances round to 6 decimals before the
@@ -2143,7 +2152,7 @@ def _knn_pq_oracle(k: int = 5) -> str:
              PARTITION BY query_id ORDER BY adc_dist, neighbor_id)
              AS BIGINT) AS rn
     FROM pairs
-    QUALIFY rn <= {k}
+    QUALIFY rn <= 5
     """
 
 
@@ -3243,7 +3252,7 @@ def _perplexity_buckets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------- IVF-PQ: cell-restricted compressed scan ----
-def _knn_ivf_pq_oracle(k: int = 5, dim: int = 64) -> str:
+def _knn_ivf_pq_oracle() -> str:
     """Generated oracle composing the two frozen stages: the IVF centroid
     cell assignment (verbatim from `_knn_ivf_oracle`'s CTE chain) and the
     PQ encode/ADC tables (verbatim from `_knn_pq_oracle`'s), with the pair
@@ -3260,7 +3269,7 @@ def _knn_ivf_pq_oracle(k: int = 5, dim: int = 64) -> str:
         for j, c in enumerate(CENTROIDS)
     )
     cdists = ", ".join(
-        f"ROUND(list_sum(list_transform(range(1, {dim + 1}), "
+        "ROUND(list_sum(list_transform(range(1, 65), "
         f"i -> (vecd[i] - c{j}[i]) * (vecd[i] - c{j}[i]))), 6)"
         for j in range(len(CENTROIDS))
     )
@@ -3319,7 +3328,7 @@ def _knn_ivf_pq_oracle(k: int = 5, dim: int = 64) -> str:
              PARTITION BY query_id ORDER BY adc_dist, neighbor_id)
              AS BIGINT) AS rn
     FROM pairs
-    QUALIFY rn <= {k}
+    QUALIFY rn <= 5
     """
 
 
@@ -3670,13 +3679,13 @@ def corpus_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------ LSH recall evaluation (banded vs brute force) ----
-def _lsh_recall_oracle(num_hashes: int = 64, bands: int = 16) -> str:
+def _lsh_recall_oracle() -> str:
     """Generated oracle: exact trigram-Jaccard pairs (brute force) banded
     by similarity, flagged with LSH-candidate membership from the SAME
     md5/affine signature CTEs the `doc_minhash_lsh` gate verifies — i.e.
     the evaluation both stages already proved correct, joined."""
     return f"""
-    WITH {_minhash_bands_sql(num_hashes, bands)}, cand AS (
+    WITH {_minhash_bands_sql()}, cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
@@ -3748,7 +3757,7 @@ def doc_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_recall_oracle(bits: int = 48) -> str:
+def _simhash_recall_oracle() -> str:
     """Generated oracle for the SimHash recall audit: the exact pair set
     for Hamming ≤ 5 comes from a 6-block pigeonhole join (lossless there
     by construction, so it IS brute force without the n² cost), the
@@ -3756,9 +3765,9 @@ def _simhash_recall_oracle(bits: int = 48) -> str:
     band is their ratio. Reuses the signature CTEs the `doc_simhash`
     oracle already proved value-exact."""
     return f"""
-    WITH {_simhash_sig_ctes(bits)},
-    {_simhash_block_cte("blocks6", bits, 6)},
-    {_simhash_block_cte("blocks4", bits, 4)},
+    WITH {_simhash_sig_ctes()},
+    {_simhash_block_cte("blocks6", 6)},
+    {_simhash_block_cte("blocks4", 4)},
     exact AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
              bit_count(xor(a.simhash, b.simhash)) AS hamming
@@ -4832,29 +4841,25 @@ _KMEANS_DIM = 64
 def _quant_long_ctes(
     prefix: str = "",
     dim: int = _KMEANS_DIM,
-    scale: int | None = None,
     vec_sql: str = "embedding",
     where_sql: str = "",
 ) -> str:
     """The ONE DuckDB spelling of the quantize → long-format step:
-    {prefix}qv (vec_id, q = FLOOR(DOUBLE(x)·scale) per dim) and
+    {prefix}qv (vec_id, q = FLOOR(DOUBLE(x)·QUANT_SCALE) per dim) and
     {prefix}ql (vec_id, dim, v). Shared by the Lloyd training chains
     (`_kmeans_ctes`) and the sampled-fit oracles' full-corpus
     assignment blocks — a second hand-copied spelling of the FLOOR
-    quantization is exactly the drift `_kmeans_ctes`' scale-constant
-    rule exists to prevent."""
-    if scale is None:
-        from data_warehouse_flink_spark.functions.clustering import (
-            QUANT_SCALE,
-        )
+    quantization could drift. The scale is `clustering.QUANT_SCALE`, the
+    one constant the Spark side quantizes with; an independent literal
+    here would surface only as a mystery parity mismatch."""
+    from data_warehouse_flink_spark.functions.clustering import QUANT_SCALE
 
-        scale = QUANT_SCALE
     P = prefix
     where = f"\n      WHERE {where_sql}" if where_sql else ""
     return f"""{P}qv AS MATERIALIZED (
       SELECT vec_id,
              list_transform({vec_sql},
-               x -> CAST(FLOOR(CAST(x AS DOUBLE) * {scale}.0) AS BIGINT))
+               x -> CAST(FLOOR(CAST(x AS DOUBLE) * {QUANT_SCALE}.0) AS BIGINT))
                AS q
       FROM embeddings{where}
     ), {P}ql AS MATERIALIZED (
@@ -4867,7 +4872,6 @@ def _kmeans_ctes(
     k: int = _KMEANS_K,
     dim: int = _KMEANS_DIM,
     iters: int = _KMEANS_ITERS,
-    scale: int | None = None,
     prefix: str = "",
     vec_sql: str = "embedding",
     where_sql: str = "",
@@ -4879,9 +4883,7 @@ def _kmeans_ctes(
     {prefix}c{iters} (final centroids) and {prefix}a{iters} (final
     assignment under them).
 
-    `scale` defaults to `clustering.QUANT_SCALE` — the one constant the
-    Spark side quantizes with; an independent literal here would let the
-    two sides drift and surface only as a mystery parity mismatch.
+    The quantization is `_quant_long_ctes`' (`clustering.QUANT_SCALE`).
     `prefix` namespaces every CTE so several chains (one per PQ subspace)
     can share one WITH clause; `vec_sql` is the DuckDB expression for the
     vector to quantize (a list slice for subspace training); `where_sql`
@@ -4894,7 +4896,6 @@ def _kmeans_ctes(
         _quant_long_ctes(
             prefix=prefix,
             dim=dim,
-            scale=scale,
             vec_sql=vec_sql,
             where_sql=where_sql,
         ),
@@ -5133,7 +5134,7 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the quantized table with F.expr of this text, the oracle embeds it in
 # the training CTEs' WHERE. md5 (not xxhash64) because the sample must
 # hash identically in DuckDB; ~1/2 of vec_ids match.
-def _md5_sample_sql(denom: int, id_sql: str = "CAST(vec_id AS STRING)") -> str:
+def _md5_sample_sql(denom: int) -> str:
     """Engine-portable deterministic 1/denom hash-sample predicate: the
     row survives when the md5 hex prefix falls in the first 16^L/denom
     length-L prefixes (L = shortest hex-prefix length that divides
@@ -5151,7 +5152,7 @@ def _md5_sample_sql(denom: int, id_sql: str = "CAST(vec_id AS STRING)") -> str:
         length += 1
     count = (16 ** length) // denom
     prefixes = ", ".join(f"'{i:0{length}x}'" for i in range(count))
-    return f"substr(md5({id_sql}), 1, {length}) IN ({prefixes})"
+    return f"substr(md5(CAST(vec_id AS STRING)), 1, {length}) IN ({prefixes})"
 
 
 _KMEANS_SAMPLE_SQL = (
@@ -5204,20 +5205,18 @@ def knn_ivf_trained_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One source of truth for the gate's parameters: the Spark side builds its
 # is_batch Column from the SAME SQL text the oracle embeds (F.expr), and
 # both sides take the threshold from the constant — the drift-proofing
-# the parameterized _minhash_lsh_oracle established for the symmetric gate.
+# _MINHASH_THRESHOLD gives the symmetric gate.
 _INC_THRESHOLD = 0.3
 _INC_BATCH_SQL = "doc_id % 10 = 7"
 
 
-def _minhash_incremental_oracle(
-    threshold: float = _INC_THRESHOLD, batch_sql: str = _INC_BATCH_SQL
-) -> str:
+def _minhash_incremental_oracle() -> str:
     """Generated oracle for the asymmetric batch-vs-ledger pipeline:
     shared signature/band CTEs, candidates restricted to batch × corpus,
     exact-Jaccard verify, best-match rank per batch doc."""
 
     def pred(alias: str) -> str:
-        return batch_sql.replace("doc_id", f"{alias}.doc_id")
+        return _INC_BATCH_SQL.replace("doc_id", f"{alias}.doc_id")
 
     return f"""
     WITH {_minhash_bands_sql()}, cand AS (
@@ -5239,7 +5238,7 @@ def _minhash_incremental_oracle(
       FROM common cm
       JOIN sizes sa ON cm.doc_id = sa.doc_id
       JOIN sizes sb ON cm.match_id = sb.doc_id
-      WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= {threshold}
+      WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= {_INC_THRESHOLD}
     )
     SELECT doc_id, match_id, jaccard
     FROM scored
@@ -5422,10 +5421,10 @@ def embedding_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------- trained-PQ serving: integer-exact ADC scan ----
-def _adc_tail(a_name, d_name, k: int = 5) -> str:
+def _adc_tail(a_name, d_name) -> str:
     """The ONE spelling of the ADC serving tail: per-subspace encodings
     joined into (vec_id, c0..c{M-1}), query-anchored lookup joins, exact
-    BIGINT distance sum, top-k with neighbor-id tie-break. `a_name(m)` /
+    BIGINT distance sum, top-5 with neighbor-id tie-break. `a_name(m)` /
     `d_name(m)` name each subspace's assignment / distance CTE — the
     full-fit oracle passes the in-chain p{m}_a/d names, the sampled-fit
     oracle its full-corpus g{m}a/g{m}d blocks."""
@@ -5455,11 +5454,11 @@ def _adc_tail(a_name, d_name, k: int = 5) -> str:
              PARTITION BY query_id ORDER BY adc_dist, neighbor_id)
              AS BIGINT) AS rn
     FROM pairs
-    QUALIFY rn <= {k}
+    QUALIFY rn <= 5
     """
 
 
-def _knn_pq_trained_oracle(k: int = 5) -> str:
+def _knn_pq_trained_oracle() -> str:
     """Generated oracle for ADC search under the TRAINED codebooks: the
     training chains' final-assignment CTEs ARE the encoding (p{m}_a2 =
     each vector's nearest code per subspace) and their distance CTEs
@@ -5481,9 +5480,7 @@ def _knn_pq_trained_oracle(k: int = 5) -> str:
         )
         for m in range(_PQ_TRAIN_M)
     )
-    tail = _adc_tail(
-        lambda m: f"p{m}_a{T}", lambda m: f"p{m}_d{T}", k=k
-    )
+    tail = _adc_tail(lambda m: f"p{m}_a{T}", lambda m: f"p{m}_d{T}")
     return f"""
     WITH {chains}{tail}"""
 
@@ -5542,7 +5539,7 @@ def knn_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_pq_sampled_oracle(k: int = 5) -> str:
+def _knn_pq_sampled_oracle() -> str:
     """ADC search under SAMPLE-fit codebooks: the training chains carry
     the hash-sample WHERE, so their in-chain assignment/distance CTEs
     cover only the sample — a full-corpus quantized long table (gqv/gql)
@@ -5577,7 +5574,7 @@ def _knn_pq_sampled_oracle(k: int = 5) -> str:
     )"""
         for m in range(M)
     )
-    tail = _adc_tail(lambda m: f"g{m}a", lambda m: f"g{m}d", k=k)
+    tail = _adc_tail(lambda m: f"g{m}a", lambda m: f"g{m}d")
     return f"""
     WITH {chains}, {full}, {blocks}{tail}"""
 
@@ -5614,14 +5611,12 @@ _register_knn_recall_report()
 def sampled_fit_recall_sweep(
     embs: DataFrame,
     denominators: tuple[int, ...] = (2, 4, 16, 64),
-    k: int = 5,
-    n_queries: int = 20,
     brute: DataFrame | None = None,
 ) -> list[tuple]:
     """Sample-RATE sweep for the sampled-fit quantizer tiers (VERDICT r9
     #2): for each 1/denom md5 hash-sample rate, fit the IVF centroids
     and the PQ codebooks on the sample, serve the FULL corpus, and
-    measure recall@k against exact brute-force cosine — the
+    measure recall@5 against exact brute-force cosine — the
     `knn_recall_report` harness swept along the training-sample axis.
     Local measurement only (NOT a registry entry): the registered gates
     grade the frozen 1/2-rate tiers; this answers "how far down can the
@@ -5658,21 +5653,21 @@ def sampled_fit_recall_sweep(
     # every fit re-scans the quantized table and every serve re-scans the
     # corpus — materialize each once for the whole sweep
     qdf = quantize_embeddings(embs).localCheckpoint(eager=True)
-    queries = embs.filter(F.col("vec_id") < n_queries)
+    queries = embs.filter(F.col("vec_id") < 20)
     if brute is None:
         brute = (
-            knn_bruteforce(embs, queries, k=k)
+            knn_bruteforce(embs, queries, k=5)
             .select("query_id", "neighbor_id")
             .localCheckpoint(eager=True)
         )
     n_possible = brute.count()
     if n_possible == 0:
-        # no query ids below n_queries (or an empty passed-in brute
+        # no query ids below 20 (or an empty passed-in brute
         # frame): every recall would divide by zero — misconfiguration,
         # not a measurable sweep point
         raise ValueError(
-            f"no brute-force ground truth: 0 rows for the first "
-            f"{n_queries} query ids — check vec_id coverage of `embs`"
+            "no brute-force ground truth: 0 rows for the first "
+            "20 query ids — check vec_id coverage of `embs`"
         )
 
     def hits(top: DataFrame) -> int:
@@ -5711,7 +5706,7 @@ def sampled_fit_recall_sweep(
                 assign_quantized_cells(qdf, cents).select("vec_id", "cell"),
                 "vec_id",
             )
-            n_hits = hits(knn_ivf(embs, queries, k=k, assigned=assigned))
+            n_hits = hits(knn_ivf(embs, queries, k=5, assigned=assigned))
             ivf_row = (
                 "ivf_trained_sampled", denom, sample_n,
                 n_hits, n_possible, n_hits * 1_000_000 // n_possible,
@@ -5732,12 +5727,12 @@ def sampled_fit_recall_sweep(
             )
             codes = pq_trained_codes(qdf, books, sub_dim=_PQ_TRAIN_SUB_DIM)
             lookups = pq_query_lookup(
-                qdf.filter(F.col("vec_id") < n_queries),
+                qdf.filter(F.col("vec_id") < 20),
                 books,
                 sub_dim=_PQ_TRAIN_SUB_DIM,
             )
             n_hits = hits(
-                adc_topk(codes, lookups, k=k, m_subspaces=_PQ_TRAIN_M)
+                adc_topk(codes, lookups, k=5, m_subspaces=_PQ_TRAIN_M)
             )
             pq_row = (
                 "pq_trained_sampled", denom, sample_n,
@@ -5767,8 +5762,6 @@ def sampled_fit_admissible(
     family: str,
     floor_ppm: int | None = None,
     size_floor: int | None = None,
-    k: int = 5,
-    n_queries: int = 20,
     brute: DataFrame | None = None,
 ) -> dict:
     """Executable pre-serve acceptance gate for a sampled-fit quantizer
@@ -5777,7 +5770,7 @@ def sampled_fit_admissible(
     `sampled_fit_recall_sweep` at the single candidate rate and grades
     the result against SCALING.md's stated minimum-admissible rules
     (`_SAMPLED_FIT_FLOORS`): the family's absolute sample-size floor AND
-    a measured recall@k floor at that exact rate — the "run
+    a measured recall@5 floor at that exact rate — the "run
     `knn_recall_report` at the candidate rate before serving" rule as a
     callable check instead of prose.
 
@@ -5797,9 +5790,7 @@ def sampled_fit_admissible(
     default_size, default_ppm = _SAMPLED_FIT_FLOORS[family]
     size_floor = default_size if size_floor is None else size_floor
     floor_ppm = default_ppm if floor_ppm is None else floor_ppm
-    rows = sampled_fit_recall_sweep(
-        embs, denominators=(denom,), k=k, n_queries=n_queries, brute=brute
-    )
+    rows = sampled_fit_recall_sweep(embs, denominators=(denom,), brute=brute)
     tier = f"{family}_trained_sampled"
     (_t, _d, sample_n, _hits, _possible, recall_ppm) = next(
         r for r in rows if r[0] == tier
@@ -5834,9 +5825,7 @@ _BPE_REPR_SQL = (
 )
 
 
-def _bpe_train_oracle(
-    n_merges: int = _BPE_TRAIN_MERGES, text_sql: str = "text"
-) -> str:
+def _bpe_train_oracle(text_sql: str = "text") -> str:
     """Unrolled pair-count loop (Sennrich et al. 2016): per rank, count
     adjacent non-boundary symbol pairs over the current corpus
     representation, take the argmax (ties: lower left, then lower right
@@ -5866,7 +5855,7 @@ def _bpe_train_oracle(
             "contains 'string_split(text'"
         )
     parts = [f"r0 AS (\n      SELECT {repr_sql} AS r FROM documents\n    )"]
-    for t in range(n_merges):
+    for t in range(_BPE_TRAIN_MERGES):
         parts.append(
             f""", pc{t} AS (
       SELECT t[i] AS a, t[i + 1] AS b, count(*) AS c
@@ -5887,7 +5876,7 @@ def _bpe_train_oracle(
     arms = "\n      UNION ALL ".join(
         f"SELECT CAST({t} AS BIGINT) AS rank, a AS lhs, b AS rhs, c AS cnt"
         f" FROM m{t}"
-        for t in range(n_merges)
+        for t in range(_BPE_TRAIN_MERGES)
     )
     return f"""
     WITH {"".join(parts)}

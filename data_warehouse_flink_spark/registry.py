@@ -50,13 +50,13 @@ _QUERY_MODULES = (
 )
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(name: str, oracle: str | None = None):
     """Decorator: register a Spark query, optionally with its DuckDB oracle."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = Query(name, fn, oracle, doc or (fn.__doc__ or ""))
+        _REGISTRY[name] = Query(name, fn, oracle, fn.__doc__ or "")
         return fn
 
     return deco

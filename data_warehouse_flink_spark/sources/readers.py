@@ -8,8 +8,9 @@ app/NetworkFlow.scala:38-43). Here each format is a schema'd `spark.read.csv`
 TimestampType `ts` column (the reference multiplies epoch seconds by 1000 at
 watermark time; we keep the raw column AND the typed one, SURVEY.md §1.4).
 
-Every reader works identically with `spark.readStream` (pass streaming=True)
-— same schema, same columns — which is the batch/stream duality contract.
+`apache_log` and `documents_jsonl` also read as a file stream (pass
+streaming=True) — same schema, same columns — which is the batch/stream
+duality contract.
 """
 
 from __future__ import annotations
@@ -20,52 +21,43 @@ from pyspark.sql import functions as F
 from data_warehouse_flink_spark import schemas
 
 
-def _read(
-    spark: SparkSession, path: str, schema, streaming: bool, **options
-) -> DataFrame:
-    reader = spark.readStream if streaming else spark.read
-    return reader.schema(schema).options(**options).csv(path)
+def _read(spark: SparkSession, path: str, schema) -> DataFrame:
+    return spark.read.schema(schema).csv(path)
 
 
-def user_behavior(
-    spark: SparkSession, path: str, streaming: bool = False
-) -> DataFrame:
+def user_behavior(spark: SparkSession, path: str) -> DataFrame:
     """UserBehavior.csv: userId,itemId,categoryId,behavior,ts(sec)."""
-    df = _read(spark, path, schemas.USER_BEHAVIOR, streaming)
+    df = _read(spark, path, schemas.USER_BEHAVIOR)
     return df.withColumn("ts", F.timestamp_seconds("ts_sec"))
 
 
-def ad_click_log(
-    spark: SparkSession, path: str, streaming: bool = False
-) -> DataFrame:
+def ad_click_log(spark: SparkSession, path: str) -> DataFrame:
     """AdClickLog.csv: userId,adId,province,city,ts(sec)."""
-    df = _read(spark, path, schemas.AD_CLICK_LOG, streaming)
+    df = _read(spark, path, schemas.AD_CLICK_LOG)
     return df.withColumn("ts", F.timestamp_seconds("ts_sec"))
 
 
-def login_log(spark: SparkSession, path: str, streaming: bool = False) -> DataFrame:
+def login_log(spark: SparkSession, path: str) -> DataFrame:
     """LoginLog.csv: userId,ip,status,ts(sec)."""
-    df = _read(spark, path, schemas.LOGIN_EVENT, streaming)
+    df = _read(spark, path, schemas.LOGIN_EVENT)
     return df.withColumn("ts", F.timestamp_seconds("ts_sec"))
 
 
-def order_log(spark: SparkSession, path: str, streaming: bool = False) -> DataFrame:
+def order_log(spark: SparkSession, path: str) -> DataFrame:
     """OrderLog.csv: orderId,eventType,txId(may be empty),ts(sec).
 
     Empty txId arrives as NULL from the CSV reader; normalize to the
     reference's empty-string sentinel (OrderLog.csv:1, TxMatch.scala:33).
     """
-    df = _read(spark, path, schemas.ORDER_EVENT, streaming)
+    df = _read(spark, path, schemas.ORDER_EVENT)
     return df.withColumn("tx_id", F.coalesce("tx_id", F.lit(""))).withColumn(
         "ts", F.timestamp_seconds("ts_sec")
     )
 
 
-def receipt_log(
-    spark: SparkSession, path: str, streaming: bool = False
-) -> DataFrame:
+def receipt_log(spark: SparkSession, path: str) -> DataFrame:
     """ReceiptLog.csv: txId,payChannel,ts(sec)."""
-    df = _read(spark, path, schemas.RECEIPT_EVENT, streaming)
+    df = _read(spark, path, schemas.RECEIPT_EVENT)
     return df.withColumn("ts", F.timestamp_seconds("ts_sec"))
 
 
@@ -90,12 +82,12 @@ def apache_log(spark: SparkSession, path: str, streaming: bool = False) -> DataF
     )
 
 
-def parse_csv_user_behavior(values: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_csv_user_behavior(values: DataFrame) -> DataFrame:
     """P1 over a Kafka-style string column: split + positional casts into the
     UserBehavior shape (the reference's map() after FlinkKafkaConsumer,
     HotItems.scala:49-52). JVM split/cast — usable on both batch and
     streaming DataFrames (e.g. the output of kafka_events)."""
-    parts = F.split(F.col(value_col), ",")
+    parts = F.split(F.col("value"), ",")
     return values.select(
         parts.getItem(0).cast("long").alias("user_id"),
         parts.getItem(1).cast("long").alias("item_id"),

@@ -21,10 +21,10 @@ def write_partitioned(
     path: str,
     partition_cols: list[str] | None = None,
     files_per_partition: int = 1,
-    mode: str = "overwrite",
     format: str = "parquet",
 ) -> None:
-    """Land a result as day/key-partitioned columnar files.
+    """Land a result as day/key-partitioned columnar files, overwriting
+    `path`.
 
     `format` ∈ {parquet, orc, json}: parquet is the default interchange
     format; ORC ships in Spark core (the Hive-ecosystem peer, same
@@ -61,11 +61,11 @@ def write_partitioned(
             )
         else:
             out = df.repartition(*[F.col(c) for c in partition_cols])
-        out.write.mode(mode).partitionBy(*partition_cols).format(
+        out.write.mode("overwrite").partitionBy(*partition_cols).format(
             format
         ).save(path)
     else:
-        df.coalesce(files_per_partition).write.mode(mode).format(
+        df.coalesce(files_per_partition).write.mode("overwrite").format(
             format
         ).save(path)
 

@@ -24,12 +24,9 @@ from data_warehouse_flink_spark.streaming.jobs import (
 )
 
 
-def curate_stream(
-    documents: DataFrame,
-    min_chars: int = 150,
-    langs: tuple[str, ...] = ("en", "zh"),
-) -> DataFrame:
-    """Quality gate + first-seen exact dedup on a document stream.
+def curate_stream(documents: DataFrame) -> DataFrame:
+    """Quality gate (≥ 150 chars, en or zh) + first-seen exact dedup on a
+    document stream.
 
     dropDuplicates on the content hash keeps state per distinct hash — at
     100 TB that state belongs in the RocksDB state store backend (a config
@@ -39,7 +36,7 @@ def curate_stream(
     dedup must be global, not time-scoped.
     """
     gated = documents.filter(
-        (F.col("n_chars") >= min_chars) & F.col("lang").isin(*langs)
+        (F.col("n_chars") >= 150) & F.col("lang").isin("en", "zh")
     )
     hashed = gated.withColumn("text_hash", F.md5(F.lower(F.col("text"))))
     return hashed.dropDuplicates(["text_hash"])

@@ -207,19 +207,17 @@ def streaming_session_count(
     ts_col: str,
     gap: str,
     keys: list[str],
-    watermark: str = "0 seconds",
-    count_alias: str = "n_events",
 ) -> DataFrame:
     """Sessionization on a stream: `F.session_window` merges events within
     `gap` of each other per key (batch twin: operators.detection.sessionize).
     """
-    wm = stream.withWatermark(ts_col, watermark)
+    wm = stream.withWatermark(ts_col, "0 seconds")
     agg = wm.groupBy(
         F.session_window(F.col(ts_col), gap), *[F.col(k) for k in keys]
-    ).agg(F.count("*").alias(count_alias))
+    ).agg(F.count("*").alias("n_events"))
     return agg.select(
         F.unix_micros("session_window.start").alias("session_start_us"),
         F.unix_micros("session_window.end").alias("session_end_us"),
         *keys,
-        count_alias,
+        "n_events",
     )

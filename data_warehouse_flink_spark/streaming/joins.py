@@ -19,7 +19,6 @@ def stream_window_join(
     left_ts: str,
     right_ts: str,
     size: str,
-    watermark: str = "0 seconds",
 ) -> DataFrame:
     """J2 streaming: equi-join inside the same tumbling window bucket.
 
@@ -27,10 +26,10 @@ def stream_window_join(
     (key, window) — state for a bucket is dropped once the watermark passes
     its end; no unbounded state.
     """
-    lw = left.withWatermark(left_ts, watermark).withColumn(
+    lw = left.withWatermark(left_ts, "0 seconds").withColumn(
         "window", F.window(left_ts, size)
     )
-    rw = right.withWatermark(right_ts, watermark).withColumn(
+    rw = right.withWatermark(right_ts, "0 seconds").withColumn(
         "window", F.window(right_ts, size)
     )
     return lw.join(rw, on=[key, "window"], how="inner")
@@ -44,7 +43,6 @@ def stream_interval_join(
     right_ts: str,
     lower_sec: int,
     upper_sec: int,
-    watermark: str = "0 seconds",
 ) -> DataFrame:
     """J3 streaming: key-equal + right.ts ∈ [left.ts+lower, left.ts+upper].
 
@@ -52,8 +50,8 @@ def stream_interval_join(
     range predicate let the engine expire state (a row is droppable once the
     other side's watermark passes its ts + the bound).
     """
-    l = left.withWatermark(left_ts, watermark).alias("l")
-    r = right.withWatermark(right_ts, watermark).alias("r")
+    l = left.withWatermark(left_ts, "0 seconds").alias("l")
+    r = right.withWatermark(right_ts, "0 seconds").alias("r")
     cond = (
         (F.col(f"l.{key}") == F.col(f"r.{key}"))
         & (
@@ -69,13 +67,7 @@ def stream_interval_join(
 
 
 def tx_match_stream_joined(
-    pays: DataFrame,
-    receipts: DataFrame,
-    key: str = "tx_id",
-    pay_ts: str = "ts",
-    receipt_ts: str = "ts",
-    bound_sec: int = 5,
-    watermark: str = "0 seconds",
+    pays: DataFrame, receipts: DataFrame, bound_sec: int = 5
 ) -> DataFrame:
     """J1 entirely JVM-side: one watermarked stream-stream FULL OUTER join.
 
@@ -90,11 +82,11 @@ def tx_match_stream_joined(
 
     Output: tx_id, pay_us, receipt_us (nullable), result_type.
     """
-    p = pays.withWatermark(pay_ts, watermark).select(
-        F.col(key).alias("p_key"), F.col(pay_ts).alias("p_ts")
+    p = pays.withWatermark("ts", "0 seconds").select(
+        F.col("tx_id").alias("p_key"), F.col("ts").alias("p_ts")
     )
-    r = receipts.withWatermark(receipt_ts, watermark).select(
-        F.col(key).alias("r_key"), F.col(receipt_ts).alias("r_ts")
+    r = receipts.withWatermark("ts", "0 seconds").select(
+        F.col("tx_id").alias("r_key"), F.col("ts").alias("r_ts")
     )
     cond = (
         (F.col("p_key") == F.col("r_key"))
@@ -103,7 +95,7 @@ def tx_match_stream_joined(
     )
     j = p.join(r, on=cond, how="full_outer")
     return j.select(
-        F.coalesce("p_key", "r_key").alias(key),
+        F.coalesce("p_key", "r_key").alias("tx_id"),
         F.unix_micros("p_ts").alias("pay_us"),
         F.unix_micros("r_ts").alias("receipt_us"),
         F.when(

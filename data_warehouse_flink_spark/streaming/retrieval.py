@@ -22,8 +22,6 @@ def knn_stream(
     query_stream: DataFrame,
     out_path: str,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> StreamingQuery:
     """Exact cosine top-k for each streamed query vector.
 
@@ -41,9 +39,7 @@ def knn_stream(
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        ranked = knn_bruteforce(
-            corpus, batch_df, k=k, id_col=id_col, vec_col=vec_col
-        )
+        ranked = knn_bruteforce(corpus, batch_df, k=k)
         ranked.write.mode("append").parquet(out_path)
 
     return run_foreach_batch(query_stream, per_batch, output_mode="append")

@@ -58,7 +58,7 @@ ORDER_STATE_SCHEMA = T.StructType(
 )
 
 
-def make_order_timeout_fn(timeout_sec: int, pay_grace_sec: int = 5):
+def make_order_timeout_fn(timeout_sec: int):
     timeout_us = timeout_sec * 1_000_000
 
     def fn(
@@ -111,27 +111,21 @@ def make_order_timeout_fn(timeout_sec: int, pay_grace_sec: int = 5):
             state.update((create_us, pay_us))
             if create_us:
                 _set_timer(state, create_us // 1000 + timeout_sec * 1000)
-            else:  # pay with no create yet: wait a grace period for it
-                _set_timer(state, pay_us // 1000 + pay_grace_sec * 1000)
+            else:  # pay with no create yet: wait a 5 s grace period for it
+                _set_timer(state, pay_us // 1000 + 5_000)
         yield from iter(out)
 
     return fn
 
 
-def order_timeout_stream(
-    orders: DataFrame,
-    timeout_sec: int,
-    watermark: str = "0 seconds",
-    order_col: str = "order_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def order_timeout_stream(orders: DataFrame, timeout_sec: int) -> DataFrame:
     """Streaming order monitor: orders(order_id, event_type∈{create,pay}, ts).
 
     Emits one row per order with the 4-class outcome; timers fire when the
     event-time watermark passes create+timeout (or pay+grace).
     """
-    wm = orders.withWatermark(ts_col, watermark)
-    return wm.groupBy(F.col(order_col).alias("order_id")).applyInPandasWithState(
+    wm = orders.withWatermark("ts", "0 seconds")
+    return wm.groupBy("order_id").applyInPandasWithState(
         make_order_timeout_fn(timeout_sec),
         ORDER_OUT_SCHEMA,
         ORDER_STATE_SCHEMA,
@@ -159,7 +153,7 @@ LOGIN_STATE_SCHEMA = T.StructType(
 )
 
 
-def make_login_fail_fn(window_sec: int, min_count: int, fail_value: str):
+def make_login_fail_fn(window_sec: int, min_count: int):
     window_us = window_sec * 1_000_000
 
     def fn(
@@ -174,7 +168,7 @@ def make_login_fail_fn(window_sec: int, min_count: int, fail_value: str):
         rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts")
         for row in rows.itertuples(index=False):
             ev_us = int(row.ts.value // 1_000)
-            if row.status == fail_value:
+            if row.status == "fail":
                 fails.append(ev_us)
                 fails = [t for t in fails if ev_us - t <= window_us]
                 if len(fails) >= min_count:
@@ -202,19 +196,13 @@ def make_login_fail_fn(window_sec: int, min_count: int, fail_value: str):
 
 
 def login_fail_stream(
-    logins: DataFrame,
-    window_sec: int,
-    min_count: int,
-    fail_value: str = "fail",
-    watermark: str = "3 seconds",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
+    logins: DataFrame, window_sec: int, min_count: int
 ) -> DataFrame:
     """Streaming brute-force detector: ≥N fails within window, reset on
     success; emits (user, first/last fail time, count) once per burst."""
-    wm = logins.withWatermark(ts_col, watermark)
-    return wm.groupBy(F.col(user_col).alias("user_id")).applyInPandasWithState(
-        make_login_fail_fn(window_sec, min_count, fail_value),
+    wm = logins.withWatermark("ts", "3 seconds")
+    return wm.groupBy("user_id").applyInPandasWithState(
+        make_login_fail_fn(window_sec, min_count),
         LOGIN_OUT_SCHEMA,
         LOGIN_STATE_SCHEMA,
         "append",
@@ -243,7 +231,7 @@ CONSEC_STATE_SCHEMA = T.StructType(
 )
 
 
-def make_consecutive_fail_fn(max_gap_sec: int, fail_value: str):
+def make_consecutive_fail_fn(max_gap_sec: int):
     gap_us = max_gap_sec * 1_000_000
 
     def fn(
@@ -259,8 +247,8 @@ def make_consecutive_fail_fn(max_gap_sec: int, fail_value: str):
         for row in rows.itertuples(index=False):
             ev_us = int(row.ts.value // 1_000)
             if (
-                row.status == fail_value
-                and last_status == fail_value
+                row.status == "fail"
+                and last_status == "fail"
                 and ev_us - last_us <= gap_us
             ):
                 out.append(
@@ -281,21 +269,14 @@ def make_consecutive_fail_fn(max_gap_sec: int, fail_value: str):
     return fn
 
 
-def consecutive_fail_stream(
-    logins: DataFrame,
-    max_gap_sec: int = 2,
-    fail_value: str = "fail",
-    watermark: str = "3 seconds",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def consecutive_fail_stream(logins: DataFrame, max_gap_sec: int = 2) -> DataFrame:
     """Streaming CEP-strict detector: fail `next` fail within the bound.
 
     Batch twin: operators.detection.consecutive_event_pairs (lag form).
     """
-    wm = logins.withWatermark(ts_col, watermark)
-    return wm.groupBy(F.col(user_col).alias("user_id")).applyInPandasWithState(
-        make_consecutive_fail_fn(max_gap_sec, fail_value),
+    wm = logins.withWatermark("ts", "3 seconds")
+    return wm.groupBy("user_id").applyInPandasWithState(
+        make_consecutive_fail_fn(max_gap_sec),
         CONSEC_OUT_SCHEMA,
         CONSEC_STATE_SCHEMA,
         "append",
@@ -377,19 +358,14 @@ def blacklist_stream(
     clicks: DataFrame,
     max_per_day: int = 50,
     watermark: str = "0 seconds",
-    user_col: str = "user_id",
-    ad_col: str = "ad_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming click counter with daily reset and one-time warnings.
 
     Emits surviving clicks (≤ max/day) and exactly one blacklist_warning per
     (user, ad, day) crossing; further clicks that day are suppressed.
     """
-    wm = clicks.withWatermark(ts_col, watermark)
-    return wm.groupBy(
-        F.col(user_col).alias("user_id"), F.col(ad_col).alias("ad_id")
-    ).applyInPandasWithState(
+    wm = clicks.withWatermark("ts", watermark)
+    return wm.groupBy("user_id", "ad_id").applyInPandasWithState(
         make_blacklist_fn(max_per_day),
         BLACKLIST_OUT_SCHEMA,
         BLACKLIST_STATE_SCHEMA,
@@ -476,24 +452,15 @@ def tx_match_stream(
     pays: DataFrame,
     receipts: DataFrame,
     timeout_sec: int = 5,
-    watermark: str = "0 seconds",
-    tx_col: str = "tx_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming pay/receipt reconciliation: matched + both unmatched sides.
 
     Both inputs need (tx_id, ts); they are tagged and unioned (Spark's
     equivalent of Flink's connect), then processed by one keyed kernel.
     """
-    p = pays.select(
-        F.col(tx_col).alias("tx_id"), F.col(ts_col).alias("ts"),
-        F.lit("pay").alias("side"),
-    )
-    r = receipts.select(
-        F.col(tx_col).alias("tx_id"), F.col(ts_col).alias("ts"),
-        F.lit("receipt").alias("side"),
-    )
-    union = p.unionByName(r).withWatermark("ts", watermark)
+    p = pays.select("tx_id", "ts", F.lit("pay").alias("side"))
+    r = receipts.select("tx_id", "ts", F.lit("receipt").alias("side"))
+    union = p.unionByName(r).withWatermark("ts", "0 seconds")
     return union.groupBy("tx_id").applyInPandasWithState(
         make_tx_match_fn(timeout_sec),
         TX_OUT_SCHEMA,

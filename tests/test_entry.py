@@ -634,3 +634,126 @@ def test_equal_oracles_are_one_shared_string():
         if n > 1 and text in by_text
     )
     assert pasted == []
+
+
+# Defaulted parameters kept although no call site sets them, each with why.
+_UNSET_OPTION_EXEMPTIONS = {
+    ("streaming/sources.py", "kafka_events", "starting_offsets"): (
+        "deployment setting: a real Kafka deployment picks where to start"
+    ),
+}
+
+
+def test_every_keyword_option_is_set_by_a_caller():
+    """A defaulted parameter of a package function is an option only if
+    some call site sets it; one that nobody sets is a constant in
+    disguise and belongs at its use. Call sites are every call in the
+    package, tests/, tools/, perfbench/, bench.py and __spark_entry__.py,
+    matched by the called name (so a same-named call anywhere counts).
+    A call sets a parameter by keyword, by position, or through `*args`
+    or `**kwargs`; `functools.partial(f, ...)` counts as a call of f.
+    Closure-capture defaults of nested functions (`def fn(..., _sql=sql)`)
+    bind a loop value, not an option, so nested functions are skipped."""
+    import ast
+    from pathlib import Path
+
+    root = Path(conftest.REPO_ROOT)
+    pkg = root / "data_warehouse_flink_spark"
+    files = [
+        *pkg.rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+        *(root / "perfbench").rglob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    trees = {f: ast.parse(f.read_text()) for f in files}
+
+    def terminal(expr) -> str | None:
+        if isinstance(expr, ast.Name):
+            return expr.id
+        return expr.attr if isinstance(expr, ast.Attribute) else None
+
+    calls: dict[str, list] = {}
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name, args = terminal(node.func), node.args
+            if name == "partial" and args:
+                name, args = terminal(args[0]), args[1:]
+            star = any(isinstance(a, ast.Starred) for a in args)
+            n_pos = len(args) - star
+            kws = {k.arg for k in node.keywords}  # None marks **kwargs
+            calls.setdefault(name, []).append((n_pos, star, kws))
+
+    def options(body, owner: str, shift: int):
+        """(qualname, param, position or None) of every defaulted
+        parameter of the functions in `body`, methods included (their
+        position skips `self`)."""
+        for node in body:
+            if isinstance(node, ast.ClassDef):
+                yield from options(node.body, f"{node.name}.", 1)
+            elif isinstance(node, ast.FunctionDef):
+                a = node.args
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                for i, p in enumerate(pos[first:], first):
+                    yield owner + node.name, p.arg, i - shift
+                for p, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        yield owner + node.name, p.arg, None
+
+    def is_set(func: str, param: str, idx: int | None) -> bool:
+        return any(
+            star or None in kws or param in kws
+            or (idx is not None and n_pos > idx)
+            for n_pos, star, kws in calls.get(func.split(".")[-1], ())
+        )
+
+    unset = sorted(
+        (src.relative_to(pkg).as_posix(), func, param)
+        for src, tree in trees.items()
+        if src.is_relative_to(pkg)
+        for func, param, idx in options(tree.body, "", 0)
+        if not is_set(func, param, idx)
+    )
+    assert [u for u in unset if u not in _UNSET_OPTION_EXEMPTIONS] == []
+    # an exemption whose option is gone or now set is stale
+    assert sorted(_UNSET_OPTION_EXEMPTIONS) == [
+        u for u in unset if u in _UNSET_OPTION_EXEMPTIONS
+    ]
+
+
+def test_registry_matches_pin():
+    """The registry is frozen and the driver grades a fixed prefix of it:
+    `list(all_queries())` and every oracle's text (sha256 after whitespace
+    normalization; null for a rows-only entry) must equal
+    tests/registry_pin.json, so a refactor can prove that no order and no
+    oracle changed. Registration order follows module import order, and
+    other test modules import query modules directly, so the registry is
+    read in a fresh interpreter, as the driver reads it."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = (
+        "import hashlib, json\n"
+        "from data_warehouse_flink_spark.registry import all_queries\n"
+        "def digest(o):\n"
+        "    if o is None:\n"
+        "        return None\n"
+        "    return hashlib.sha256(' '.join(o.split()).encode()).hexdigest()\n"
+        "print(json.dumps([[n, digest(q.oracle)] "
+        "for n, q in all_queries().items()]))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=conftest.REPO_ROOT,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    pin = json.loads((Path(__file__).parent / "registry_pin.json").read_text())
+    assert json.loads(out) == pin

@@ -658,7 +658,7 @@ BPE_DOCS = st.lists(
 
 
 def _bpe_repr(text):
-    """BPE_BASE_REPR_TEMPLATE in pure Python: words char-spaced with a
+    """BPE_BASE_REPR in pure Python: words char-spaced with a
     trailing space each, joined by the '|' boundary token, leading
     space."""
     return " " + "| ".join(

@@ -2,8 +2,8 @@
 
 Production IVF indexes train the coarse quantizer ONCE on a sample and then
 assign every vector (at any corpus scale) to its nearest frozen centroid —
-training is offline, assignment is the scale path. This tool runs the
-distributed trainer (`similarity.kmeans_ivf_assign`'s KMeans) over the sf0.01
+training is offline, assignment is the scale path. This tool runs
+pyspark.ml's distributed KMeans (k=16, seed 42) over the sf0.01
 embeddings and emits `functions/ivf_centroids.py`, the literal centroid table
 both the Spark query and the generated DuckDB oracle embed. Re-run only to
 retrain (e.g. a new embedding distribution); the committed literals are the
