@@ -55,6 +55,17 @@ def data_files(path: str) -> list[str]:
     )
 
 
+def data_signature(path: str) -> tuple[tuple[str, int, int], ...]:
+    """The (path, mtime_ns, size) of every file ``data_files(path)`` lists:
+    the part of a memo key that changes when a table is rewritten in place.
+    Raises OSError when a file cannot be stat'ed (missing, or not local)."""
+    return tuple(
+        (f, st.st_mtime_ns, st.st_size)
+        for f in data_files(path)
+        for st in (os.stat(f),)
+    )
+
+
 def resolve_schema(spark: SparkSession, path: str) -> T.StructType:
     """The raw on-disk schema of a parquet table, inferred from its footer
     (a Spark job) once per session and path.
@@ -67,13 +78,26 @@ def resolve_schema(spark: SparkSession, path: str) -> T.StructType:
     fails in Spark's own read, as an uncached read would.
     """
     try:
-        stats = [(f, os.stat(f)) for f in data_files(path)]
+        sig = data_signature(path)
     except OSError:
         return spark.read.parquet(path).schema
-    sig = tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats)
     return memo(
         spark, ("schema", path, sig), lambda: spark.read.parquet(path).schema
     )
+
+
+def pin_session_conf(spark: SparkSession) -> None:
+    """Set the two session confs every testdata read relies on:
+
+    - UTC: the NTZ→TIMESTAMP cast in normalize_time_columns interprets
+      wall-clock values in the session TZ; only UTC preserves the instant
+      and matches DuckDB's naive-UTC read (registry determinism contract).
+    - nanosAsLong: keeps a legacy TIMESTAMP(NANOS) file readable (as
+      LongType, handled above) instead of erroring at scan time; it also
+      determines the raw schema resolve_schema infers for such a file.
+    """
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -84,20 +108,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     event-time columns regardless of the on-disk encoding. The raw schema
     is resolved once per session (``resolve_schema``), so a repeated read
     builds its relation without touching the footer or launching a job.
-    The two session conf pins are still set on every call: the caller may
-    be an external harness session, not ``session.get_spark``'s, and its
-    conf may have changed since the last call.
+    The session conf pins (``pin_session_conf``) are still set on every
+    call: the caller may be an external harness session, not
+    ``session.get_spark``'s, and its conf may have changed since the last
+    call.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
-    # - UTC: the NTZ→TIMESTAMP cast in normalize_time_columns interprets
-    #   wall-clock values in the session TZ; only UTC preserves the instant
-    #   and matches DuckDB's naive-UTC read (registry determinism contract).
-    # - nanosAsLong: keeps a legacy TIMESTAMP(NANOS) file readable (as
-    #   LongType, handled above) instead of erroring at scan time; it also
-    #   determines the raw schema resolve_schema infers for such a file.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pin_session_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
     return normalize_time_columns(
         spark.read.schema(resolve_schema(spark, path)).parquet(path)

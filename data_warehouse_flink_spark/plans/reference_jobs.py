@@ -804,7 +804,10 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_warehouse_flink_spark.streaming.mart import (
         streaming_topn_foreachbatch,
     )
-    from data_warehouse_flink_spark.streaming.sources import stream_events
+    from data_warehouse_flink_spark.streaming.sources import (
+        source_bytes,
+        stream_events,
+    )
 
     stream = stream_events(spark, sf_dir).filter(F.col("event_type") == "view")
     counts = windowed_count(
@@ -827,6 +830,7 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
             tiebreak_cols=["user_id"],
             sink=sink,
             state_path=os.path.join(work, "counts"),
+            input_bytes=source_bytes(f"{sf_dir}/events.parquet"),
         )
         if not has_committed_data(spark, ranked_path):
             # no qualifying input: empty, like the batch plan

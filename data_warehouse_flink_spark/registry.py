@@ -17,15 +17,33 @@ Determinism conventions (so value-hashes match across engines):
   the scaled mantissa exceeds 2^53;
 - every top-N ordering carries a unique tie-breaker key;
 - aggregate/computed columns are aliased identically in both dialects.
+
+Plan reuse: a registered ``spark_fn`` keeps its query's analyzed plan in the
+session memo (``session.memo``, dropped by ``session.release``) and answers
+every later call with a fresh DataFrame over that plan, so a repeated call
+skips the Python build and Catalyst analysis but never shares a
+QueryExecution, AQE stages or shuffle files with an earlier frame. The plan
+is keyed by ``sf_dir`` and the (path, mtime_ns, size) signature of the
+files under it, so a rewritten table is planned again. Only a build that
+did no Spark work returns a plan: one that submitted a Spark job
+(collecting, checkpointing, writing) or started a stream returned a result,
+so it is built again on every call, exactly as uncached. The module-level
+query functions stay unwrapped: a query that composes another builds fresh
+frames.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_warehouse_flink_spark.io import data_signature, pin_session_conf
+from data_warehouse_flink_spark.session import memo
+from data_warehouse_flink_spark.streaming import jobs
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -50,13 +68,47 @@ _QUERY_MODULES = (
 )
 
 
+def _spark_jobs(spark: SparkSession) -> int:
+    """Jobs submitted so far in `spark`'s application, read synchronously
+    from the DAG scheduler (the listener bus reports them late)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _reusing_plan(name: str, fn: SparkQuery) -> SparkQuery:
+    """`fn` with plan reuse (see the module docstring)."""
+
+    @functools.wraps(fn)
+    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+        try:
+            sig = data_signature(sf_dir)
+        except OSError:  # not a local directory: build uncached
+            return fn(spark, sf_dir)
+        plans = memo(spark, "plans", dict)
+        hit = plans.get((name, sf_dir))
+        if hit is not None and hit[0] == sig:
+            pin_session_conf(spark)  # as the build's io.table calls would
+            of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+            return DataFrame(of_rows(spark._jsparkSession, hit[1]), spark)
+        before = (_spark_jobs(spark), jobs.streams_started)
+        df = fn(spark, sf_dir)
+        if (_spark_jobs(spark), jobs.streams_started) == before:
+            plans[(name, sf_dir)] = (sig, df._jdf.queryExecution().analyzed())
+        return df
+
+    return call
+
+
 def register(name: str, oracle: str | None = None):
-    """Decorator: register a Spark query, optionally with its DuckDB oracle."""
+    """Decorator: register a Spark query, optionally with its DuckDB oracle.
+    The registry entry reuses plans; the decorated function is returned
+    unwrapped."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = Query(name, fn, oracle, fn.__doc__ or "")
+        _REGISTRY[name] = Query(
+            name, _reusing_plan(name, fn), oracle, fn.__doc__ or ""
+        )
         return fn
 
     return deco
@@ -171,15 +223,20 @@ def all_queries() -> dict[str, Query]:
     if bad:  # r12 cadence amendment: a prefix slot must never read no_oracle
         raise ValueError(f"oracle-less queries in _GRADING_PRIORITY: {bad}")
     default = len(_GRADING_PRIORITY)
+    module = {m: i for i, m in enumerate(_QUERY_MODULES)}
     # Sort: graded prefix first (priority order), then oracle-bearing
-    # entries in registration order, then oracle-less entries LAST — so the
-    # driver's fixed-size graded prefix can structurally never land on a
-    # rows-only entry, whatever the prefix size or registration order.
+    # entries, then oracle-less entries LAST — so the driver's fixed-size
+    # graded prefix can structurally never land on a rows-only entry,
+    # whatever the prefix size or registration order. Within each group,
+    # entries follow _QUERY_MODULES, then registration order within their
+    # module, so the order does not depend on which module was imported
+    # first.
     ordered = sorted(
         enumerate(_REGISTRY.items()),
         key=lambda pair: (
             rank.get(pair[1][0], default),
             pair[1][1].oracle is None,
+            module.get(pair[1][1].spark_fn.__module__, len(module)),
             pair[0],
         ),
     )

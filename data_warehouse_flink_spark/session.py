@@ -6,8 +6,9 @@ re-planning (skew joins, partition coalescing), UTC session timezone for
 deterministic event-time windows, Arrow for the Python boundary.
 
 Everything a session remembers between queries (footer schemas, checkpointed
-shared intermediates, trained quantizer models) lives in one memo
-(``memo``), freed by one ``release``.
+shared intermediates, trained quantizer models, the registry's analyzed
+plans) lives in one memo (``memo``), freed by one ``release``. ``stop``
+ends a session without leaving the state-store maintenance thread behind.
 """
 
 from __future__ import annotations
@@ -65,6 +66,14 @@ def release(spark: SparkSession) -> None:
         if isinstance(value, DataFrame):
             value._jdf.queryExecution().logical().rdd().unpersist(True)
     entries.clear()
+
+
+def stop(spark: SparkSession) -> None:
+    """Stop the JVM's state-store maintenance task, then `spark`. The task
+    outlives ``spark.stop()`` after a stateful stream and logs
+    ``RpcEnvStoppedException`` at its next run."""
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    spark.stop()
 
 
 def get_spark(

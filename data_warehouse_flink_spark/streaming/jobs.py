@@ -92,12 +92,20 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+# Streams started so far by `_run_available_now`, the package's one start
+# site. The registry reads it around a query build: a build that started a
+# stream ran it, so its frame is a result and must not be reused as a plan.
+streams_started = 0
+
+
 def _run_available_now(
     writer: DataStreamWriter, spark: SparkSession, input_bytes: int | None
 ) -> StreamingQuery:
     """Start `writer` with the availableNow trigger and wait until it has
     processed everything. When `input_bytes` is given, the stateful shuffle
     width comes from `adaptive_stateful_width`, scoped to ``start()``."""
+    global streams_started
+    streams_started += 1
     width = (
         adaptive_stateful_width(spark, input_bytes)
         if input_bytes is not None

@@ -159,6 +159,7 @@ def streaming_topn_foreachbatch(
     tiebreak_cols: list[str],
     sink: Callable[[DataFrame, int], None],
     state_path: str,
+    input_bytes: int | None = None,
 ) -> StreamingQuery:
     """T1/T2 streaming idiom: windowed counts → foreachBatch → rank → sink.
 
@@ -185,8 +186,10 @@ def streaming_topn_foreachbatch(
 
     Nothing pre-rank ever reaches the driver. `state_path` is required: the
     caller owns the state table and removes it (e.g. a
-    ``tempfile.TemporaryDirectory`` around query and read-back). Returns
-    the finished query (see `run_foreach_batch`).
+    ``tempfile.TemporaryDirectory`` around query and read-back).
+    `input_bytes` is forwarded to `run_foreach_batch` (stateful width from
+    the replayed source's size). Returns the finished query (see
+    `run_foreach_batch`).
     """
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -204,4 +207,4 @@ def streaming_topn_foreachbatch(
                 epoch_id,
             )
 
-    return run_foreach_batch(counts, per_batch)
+    return run_foreach_batch(counts, per_batch, input_bytes=input_bytes)

@@ -91,11 +91,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``io.table(spark, sf_dir, "events")`` can never disagree on ``ts``
     encoding again — tests assert schema equality between the two.
     """
-    from data_warehouse_flink_spark.io import normalize_time_columns, resolve_schema
+    from data_warehouse_flink_spark.io import (
+        normalize_time_columns,
+        pin_session_conf,
+        resolve_schema,
+    )
 
-    # Same defensive session pins as io.table (see there for why).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pin_session_conf(spark)
     raw_schema = resolve_schema(spark, f"{sf_dir}/events.parquet")
     # The file stream source requires a directory; glob-filter to the one
     # table file inside the sf dir.

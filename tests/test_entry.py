@@ -757,3 +757,23 @@ def test_registry_matches_pin():
     ).stdout
     pin = json.loads((Path(__file__).parent / "registry_pin.json").read_text())
     assert json.loads(out) == pin
+
+
+def test_registry_order_does_not_depend_on_import_order(monkeypatch):
+    """`all_queries()` orders entries by their module's place in
+    _QUERY_MODULES, then by registration within the module, not by the
+    order in which the modules were first imported: with the entries of
+    plans.llm_ops registered first, the order still equals the pin."""
+    import json
+    from pathlib import Path
+
+    from data_warehouse_flink_spark import registry
+
+    registry.load_all()
+    llm_ops = "data_warehouse_flink_spark.plans.llm_ops"
+    entries = registry._REGISTRY.items()
+    first = {n: q for n, q in entries if q.spark_fn.__module__ == llm_ops}
+    rest = {n: q for n, q in entries if n not in first}
+    monkeypatch.setattr(registry, "_REGISTRY", {**first, **rest})
+    pin = json.loads((Path(__file__).parent / "registry_pin.json").read_text())
+    assert list(registry.all_queries()) == [name for name, _ in pin]

@@ -1217,6 +1217,36 @@ def test_stateful_width_is_cloned_at_start(spark, tmp_path):
     assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3
 
 
+def test_topn_stateful_width_follows_input_bytes(spark, tmp_path):
+    """`streaming_topn_foreachbatch` forwards `input_bytes` to the runner:
+    its windowed-count state runs at `adaptive_stateful_width`, not at the
+    session's default width."""
+    from data_warehouse_flink_spark.streaming.jobs import (
+        adaptive_stateful_width,
+    )
+    from data_warehouse_flink_spark.streaming.sources import source_bytes
+
+    stream = stream_events(spark, SF_SMOKE).filter(F.col("event_type") == "view")
+    counts = windowed_count(
+        stream.withWatermark("ts", "0 seconds"), "ts", "1 hour",
+        slide="15 minutes", keys=["user_id"],
+    )
+    input_bytes = source_bytes(f"{SF_SMOKE}/events.parquet")
+    q = streaming_topn_foreachbatch(
+        counts,
+        partition_cols=["window_end_sec"],
+        order_col="cnt",
+        n=3,
+        tiebreak_cols=["user_id"],
+        sink=lambda ranked_df, epoch_id: None,
+        state_path=str(tmp_path / "state"),
+        input_bytes=input_bytes,
+    )
+    width = adaptive_stateful_width(spark, input_bytes)
+    assert width != int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == width
+
+
 def test_ordered_replay_delivers_batches_in_the_given_order(spark, tmp_path):
     """`ordered_replay` stages one micro-batch per batch value and the
     stream delivers them in the order given, not in sorted or file-name

@@ -25,7 +25,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from data_warehouse_flink_spark.registry import all_queries
-    from data_warehouse_flink_spark.session import get_spark
+    from data_warehouse_flink_spark.session import get_spark, stop
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(REPO_ROOT, "plans", f"r{args.round:02d}")
@@ -47,7 +47,7 @@ def main() -> int:
         with open(path, "w") as fh:
             fh.write(f"-- {name} [{args.tag}] at {sf_dir}\n\n{plan}")
         print(f"wrote {path}")
-    spark.stop()
+    stop(spark)
     return rc
 
 

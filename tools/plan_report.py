@@ -132,7 +132,7 @@ def drift(new_text: str, committed_text: str) -> list:
 def main() -> int:
     import argparse
 
-    from data_warehouse_flink_spark.session import get_spark
+    from data_warehouse_flink_spark.session import get_spark, stop
 
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument(
@@ -165,7 +165,7 @@ def main() -> int:
         with open(out, "w") as f:
             f.write(text)
         print(f"wrote {out} ({len(text.splitlines())} lines)")
-    spark.stop()
+    stop(spark)
     return rc
 
 

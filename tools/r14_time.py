@@ -29,7 +29,7 @@ def main() -> int:
     from bench import CANARY_REF_R12, CANARY_TRIO
 
     from data_warehouse_flink_spark.registry import all_queries
-    from data_warehouse_flink_spark.session import get_spark
+    from data_warehouse_flink_spark.session import get_spark, stop
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("r14-time")
@@ -58,7 +58,7 @@ def main() -> int:
         "queries": timings,
     }
     print(json.dumps(out))
-    spark.stop()
+    stop(spark)
     return 0
 
 
