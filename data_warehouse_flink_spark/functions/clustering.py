@@ -47,6 +47,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_warehouse_flink_spark.functions.similarity import top_k_neighbors
+
 QUANT_SCALE = 1_000_000
 
 
@@ -351,8 +353,6 @@ def adc_topk(
     summed in exact BIGINT arithmetic (no rounding discipline needed —
     everything lives in the quantized integer space). Ranks tie-break
     on the neighbor id."""
-    from pyspark.sql import Window
-
     corpus = codes.select(
         F.col("vec_id").alias("neighbor_id"),
         *[F.col(f"code{m}") for m in range(m_subspaces)],
@@ -370,9 +370,4 @@ def adc_topk(
     pairs = corpus.join(
         F.broadcast(qs), F.col("neighbor_id") != F.col("query_id")
     ).select("query_id", "neighbor_id", adc.cast("long").alias("adc_dist"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return pairs.withColumn(
-        "rn", F.row_number().over(w).cast("long")
-    ).filter(F.col("rn") <= k)
+    return top_k_neighbors(pairs, F.asc("adc_dist"), k)

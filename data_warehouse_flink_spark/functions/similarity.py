@@ -18,6 +18,16 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_warehouse_flink_spark.operators.topn import top_n_per_group
+
+
+def top_k_neighbors(pairs: DataFrame, score: Column, k: int) -> DataFrame:
+    """The k best neighbors per query by `score`, ties to the lower
+    neighbor id."""
+    return top_n_per_group(
+        pairs, ["query_id"], [score, F.asc("neighbor_id")], k
+    )
+
 
 def _as_double(col: str) -> Column:
     return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
@@ -69,15 +79,7 @@ def knn_bruteforce(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos)
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-    )
+    return top_k_neighbors(pairs, F.desc("cosine"), k)
 
 
 def bucketed_dedup_cosine(embeddings: DataFrame, threshold: float) -> DataFrame:
@@ -219,15 +221,7 @@ def knn_lsh(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos)
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-    )
+    return top_k_neighbors(pairs, F.desc("cosine"), k)
 
 
 def frozen_ivf_assign(embeddings: DataFrame, id_col: str = "vec_id") -> DataFrame:
@@ -273,13 +267,12 @@ def knn_ivf(
     `assigned`: optionally pass the materialized (id, vecd, norm, cell)
     index table (e.g. a session cache shared with knn_rrf) — skips the
     per-invocation checkpoint AND Catalyst re-planning of the 16×64
-    centroid literal tree, the knn_pq lesson (round 4). When `assigned`
-    is given it REPLACES `embeddings` entirely (both the corpus side and
-    the query-vector lookup read from it) — pass the index built over the
-    corpus you mean to search, and note its columns are fixed to
-    (vec_id, vecd, norm, cell) by `frozen_ivf_assign` (ADVICE r7 #2).
-    Corpus identity is the
-    CALLER's contract: whether `assigned` covers the same rows as the
+    centroid literal tree. When `assigned` is given it REPLACES
+    `embeddings` entirely (both the corpus side and the query-vector
+    lookup read from it) — pass the index built over the corpus you mean
+    to search, and note its columns are fixed to (vec_id, vecd, norm,
+    cell) by `frozen_ivf_assign`. Corpus identity is the CALLER's
+    contract: whether `assigned` covers the same rows as the
     `embeddings` frame you would otherwise have passed is not checkable
     here without scanning both — a filtered corpus next to a full-corpus
     index silently searches the full corpus."""
@@ -317,15 +310,7 @@ def knn_ivf(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos)
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-    )
+    return top_k_neighbors(pairs, F.desc("cosine"), k)
 
 
 def _pq_codebook_df(spark):
@@ -425,8 +410,6 @@ def knn_pq(
     rank ties break on neighbor id — engine-exact against the generated
     oracle.
     """
-    from pyspark.sql.window import Window
-
     from data_warehouse_flink_spark.functions.pq_codebooks import M_SUBSPACES
 
     # `codes`: optionally pass the materialized pq_encode output (a session
@@ -459,12 +442,7 @@ def knn_pq(
             (F.sum("d_micro").cast("double") / 1000000.0).alias("adc_dist")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return adc.withColumn(
-        "rn", F.row_number().over(w).cast("long")
-    ).filter(F.col("rn") <= k)
+    return top_k_neighbors(adc, F.asc("adc_dist"), k)
 
 
 def sq8_encode(embeddings: DataFrame) -> DataFrame:
@@ -547,8 +525,6 @@ def knn_ivf_pq(
     (the PQ win). The per-query ADC tables plus cell ids broadcast; the
     only corpus-sized work is the code-list scan keyed on (cell, m, code).
     """
-    from pyspark.sql import Window
-
     from data_warehouse_flink_spark.functions.pq_codebooks import M_SUBSPACES
 
     # cell assignment IS the coarse index; codes ARE the stored corpus.
@@ -614,9 +590,4 @@ def knn_ivf_pq(
             (F.sum("d_micro").cast("double") / 1000000.0).alias("adc_dist")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return adc.withColumn(
-        "rn", F.row_number().over(w).cast("long")
-    ).filter(F.col("rn") <= k)
+    return top_k_neighbors(adc, F.asc("adc_dist"), k)

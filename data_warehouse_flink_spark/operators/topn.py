@@ -13,26 +13,28 @@ same rows win in any engine / partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def top_n_per_group(
     df: DataFrame,
     partition_cols: list[str],
-    order_col: str,
+    order: list[Column],
     n: int,
-    tiebreak_cols: list[str],
 ) -> DataFrame:
-    """row_number() <= n per partition (as `rn`), with total-order tie-breaking.
+    """row_number() <= n per partition, as BIGINT `rn`, ranked by `order`
+    (sort Columns such as ``[F.desc("cnt"), F.asc("user_id")]``, ending in
+    a unique tie-breaker for total-order ranking).
 
     At scale this is a single hash shuffle on `partition_cols`; no global
     sort. Skewed partitions are bounded by per-partition top-N semantics
     (each task only tracks its partitions' rows).
     """
-    order = [F.desc(order_col)] + [F.asc(c) for c in tiebreak_cols]
     w = Window.partitionBy(*partition_cols).orderBy(*order)
-    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
+    return df.withColumn("rn", F.row_number().over(w).cast("long")).filter(
+        F.col("rn") <= n
+    )
 
 
 def format_topn_report(
@@ -104,4 +106,5 @@ def top_n_per_group_partial(
     reduced = df.mapInPandas(
         local_topn, schema=df.sparkSession.createDataFrame([], df.schema).schema
     )
-    return top_n_per_group(reduced, partition_cols, order_col, n, tiebreak_cols)
+    order = [F.desc(order_col), *map(F.asc, tiebreak_cols)]
+    return top_n_per_group(reduced, partition_cols, order, n)

@@ -49,9 +49,8 @@ def hot_items(
     return top_n_per_group(
         counts.select("window_end_sec", "item_id", "cnt"),
         partition_cols=["window_end_sec"],
-        order_col="cnt",
+        order=[F.desc("cnt"), F.asc("item_id")],
         n=n,
-        tiebreak_cols=["item_id"],
     )
 
 
@@ -71,9 +70,8 @@ def network_flow_hot_urls(
     return top_n_per_group(
         counts.select("window_end_sec", "url", "cnt"),
         partition_cols=["window_end_sec"],
-        order_col="cnt",
+        order=[F.desc("cnt"), F.asc("url")],
         n=5,
-        tiebreak_cols=["url"],
     )
 
 

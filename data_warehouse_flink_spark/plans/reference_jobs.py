@@ -96,14 +96,12 @@ def hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = windowed_count(
         ev, "ts", "1 hour", slide="15 minutes", keys=["user_id"], count_alias="cnt"
     )
-    ranked = top_n_per_group(
+    return top_n_per_group(
         counts.select("window_end_sec", "user_id", "cnt"),
         partition_cols=["window_end_sec"],
-        order_col="cnt",
+        order=[F.desc("cnt"), F.asc("user_id")],
         n=3,
-        tiebreak_cols=["user_id"],
     )
-    return ranked.withColumn("rn", F.col("rn").cast("long"))
 
 
 # --------------------------------------------------------------------------
@@ -147,14 +145,12 @@ def network_flow_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = windowed_count(
         pages, "ts", "10 minutes", slide="5 minutes", keys=["url"], count_alias="cnt"
     )
-    ranked = top_n_per_group(
+    return top_n_per_group(
         counts.select("window_end_sec", "url", "cnt"),
         partition_cols=["window_end_sec"],
-        order_col="cnt",
+        order=[F.desc("cnt"), F.asc("url")],
         n=5,
-        tiebreak_cols=["url"],
     )
-    return ranked.withColumn("rn", F.col("rn").cast("long"))
 
 
 # --------------------------------------------------------------------------
@@ -839,9 +835,7 @@ def streaming_hot_items_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return (
             spark.read.parquet(ranked_path)
-            .select(
-                "window_end_sec", "user_id", "cnt", F.col("rn").cast("long")
-            )
+            .select("window_end_sec", "user_id", "cnt", "rn")
             .localCheckpoint(eager=True)
         )
 

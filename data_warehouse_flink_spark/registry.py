@@ -119,38 +119,13 @@ def load_all() -> None:
         importlib.import_module(mod)
 
 
-# The driver grades a fixed-size prefix of the registry (50 entries in every
-# round so far, in ``queries()`` iteration order), so iteration order decides
-# which queries get oracle evidence each round. Priority for round 14
-# (VERDICT r13 directive #1 — exactly the rotation pre-announced here in
-# round 13):
-# (1) the 22 SURVEY §2 gate queries — stay in every round's prefix;
-# (2) first-evidence entries FIRST (the documented rule since r8):
-#     none this round — the registry stays frozen at 176 (VERDICT r13 #6)
-#     and round 14 adds no registered queries.
-# (3) periodic-reconfirmation cadence (rule since r7: after first-evidence
-#     entries, fill the prefix with the queries holding the OLDEST driver
-#     hash evidence, ties broken by registration order, so no query's
-#     evidence age is unbounded; oracle-less entries are SKIPPED per the
-#     r12 amendment — ``all_queries()`` enforces this structurally by
-#     sorting oracle-less entries last and refusing an oracle-less name in
-#     _GRADING_PRIORITY outright). This round: the full r8-evidence
-#     remainder of 12, then the first 16 of the r9 cohort of 28 in
-#     registration order — exactly the plan VERDICT r13 #1 names.
-# 22 + 0 + 12 + 16 = 50 exactly, all oracle-bearing. After this round's
-# grading no oracle-bearing query's evidence is older than r9. Next up
-# (round 15): the r9 remainder of 12 in registration order (knn_rrf,
-# embedding_kmeans_train, embedding_kmeans_assign, knn_ivf_trained,
-# knn_ivf_trained_sampled, doc_minhash_incremental, embedding_pq_train,
-# knn_pq_trained, knn_pq_trained_sampled, corpus_bpe_train,
-# error_rate_spikes, purchase_asof_click), then the first 16 of the r10
-# cohort of 28 in registration order (doc_span_dedup,
-# doc_quality_classifier, token_count_min_sketch, doc_hash_embedding,
-# doc_text_knn, corpus_curation_v2, doc_dedup_sweep, doc_url_dedup,
-# doc_weighted_sample, doc_perplexity_bucket, knn_ivf_pq,
-# doc_exact_substring_dedup, doc_tokenizer_fertility,
-# corpus_token_budget_plan, doc_lsh_recall_report,
-# corpus_bpe_train_batched).
+# The driver grades a fixed-size prefix of ``queries()`` (50 entries), so
+# iteration order decides which queries get oracle evidence. The contract:
+# the 22 SURVEY §2 gate queries come first, in every prefix; the rest of
+# the list fills the prefix with oracle-bearing entries (the ones holding
+# the oldest driver evidence when the list was last rotated). An
+# oracle-less entry is never in the prefix: ``all_queries()`` refuses an
+# oracle-less name here and sorts every oracle-less entry last.
 _GRADING_PRIORITY = (
     # -- §2 gates (reference_jobs registration order) --
     "page_view",
@@ -175,10 +150,7 @@ _GRADING_PRIORITY = (
     "streaming_tx_match_window_join",
     "streaming_hot_items_topn",
     "streaming_update_emissions",
-    # -- oldest-evidence reconfirmation: the r8 remainder of 12, then the
-    # first 16 of the r9 cohort (evidence CORRECTNESS_r08/r09;
-    # registration order; oracle-less entries skipped per the r12 cadence
-    # amendment — none occur in these cohorts anyway) --
+    # -- oldest-evidence reconfirmation (evidence round in the comment) --
     "events_rollup",  # r8
     "events_cube",  # r8
     "event_value_percentiles",  # r8
@@ -208,19 +180,13 @@ _GRADING_PRIORITY = (
     "doc_bpe_encode",  # r9
     "embedding_sq8",  # r9
 )
-# Rotated OUT of the prefix this round: the r7 remainder of 12 and the r8
-# cohort head of 16 (all regraded r13). Evidence ages after this round's
-# grading: r9 remainder (12), then r10 (28) / r11 (26) / r12 (28) / r13
-# (28 non-gate entries regraded r13; the 22 gates regrade every round).
-# The local parity suite still re-verifies every registered oracle each
-# session; the driver prefix is the independent re-proof channel.
 
 
 def all_queries() -> dict[str, Query]:
     load_all()
     rank = {name: i for i, name in enumerate(_GRADING_PRIORITY)}
     bad = [n for n in _GRADING_PRIORITY if _REGISTRY[n].oracle is None]
-    if bad:  # r12 cadence amendment: a prefix slot must never read no_oracle
+    if bad:  # a prefix slot must never read no_oracle
         raise ValueError(f"oracle-less queries in _GRADING_PRIORITY: {bad}")
     default = len(_GRADING_PRIORITY)
     module = {m: i for i, m in enumerate(_QUERY_MODULES)}

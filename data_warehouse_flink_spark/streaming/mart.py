@@ -192,6 +192,8 @@ def streaming_topn_foreachbatch(
     `run_foreach_batch`).
     """
 
+    order = [F.desc(order_col), *map(F.asc, tiebreak_cols)]
+
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         merged = merge_into_buckets(
             batch_df,
@@ -200,11 +202,6 @@ def streaming_topn_foreachbatch(
             F.floor(F.col(partition_cols[0]) / _TOPN_BUCKET_SPAN_S),
         )
         if merged is not None:
-            sink(
-                top_n_per_group(
-                    merged, partition_cols, order_col, n, tiebreak_cols
-                ),
-                epoch_id,
-            )
+            sink(top_n_per_group(merged, partition_cols, order, n), epoch_id)
 
     return run_foreach_batch(counts, per_batch, input_bytes=input_bytes)

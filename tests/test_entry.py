@@ -636,6 +636,31 @@ def test_equal_oracles_are_one_shared_string():
     assert pasted == []
 
 
+def test_only_the_registry_reads_the_registry():
+    """A registration that composes another query's oracle takes it from
+    that query's module constant, not from the registry at import time,
+    so no package module but registry.py names ``_REGISTRY``."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(conftest.REPO_ROOT) / "data_warehouse_flink_spark"
+
+    def names(tree) -> bool:
+        return any(
+            (isinstance(node, ast.Name) and node.id == "_REGISTRY")
+            or (isinstance(node, ast.Attribute) and node.attr == "_REGISTRY")
+            or (isinstance(node, ast.alias) and node.name == "_REGISTRY")
+            for node in ast.walk(tree)
+        )
+
+    readers = sorted(
+        src.relative_to(pkg).as_posix()
+        for src in pkg.rglob("*.py")
+        if names(ast.parse(src.read_text()))
+    )
+    assert readers == ["registry.py"]
+
+
 # Defaulted parameters kept although no call site sets them, each with why.
 _UNSET_OPTION_EXEMPTIONS = {
     ("streaming/sources.py", "kafka_events", "starting_offsets"): (

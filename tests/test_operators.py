@@ -228,7 +228,7 @@ def test_partial_topn_equals_exact(spark):
     exact = {
         (r["window_end_sec"], r["user_id"], r["rn"])
         for r in top_n_per_group(
-            counts, ["window_end_sec"], "cnt", 3, ["user_id"]
+            counts, ["window_end_sec"], [F.desc("cnt"), F.asc("user_id")], 3
         ).collect()
     }
     partial = {

@@ -30,20 +30,25 @@ ROWS = st.lists(
 )
 @given(rows=ROWS)
 def test_top_n_per_group_matches_python(spark, rows):
+    """Descending and ascending orderings both keep the pure-Python top 2
+    per group, ranked 1..2 as a BIGINT `rn`."""
+    from pyspark.sql.types import LongType
+
     from data_warehouse_flink_spark.operators.topn import top_n_per_group
 
     df = spark.createDataFrame(rows, "g int, v int, id int")
-    got = {
-        (r["g"], r["id"])
-        for r in top_n_per_group(df, ["g"], "v", 2, ["id"]).collect()
-    }
-    want = set()
-    for g in {r[0] for r in rows}:
-        members = sorted(
-            (r for r in rows if r[0] == g), key=lambda r: (-r[1], r[2])
-        )
-        want |= {(g, r[2]) for r in members[:2]}
-    assert got == want
+    for by_v, sign in ((F.desc("v"), -1), (F.asc("v"), 1)):
+        ranked = top_n_per_group(df, ["g"], [by_v, F.asc("id")], 2)
+        assert ranked.schema["rn"].dataType == LongType()
+        got = {(r["g"], r["id"], r["rn"]) for r in ranked.collect()}
+        want = set()
+        for g in {r[0] for r in rows}:
+            members = sorted(
+                (r for r in rows if r[0] == g),
+                key=lambda r: (sign * r[1], r[2]),
+            )
+            want |= {(g, r[2], rn) for rn, r in enumerate(members[:2], 1)}
+        assert got == want
 
 
 DOCS = st.lists(
@@ -3651,7 +3656,7 @@ def test_format_topn_report_matches_python(spark, rows):
     )
 
     df = spark.createDataFrame(rows, "g int, v int, id int")
-    ranked = top_n_per_group(df, ["g"], "v", 3, ["id"])
+    ranked = top_n_per_group(df, ["g"], [F.desc("v"), F.asc("id")], 3)
     got = {
         r["g"]: r["report"]
         for r in format_topn_report(ranked, "g", "id", "v").collect()

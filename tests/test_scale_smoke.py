@@ -61,7 +61,7 @@ def test_sliding_window_topn_at_5m(spark, big_events):
     )
     top = top_n_per_group(
         counts.select("window_end_sec", "user_id", "cnt"),
-        ["window_end_sec"], "cnt", 3, ["user_id"],
+        ["window_end_sec"], [F.desc("cnt"), F.asc("user_id")], 3,
     )
     n = top.count()
     # 30 days of 15-min slides → ≤ 2884 windows × 3

@@ -707,7 +707,7 @@ def test_streaming_topn_carries_other_windows_of_a_touched_bucket(
         (wc, 7, 2), (wa, 1, 3), (wa, 2, 4), (wb, 5, 4), (wb, 6, 1),
     ]
     ranked = top_n_per_group(
-        stored, ["window_start_sec"], "cnt", 1, ["user_id"]
+        stored, ["window_start_sec"], [F.desc("cnt"), F.asc("user_id")], 1
     )
     assert top1(ranked.toPandas()) == [(wc, 7, 2), *want]
 
