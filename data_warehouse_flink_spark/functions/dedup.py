@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_warehouse_flink_spark.operators.topn import top_n_per_group
+
 # The MinHash family shared by every MinHash gate, the streaming ledger and
 # the DuckDB oracle generators: 64 hashes, banded 16 bands x 4 rows.
 NUM_HASHES = 64
@@ -692,8 +694,6 @@ def incremental_minhash_dedup(
     `minhash_lsh_dedup`; the table's signature width must be NUM_HASHES
     (validated).
     """
-    from pyspark.sql import Window
-
     sigs = signatures
     if sigs is None:
         sigs = minhash_signatures(grams)
@@ -712,13 +712,11 @@ def incremental_minhash_dedup(
         .distinct()
     )
     scored = verify_jaccard_on_candidates(cand, grams, threshold)
-    w = Window.partitionBy("doc_a").orderBy(F.desc("jaccard"), F.asc("doc_b"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("doc_a").alias("doc_id"),
-            F.col("doc_b").alias("match_id"),
-            "jaccard",
-        )
+    best = top_n_per_group(
+        scored, ["doc_a"], [F.desc("jaccard"), F.asc("doc_b")], 1
+    )
+    return best.select(
+        F.col("doc_a").alias("doc_id"),
+        F.col("doc_b").alias("match_id"),
+        "jaccard",
     )

@@ -1,4 +1,5 @@
-"""Flink-CEP-style pattern builder (SURVEY.md §2.6 API parity).
+"""Flink-CEP-style pattern builder (SURVEY.md §2.6 API parity): the one
+compiler for every pattern query.
 
 The reference expresses detections as CEP patterns::
 
@@ -18,11 +19,11 @@ compiled to the engine's relational plans:
   sort, zero state, arbitrary pattern length. Row r completes the pattern
   iff step_i matched at lag(n-1-i) for every i and the whole span fits in
   ``within``.
-- ``followed_by`` (RELAXED contiguity, two steps): first qualifying
-  completion per start within the bound (the reference's
-  followedBy+within), with the timeout side output available from
-  ``detect_timeouts`` — compiled to the same join/min-aggregate shape as
-  ``detection.match_within_timeout``.
+- ``followed_by`` (RELAXED contiguity, two steps): ``completions`` pairs
+  every start with its earliest qualifying completion inside the bound,
+  NULL when the start timed out (the reference's followedBy+within with
+  its timeout side output) — one left join and one min-aggregate;
+  ``detect`` keeps the completed rows.
 
 Batch forms only (the oracle-checkable backfill path); the streaming twins
 with real timers remain the kernels in ``streaming/state.py`` — this
@@ -42,6 +43,7 @@ class _Step:
     name: str
     where: Column
     contiguity: str  # "begin" | "next" | "followed_by"
+    strictly_after: bool = False
 
 
 @dataclass(frozen=True)
@@ -57,27 +59,24 @@ class Pattern:
     def next(self, name: str, where: Column) -> "Pattern":
         """Strict contiguity: this step must be the IMMEDIATELY following
         event of the same key (anything in between kills the match)."""
-        self._check_name(name)
-        return Pattern(
-            steps=self.steps + (_Step(name, where, "next"),),
-            within_sec=self.within_sec,
-        )
+        return self._then(_Step(name, where, "next"))
 
-    def followed_by(self, name: str, where: Column) -> "Pattern":
+    def followed_by(
+        self, name: str, where: Column, strictly_after: bool = False
+    ) -> "Pattern":
         """Relaxed contiguity: the first qualifying event of the same key
-        at-or-after the previous step (other events may intervene)."""
-        self._check_name(name)
-        return Pattern(
-            steps=self.steps + (_Step(name, where, "followed_by"),),
-            within_sec=self.within_sec,
-        )
+        at-or-after the previous step (other events may intervene);
+        ``strictly_after`` excludes a completion at the start's own
+        instant."""
+        return self._then(_Step(name, where, "followed_by", strictly_after))
 
     def within(self, seconds: int) -> "Pattern":
         return Pattern(steps=self.steps, within_sec=seconds)
 
-    def _check_name(self, name: str) -> None:
-        if any(s.name == name for s in self.steps):
-            raise ValueError(f"duplicate step name {name!r}")
+    def _then(self, step: _Step) -> "Pattern":
+        if any(s.name == step.name for s in self.steps):
+            raise ValueError(f"duplicate step name {step.name!r}")
+        return Pattern(steps=self.steps + (step,), within_sec=self.within_sec)
 
     # ---------------------------------------------------------- compile --
     def _validate(self) -> str:
@@ -107,22 +106,10 @@ class Pattern:
     ) -> DataFrame:
         """Full matches: one row per completed pattern — key plus
         ``<step>_us`` (epoch micros) for every step."""
-        mode = self._validate()
-        order_cols = order_cols or [ts_col]
-        if mode == "strict":
-            return self._detect_strict(df, key, ts_col, order_cols)
-        return self._detect_relaxed(df, key, ts_col)["matches"]
-
-    def detect_timeouts(
-        self, df: DataFrame, key: str, ts_col: str
-    ) -> DataFrame:
-        """Timeout side output (followed_by patterns only): starts whose
-        completion never arrived inside the bound — the reference's
-        OrderTimeout side-output stream."""
-        mode = self._validate()
-        if mode != "relaxed":
-            raise ValueError("timeouts are defined for followed_by patterns")
-        return self._detect_relaxed(df, key, ts_col)["timeouts"]
+        if self._validate() == "relaxed":
+            done = F.col(f"{self.steps[1].name}_us")
+            return self.completions(df, key, ts_col).filter(done.isNotNull())
+        return self._detect_strict(df, key, ts_col, order_cols or [ts_col])
 
     # ------------------------------------------------- strict (lag chain) --
     def _detect_strict(
@@ -159,132 +146,39 @@ class Pattern:
         )
 
     # -------------------------------------------- relaxed (join + argmin) --
-    def _detect_relaxed(
-        self, df: DataFrame, key: str, ts_col: str
-    ) -> dict[str, DataFrame]:
+    def completions(self, df: DataFrame, key: str, ts_col: str) -> DataFrame:
+        """Every start of a followed_by pattern with its earliest
+        completion inside the bound: key, ``<first>_us`` and
+        ``<second>_us``, the latter NULL when the start timed out (the
+        reference's OrderTimeout side output, OrderTimeout.scala:32-64)."""
+        if self._validate() != "relaxed":
+            raise ValueError("completions are defined for followed_by patterns")
         first, second = self.steps
+        first_us, second_us = f"{first.name}_us", f"{second.name}_us"
         us = F.unix_micros(F.col(ts_col))
         a = df.filter(first.where).select(
-            F.col(key).alias("_k"), us.alias(f"{first.name}_us")
+            F.col(key).alias("_k"), us.alias(first_us)
         )
         b = df.filter(second.where).select(
-            F.col(key).alias("_k"), us.alias(f"{second.name}_us")
+            F.col(key).alias("_k"), us.alias(second_us)
         )
-        bound = self.within_sec * 1_000_000
+        after = (
+            b[second_us] > a[first_us]
+            if second.strictly_after
+            else b[second_us] >= a[first_us]
+        )
         joined = a.join(
             b,
             on=[
                 a["_k"] == b["_k"],
-                b[f"{second.name}_us"] >= a[f"{first.name}_us"],
-                b[f"{second.name}_us"] <= a[f"{first.name}_us"] + bound,
+                after,
+                b[second_us] <= a[first_us] + self.within_sec * 1_000_000,
             ],
             how="left",
-        ).select(
-            a["_k"].alias(key),
-            f"{first.name}_us",
-            f"{second.name}_us",
+        ).select(a["_k"].alias(key), first_us, second_us)
+        return joined.groupBy(key, first_us).agg(
+            F.min(second_us).alias(second_us)
         )
-        earliest = joined.groupBy(key, f"{first.name}_us").agg(
-            F.min(f"{second.name}_us").alias(f"{second.name}_us")
-        )
-        return {
-            "matches": earliest.filter(
-                F.col(f"{second.name}_us").isNotNull()
-            ),
-            "timeouts": earliest.filter(
-                F.col(f"{second.name}_us").isNull()
-            ).drop(f"{second.name}_us"),
-        }
-
-
-# ---------------------------------------------------------------------------
-# Legacy 2-step spec form (round-4 API, kept stable): SeqPattern +
-# match_pattern — the MATCH_RECOGNIZE-style dataclass spec the
-# `pattern_error_next_error` / `pattern_click_followed_by_purchase` gates
-# register. The fluent `Pattern` builder above is the n-step superset; the
-# equivalence of the two compilations is pinned in
-# tests/test_round5_ops.py::test_pattern_builder_strict_equals_kernel and
-# the oracle-parity gates.
-# ---------------------------------------------------------------------------
-@dataclass(frozen=True)
-class SeqPattern:
-    """`first` then `second` within `within_sec`, per `key`.
-
-    first/second are predicate Columns evaluated on the input rows.
-    """
-
-    key: str
-    first: Column
-    second: Column
-    within_sec: int
-    contiguity: str = "next"  # "next" | "followed_by"
-    ts_col: str = "ts"
-    order_cols: tuple[str, ...] = ("ts",)
-
-
-def match_pattern(df: DataFrame, pattern: SeqPattern) -> DataFrame:
-    """Compile and apply a sequence pattern.
-
-    Output: key, first_us, second_us, result_type ∈ {matched, timeout}.
-    (`next` emits only matches — strict contiguity has no timeout notion in
-    the reference's CEP usage; `followed_by` emits the timeout class for
-    firsts with no qualifying successor, mirroring PatternTimeoutFunction.)
-    """
-    if pattern.contiguity == "next":
-        return _match_next(df, pattern)
-    if pattern.contiguity == "followed_by":
-        return _match_followed_by(df, pattern)
-    raise ValueError(f"unknown contiguity {pattern.contiguity!r}")
-
-
-def _match_next(df: DataFrame, p: SeqPattern) -> DataFrame:
-    w = Window.partitionBy(p.key).orderBy(*[F.asc(c) for c in p.order_cols])
-    flagged = df.withColumn("_first_ok", p.first).withColumn(
-        "_second_ok", p.second
-    )
-    seq = flagged.withColumn("_prev_ok", F.lag("_first_ok").over(w)).withColumn(
-        "_prev_ts", F.lag(p.ts_col).over(w)
-    )
-    us = F.unix_micros(F.col(p.ts_col))
-    prev_us = F.unix_micros(F.col("_prev_ts"))
-    return seq.filter(
-        F.col("_second_ok")
-        & F.col("_prev_ok")
-        & (us - prev_us <= p.within_sec * 1_000_000)
-    ).select(
-        F.col(p.key),
-        prev_us.alias("first_us"),
-        us.alias("second_us"),
-        F.lit("matched").alias("result_type"),
-    )
-
-
-def _match_followed_by(df: DataFrame, p: SeqPattern) -> DataFrame:
-    firsts = df.filter(p.first).select(
-        F.col(p.key).alias("k"), F.unix_micros(p.ts_col).alias("first_us")
-    )
-    seconds = df.filter(p.second).select(
-        F.col(p.key).alias("k"), F.unix_micros(p.ts_col).alias("second_us")
-    )
-    joined = firsts.join(
-        seconds,
-        on=[
-            firsts["k"] == seconds["k"],
-            seconds["second_us"] > firsts["first_us"],
-            seconds["second_us"]
-            <= firsts["first_us"] + p.within_sec * 1_000_000,
-        ],
-        how="left",
-    ).select(firsts["k"].alias(p.key), "first_us", "second_us")
-    earliest = joined.groupBy(p.key, "first_us").agg(
-        F.min("second_us").alias("second_us")
-    )
-    return earliest.withColumn(
-        "result_type",
-        F.when(F.col("second_us").isNotNull(), F.lit("matched")).otherwise(
-            F.lit("timeout")
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------

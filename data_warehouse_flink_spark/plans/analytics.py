@@ -189,7 +189,7 @@ def windowed_value_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- MATCH_RECOGNIZE-style pattern sugar (operators/patterns.py) -----------
+# -- CEP patterns, compiled by operators/patterns.py::Pattern --------------
 @register(
     "pattern_error_next_error",
     oracle="""
@@ -209,21 +209,13 @@ def windowed_value_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pattern_error_next_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative CEP: error NEXT error WITHIN 12 h, compiled to lag()."""
-    from data_warehouse_flink_spark.operators.patterns import (
-        SeqPattern,
-        match_pattern,
-    )
+    from data_warehouse_flink_spark.operators.patterns import Pattern
 
-    ev = _events(spark, sf_dir)
-    pat = SeqPattern(
-        key="user_id",
-        first=F.col("event_type") == "error",
-        second=F.col("event_type") == "error",
-        within_sec=43200,
-        contiguity="next",
-        order_cols=("ts", "event_id"),
-    )
-    return match_pattern(ev, pat)
+    error = F.col("event_type") == "error"
+    pat = Pattern.begin("first", error).next("second", error).within(43200)
+    return pat.detect(
+        _events(spark, sf_dir), "user_id", "ts", order_cols=["ts", "event_id"]
+    ).withColumn("result_type", F.lit("matched"))
 
 
 @register(
@@ -248,21 +240,21 @@ def pattern_click_followed_by_purchase(
 ) -> DataFrame:
     """Declarative CEP: click FOLLOWED BY purchase WITHIN 12 h, with the
     timed-out remainder emitted like the CEP timeout side output."""
-    from data_warehouse_flink_spark.operators.patterns import (
-        SeqPattern,
-        match_pattern,
-    )
+    from data_warehouse_flink_spark.operators.patterns import Pattern
 
-    ev = _events(spark, sf_dir)
-    pat = SeqPattern(
-        key="user_id",
-        first=F.col("event_type") == "click",
-        second=F.col("event_type") == "purchase",
-        within_sec=43200,
-        contiguity="followed_by",
-        order_cols=("ts", "event_id"),
+    pat = (
+        Pattern.begin("first", F.col("event_type") == "click")
+        .followed_by(
+            "second", F.col("event_type") == "purchase", strictly_after=True
+        )
+        .within(43200)
     )
-    return match_pattern(ev, pat)
+    return pat.completions(_events(spark, sf_dir), "user_id", "ts").withColumn(
+        "result_type",
+        F.when(F.col("second_us").isNotNull(), F.lit("matched")).otherwise(
+            F.lit("timeout")
+        ),
+    )
 
 
 @register(
@@ -1525,13 +1517,16 @@ def user_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the periodic compaction a streaming CDC ingest runs
     per partition; the same plan serves both.
     """
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts"), F.desc("event_id")
+    from data_warehouse_flink_spark.operators.topn import top_n_per_group
+
+    latest = top_n_per_group(
+        _events(spark, sf_dir),
+        ["user_id"],
+        [F.desc("ts"), F.desc("event_id")],
+        1,
     )
     return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("event_type") != "error"))
+        latest.filter(F.col("event_type") != "error")
         .select(
             "user_id",
             F.col("event_type").alias("last_event_type"),

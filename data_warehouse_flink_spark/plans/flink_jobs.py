@@ -15,14 +15,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehouse_flink_spark.operators.detection import (
-    consecutive_event_pairs,
-    match_within_timeout,
     running_count_blacklist,
 )
 from data_warehouse_flink_spark.operators.joins import (
     full_outer_match,
     interval_join,
 )
+from data_warehouse_flink_spark.operators.patterns import Pattern
 from data_warehouse_flink_spark.operators.topn import top_n_per_group
 from data_warehouse_flink_spark.operators.windows import (
     windowed_approx_distinct,
@@ -137,14 +136,13 @@ def login_fail_warnings(
     """LoginFailWithCEP: two consecutive fails within the bound
     (LoginFailDetect app/LoginFailWithCEP.scala:38-59, the canonical
     semantics per SURVEY.md §2.9.7)."""
-    return consecutive_event_pairs(
+    fail = F.col("status") == "fail"
+    pat = Pattern.begin("first_fail", fail).next("last_fail", fail)
+    return pat.within(max_gap_sec).detect(
         logins.withColumn("event_id", F.col("ts_sec")),
-        key="user_id",
-        ts_col="ts",
+        "user_id",
+        "ts",
         order_cols=["ts", "event_id"],
-        match_value="fail",
-        value_col="status",
-        max_gap_sec=max_gap_sec,
     )
 
 
@@ -152,15 +150,16 @@ def order_timeout(orders: DataFrame, timeout_sec: int = 900) -> DataFrame:
     """OrderTimeout batch form (OrderTimeoutDetect app/OrderTimeout.scala:24-64):
     payed within 15 min vs timeout. Streaming 4-class variant:
     streaming.state.order_timeout_stream."""
-    creates = orders.filter(F.col("event_type") == "create")
-    pays = orders.filter(F.col("event_type") == "pay")
-    return match_within_timeout(
-        creates,
-        pays,
-        key="order_id",
-        create_ts="ts",
-        pay_ts="ts",
-        timeout_sec=timeout_sec,
+    pat = (
+        Pattern.begin("create", F.col("event_type") == "create")
+        .followed_by("pay", F.col("event_type") == "pay")
+        .within(timeout_sec)
+    )
+    return pat.completions(orders, "order_id", "ts").withColumn(
+        "result_type",
+        F.when(F.col("pay_us").isNotNull(), F.lit("payed")).otherwise(
+            F.lit("timeout")
+        ),
     )
 
 

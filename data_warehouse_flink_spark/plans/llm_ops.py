@@ -455,16 +455,12 @@ def embedding_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs: cosine ≥ 0.9 within label buckets (IVF-ish),
     over the deterministic per-label audit slice (lowest
     _DEDUP_COSINE_AUDIT_CAP vec_ids per label — see the bound note above)."""
-    from pyspark.sql import Window
-
-    embs = _embs(spark, sf_dir)
     audit_slice = (
-        embs.withColumn(
-            "_rk",
-            F.row_number().over(Window.partitionBy("label").orderBy("vec_id")),
+        top_n_per_group(
+            _embs(spark, sf_dir), ["label"], [F.asc("vec_id")],
+            _DEDUP_COSINE_AUDIT_CAP,
         )
-        .filter(F.col("_rk") <= _DEDUP_COSINE_AUDIT_CAP)
-        .drop("_rk")
+        .drop("rn")
         # The label window leaves one partition per label (10 here), so the
         # pair cosine — this query's real compute — would run on ≤10 cores
         # however wide the cluster. Re-spread the (tiny, ≤10×CAP rows)

@@ -21,13 +21,12 @@ from pyspark.sql import functions as F
 
 from data_warehouse_flink_spark.io import table
 from data_warehouse_flink_spark.operators.detection import (
-    consecutive_event_pairs,
-    match_within_timeout,
     running_count_blacklist,
     sessionize,
     threshold_in_window,
 )
 from data_warehouse_flink_spark.operators.joins import interval_join
+from data_warehouse_flink_spark.operators.patterns import Pattern
 from data_warehouse_flink_spark.operators.topn import top_n_per_group
 from data_warehouse_flink_spark.operators.windows import (
     windowed_approx_distinct_checked,
@@ -371,10 +370,10 @@ def ad_blacklist_warnings(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def login_fail_consecutive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two consecutive failures (errors) per user within 24 h → warning."""
-    ev = _events(spark, sf_dir)
-    return consecutive_event_pairs(
-        ev, key="user_id", ts_col="ts", order_cols=["ts", "event_id"],
-        match_value="error", value_col="event_type", max_gap_sec=86400,
+    fail = F.col("event_type") == "error"
+    pat = Pattern.begin("first_fail", fail).next("last_fail", fail)
+    return pat.within(86400).detect(
+        _events(spark, sf_dir), "user_id", "ts", order_cols=["ts", "event_id"]
     )
 
 
@@ -428,12 +427,16 @@ def login_fail_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def order_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signups paid within 24 h vs timed out (earliest qualifying pay)."""
-    ev = _events(spark, sf_dir)
-    creates = ev.filter(F.col("event_type") == "signup")
-    pays = ev.filter(F.col("event_type") == "purchase")
-    return match_within_timeout(
-        creates, pays, key="user_id", create_ts="ts", pay_ts="ts",
-        timeout_sec=86400,
+    pat = (
+        Pattern.begin("create", F.col("event_type") == "signup")
+        .followed_by("pay", F.col("event_type") == "purchase")
+        .within(86400)
+    )
+    return pat.completions(_events(spark, sf_dir), "user_id", "ts").withColumn(
+        "result_type",
+        F.when(F.col("pay_us").isNotNull(), F.lit("payed")).otherwise(
+            F.lit("timeout")
+        ),
     )
 
 
@@ -1040,11 +1043,9 @@ def login_fail_triple_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     CEP pattern builder — the reference's `begin.next.within` surface
     (LoginFailWithCEP.scala:38-43) extended one step, proving the builder
     compiles n-step STRICT patterns to the lag-chain plan (one shuffle,
-    one per-key sort, no state). The 2-step gates (`login_fail_consecutive`)
-    pin the kernel; this pins the API.
+    one per-key sort, no state), the same builder the 2-step gate
+    `login_fail_consecutive` compiles through.
     """
-    from data_warehouse_flink_spark.operators.patterns import Pattern
-
     ev = _events(spark, sf_dir)
     pat = (
         Pattern.begin("first", F.col("event_type") == "error")

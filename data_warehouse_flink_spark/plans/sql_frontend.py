@@ -21,26 +21,18 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     Only tables whose name appears in the SQL text are registered
     (substring over-inclusion is harmless — a view nobody reads costs one
     relation build; under-inclusion cannot happen because FROM/JOIN must
-    spell the table name), and registrations are memoized per (session,
-    sf_dir) so repeated invocations skip `io.table` entirely. A changed
-    sf_dir re-registers — the memo maps view name → sf_dir. (Footer schema
-    reads are memoized one level down, per session and path, by
-    `io.resolve_schema`.)
+    spell the table name). Every call registers them afresh, so a view
+    never outlives a rewrite of its file; the registry's plan reuse
+    answers repeated calls of a registered query, and `io.resolve_schema`
+    keeps the footer schemas per session and path.
 
     The substring match is case-insensitive, as SQL table identifiers
     are: `SELECT ... FROM ORDERS` registers the `orders` view exactly
     like the lowercase spelling."""
-    registered: dict[str, str] | None = getattr(
-        spark, "_dwfs_sql_views", None
-    )
-    if registered is None:
-        registered = {}
-        spark._dwfs_sql_views = registered
     sql_lower = sql.lower()
     for name in TESTDATA_TABLES:
-        if name in sql_lower and registered.get(name) != sf_dir:
+        if name in sql_lower:
             table(spark, sf_dir, name).createOrReplaceTempView(name)
-            registered[name] = sf_dir
     return spark.sql(sql)
 
 

@@ -87,7 +87,10 @@ def get_spark(
     sizing change (supplied by spark-submit, not hard-coded here).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    mem = os.environ.get("SPARK_GRAFT_MEM", "64g")
+    # Half the machine by default: a heap sized above physical memory lets
+    # G1 grow instead of collecting until the kernel's OOM killer ends it.
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    mem = os.environ.get("SPARK_GRAFT_MEM", f"{phys // 2 // 2**20}m")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

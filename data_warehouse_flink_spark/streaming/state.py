@@ -123,6 +123,10 @@ def order_timeout_stream(orders: DataFrame, timeout_sec: int) -> DataFrame:
 
     Emits one row per order with the 4-class outcome; timers fire when the
     event-time watermark passes create+timeout (or pay+grace).
+
+    Batch twin: operators.patterns.Pattern.begin.followed_by.within →
+    ``completions`` (2 classes), as `plans/flink_jobs.py::order_timeout`
+    compiles it.
     """
     wm = orders.withWatermark("ts", "0 seconds")
     return wm.groupBy("order_id").applyInPandasWithState(
@@ -272,7 +276,8 @@ def make_consecutive_fail_fn(max_gap_sec: int):
 def consecutive_fail_stream(logins: DataFrame, max_gap_sec: int = 2) -> DataFrame:
     """Streaming CEP-strict detector: fail `next` fail within the bound.
 
-    Batch twin: operators.detection.consecutive_event_pairs (lag form).
+    Batch twin: operators.patterns.Pattern.begin.next.within (lag
+    chain), as `plans/flink_jobs.py::login_fail_warnings` compiles it.
     """
     wm = logins.withWatermark("ts", "3 seconds")
     return wm.groupBy("user_id").applyInPandasWithState(

@@ -11,10 +11,11 @@ sys.path.insert(0, str(REPO_ROOT))
 import os
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-# The suite shares one long-lived JVM. Under the engine's 64g default heap
-# G1 grows the heap instead of collecting, and on a 16 GB host the kernel's
-# OOM killer ended the test JVM at 15.6 GB RSS midway through the oracle
-# parity tests. A bounded heap spills cached blocks to disk instead.
+# The suite shares one long-lived JVM. Under a 64g heap G1 grew the heap
+# instead of collecting, and on a 16 GB host the kernel's OOM killer ended
+# the test JVM at 15.6 GB RSS midway through the oracle parity tests. A
+# heap below the engine's half-of-memory default keeps the suite's peak
+# (~4.8 GB RSS) independent of the host.
 os.environ.setdefault("SPARK_GRAFT_MEM", "6g")
 SF_CORRECT = "/root/testdata/sf0.01"
 

@@ -13,6 +13,7 @@ import pyarrow.parquet as pq
 from conftest import SF_SMOKE
 from data_warehouse_flink_spark import registry
 from data_warehouse_flink_spark.plans import llm_ops, reference_jobs, tpch
+from data_warehouse_flink_spark.plans.sql_frontend import run_sql
 from data_warehouse_flink_spark.session import memo, release
 from data_warehouse_flink_spark.streaming import jobs
 
@@ -35,16 +36,24 @@ def test_repeated_call_submits_no_job_and_returns_a_fresh_frame(spark):
 
 
 def test_rewritten_table_is_planned_again(spark, tmp_path):
-    shutil.copy(f"{SF_SMOKE}/events.parquet", tmp_path / "events.parquet")
-    fn = QUERIES["page_view"].spark_fn
-    before = sorted(fn(spark, str(tmp_path)).collect())
-    assert sorted(fn(spark, str(tmp_path)).collect()) == before
+    sql = QUERIES["sql_priority_counts"].oracle  # the same text runs on Spark
+    for name, tbl, build in (
+        ("page_view", "events", reference_jobs.page_view),
+        ("sql_priority_counts", "orders", lambda s, d: run_sql(s, d, sql)),
+    ):
+        path = tmp_path / f"{tbl}.parquet"
+        shutil.copy(f"{SF_SMOKE}/{tbl}.parquet", path)
+        fn = QUERIES[name].spark_fn
+        before = sorted(fn(spark, str(tmp_path)).collect())
+        assert sorted(fn(spark, str(tmp_path)).collect()) == before
 
-    events = pq.read_table(tmp_path / "events.parquet")
-    pq.write_table(events.slice(0, events.num_rows // 2), tmp_path / "events.parquet")
-    after = sorted(fn(spark, str(tmp_path)).collect())
-    assert after != before
-    assert after == sorted(reference_jobs.page_view(spark, str(tmp_path)).collect())
+        rows = pq.read_table(path)
+        path.unlink()  # rewritten as a directory table, as Spark writes one
+        path.mkdir()
+        pq.write_table(rows.slice(0, rows.num_rows // 2), path / "part-0.parquet")
+        after = sorted(fn(spark, str(tmp_path)).collect())
+        assert after != before, name
+        assert after == sorted(build(spark, str(tmp_path)).collect()), name
 
 
 def test_stream_twin_runs_its_stream_on_every_call(spark):

@@ -8,7 +8,7 @@ randomized structure (ties, empty groups, duplicate keys), not volume.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 ROWS = st.lists(
@@ -1044,107 +1044,132 @@ def test_asof_join_matches_python_reference(spark, left, right, tol):
     assert got == _ref_asof(left, right, tol)
 
 
+CEP_EVENT = st.tuples(
+    st.integers(min_value=0, max_value=2),   # key
+    st.integers(min_value=0, max_value=9),   # ts (epoch sec)
+    st.sampled_from(["f", "s", "o"]),        # event type
+)
 CEP_EVENTS = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=2),   # key
-        st.integers(min_value=0, max_value=9),   # ts (epoch sec)
-        st.sampled_from(["f", "s", "o"]),        # event type
-    ),
+    CEP_EVENT,
     min_size=1,
     max_size=16,
     unique_by=lambda r: (r[0], r[1]),  # strict mode sorts by ts per key
 )
+# Relaxed mode keeps same-instant starts and completions (the lower bound's
+# only distinguishing input) but no duplicate events.
+CEP_RELAXED_EVENTS = st.lists(CEP_EVENT, min_size=1, max_size=16, unique=True)
 CEP_STRICT = st.sampled_from(
     [("f", "f"), ("f", "f", "s"), ("f", "s", "f"), ("f", "f", "f")]
 )
 CEP_WITHIN = st.integers(min_value=1, max_value=3)
 
 
-@settings(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(events=CEP_EVENTS, steps=CEP_STRICT, within=CEP_WITHIN)
-def test_cep_strict_detect_matches_python_reference(spark, events, steps, within):
+def _cep_frame(spark, events):
+    return spark.createDataFrame(
+        events, "k long, e long, et string"
+    ).withColumn("ts", F.timestamp_seconds(F.col("e")))
+
+
+def test_cep_strict_detect_matches_python_reference(spark):
     """The n-step strict-contiguity lag chain (Pattern.next, SURVEY §2.6)
     vs a pure-Python sliding-window reference: per key, every run of
     len(steps) CONSECUTIVE events whose types match positionally and
     whose span fits the bound — randomized over interleaved keys,
     non-matching events breaking runs, overlapping matches sharing
-    events, and exact-boundary spans."""
+    events, and exact-boundary spans. The examples must match at least
+    once, so the comparison is not between two empty sets."""
     from data_warehouse_flink_spark.operators.patterns import Pattern
 
-    df = spark.createDataFrame(
-        events, "k long, e long, et string"
-    ).withColumn("ts", F.timestamp_seconds(F.col("e")))
-    p = Pattern.begin("s0", F.col("et") == steps[0])
-    for i, t in enumerate(steps[1:], start=1):
-        p = p.next(f"s{i}", F.col("et") == t)
-    got = sorted(
-        tuple(r) for r in p.within(within).detect(df, "k", "ts").collect()
-    )
+    matched = []
 
-    n = len(steps)
-    want = []
-    for k in {e[0] for e in events}:
-        run = sorted((ts, et) for kk, ts, et in events if kk == k)
-        for j in range(len(run) - n + 1):
-            window = run[j : j + n]
-            if all(et == steps[i] for i, (_, et) in enumerate(window)) and (
-                window[-1][0] - window[0][0] <= within
-            ):
-                want.append((k, *(ts * 1_000_000 for ts, _ in window)))
-    assert got == sorted(want)
+    @settings(max_examples=5, deadline=None)
+    @given(events=CEP_EVENTS, steps=CEP_STRICT, within=CEP_WITHIN)
+    @example(events=[(0, 0, "f"), (0, 1, "f"), (0, 5, "s")], steps=("f", "f"),
+             within=1)
+    def check(events, steps, within):
+        p = Pattern.begin("s0", F.col("et") == steps[0])
+        for i, t in enumerate(steps[1:], start=1):
+            p = p.next(f"s{i}", F.col("et") == t)
+        df = _cep_frame(spark, events)
+        got = sorted(
+            tuple(r) for r in p.within(within).detect(df, "k", "ts").collect()
+        )
+
+        n = len(steps)
+        want = []
+        for k in {e[0] for e in events}:
+            run = sorted((ts, et) for kk, ts, et in events if kk == k)
+            for j in range(len(run) - n + 1):
+                window = run[j : j + n]
+                if all(
+                    et == steps[i] for i, (_, et) in enumerate(window)
+                ) and (window[-1][0] - window[0][0] <= within):
+                    want.append((k, *(ts * 1_000_000 for ts, _ in window)))
+        assert got == sorted(want)
+        matched.append(bool(got))
+
+    check()
+    assert any(matched), "no example produced a strict match"
 
 
-@settings(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(events=CEP_EVENTS, within=CEP_WITHIN)
-def test_cep_relaxed_detect_matches_python_reference(spark, events, within):
-    """The followed_by join+argmin compilation (matches AND the timeout
-    side output) vs a pure-Python reference: per first-step event the
-    EARLIEST second-step event of the same key inside [first, first +
-    within], a timeout when none exists — randomized over firsts with
+def test_cep_relaxed_detect_matches_python_reference(spark):
+    """The followed_by join+argmin compilation (``completions`` and the
+    ``detect`` matches filtered from it) vs a pure-Python reference: per
+    first-step event the EARLIEST second-step event of the same key inside
+    [first, first + within] — (first, first + within] under
+    ``strictly_after`` — a timeout when none exists; matches plus
+    timeouts account for every start. Randomized over firsts with
     multiple candidate seconds (argmin ties to the earliest), seconds
-    preceding firsts, and boundary-exact completions."""
+    preceding firsts, same-instant completions and boundary-exact
+    completions; the pinned examples put a completion at the start's own
+    instant, which only the lower bound decides."""
     from data_warehouse_flink_spark.operators.patterns import Pattern
 
-    df = spark.createDataFrame(
-        events, "k long, e long, et string"
-    ).withColumn("ts", F.timestamp_seconds(F.col("e")))
-    p = (
-        Pattern.begin("a", F.col("et") == "f")
-        .followed_by("b", F.col("et") == "s")
-        .within(within)
-    )
-    got_m = sorted(
-        (r["k"], r["a_us"], r["b_us"])
-        for r in p.detect(df, "k", "ts").collect()
-    )
-    got_t = sorted(
-        (r["k"], r["a_us"])
-        for r in p.detect_timeouts(df, "k", "ts").collect()
-    )
+    matched = []
+    same_instant = [(0, 0, "f"), (0, 0, "s"), (0, 1, "s"), (1, 5, "f")]
 
-    want_m, want_t = [], []
-    for k, ts, et in events:
-        if et != "f":
-            continue
-        seconds = [
-            s * 1_000_000
-            for kk, s, e2 in events
-            if kk == k and e2 == "s" and ts <= s <= ts + within
-        ]
-        if seconds:
-            want_m.append((k, ts * 1_000_000, min(seconds)))
-        else:
-            want_t.append((k, ts * 1_000_000))
-    assert got_m == sorted(want_m)
-    assert got_t == sorted(want_t)
+    @settings(max_examples=5, deadline=None)
+    @given(
+        events=CEP_RELAXED_EVENTS,
+        within=CEP_WITHIN,
+        strictly_after=st.booleans(),
+    )
+    @example(events=same_instant, within=1, strictly_after=True)
+    @example(events=same_instant, within=1, strictly_after=False)
+    def check(events, within, strictly_after):
+        p = (
+            Pattern.begin("a", F.col("et") == "f")
+            .followed_by("b", F.col("et") == "s", strictly_after)
+            .within(within)
+        )
+        df = _cep_frame(spark, events)
+        got = sorted(
+            (r["k"], r["a_us"], r["b_us"])
+            for r in p.completions(df, "k", "ts").collect()
+        )
+        got_m = sorted(tuple(r) for r in p.detect(df, "k", "ts").collect())
+
+        want = []
+        for k, ts, et in events:
+            if et != "f":
+                continue
+            seconds = [
+                s * 1_000_000
+                for kk, s, e2 in events
+                if kk == k
+                and e2 == "s"
+                and (ts < s if strictly_after else ts <= s)
+                and s <= ts + within
+            ]
+            want.append((k, ts * 1_000_000, min(seconds, default=None)))
+        assert got == sorted(want)  # (key, start) is unique: no None compares
+        assert got_m == [r for r in got if r[2] is not None]
+        n_timeouts = sum(r[2] is None for r in got)
+        assert len(got_m) + n_timeouts == sum(et == "f" for _, _, et in events)
+        matched.append(bool(got_m))
+
+    check()
+    assert any(matched), "no example produced a relaxed match"
 
 
 ADC_CODES = st.lists(

@@ -104,87 +104,6 @@ def test_minhash_fast_pairs_are_exact_verified_subset(spark):
         assert len(set(fast) & gate) >= len(gate) * 0.8
 
 
-def test_pattern_builder_strict_equals_kernel(spark):
-    """Pattern.begin.next.within (2 steps) must reproduce the
-    consecutive_event_pairs kernel exactly — the builder is sugar, not new
-    semantics."""
-    from pyspark.sql import functions as F
-
-    from data_warehouse_flink_spark.io import table
-    from data_warehouse_flink_spark.operators.detection import (
-        consecutive_event_pairs,
-    )
-    from data_warehouse_flink_spark.operators.patterns import Pattern
-
-    ev = table(spark, SF, "events")
-    kernel = {
-        tuple(r)
-        for r in consecutive_event_pairs(
-            ev, "user_id", "ts", ["ts", "event_id"], "error",
-            "event_type", 7200,
-        ).collect()
-    }
-    pat = (
-        Pattern.begin("first_fail", F.col("event_type") == "error")
-        .next("last_fail", F.col("event_type") == "error")
-        .within(7200)
-    )
-    sugar = {
-        tuple(r)
-        for r in pat.detect(
-            ev, "user_id", "ts", order_cols=["ts", "event_id"]
-        ).collect()
-    }
-    assert sugar == kernel
-    assert kernel, "fixture produced no consecutive pairs at all"
-
-
-def test_pattern_builder_followed_by_equals_kernel_and_partitions(spark):
-    """Pattern.begin.followed_by.within must reproduce
-    match_within_timeout's classification: matches = payed rows, timeouts
-    = timeout rows, and together they account for every start event."""
-    from pyspark.sql import functions as F
-
-    from data_warehouse_flink_spark.io import table
-    from data_warehouse_flink_spark.operators.detection import (
-        match_within_timeout,
-    )
-    from data_warehouse_flink_spark.operators.patterns import Pattern
-
-    ev = table(spark, SF, "events")
-    views = ev.filter(F.col("event_type") == "view")
-    buys = ev.filter(F.col("event_type") == "purchase")
-    kernel = match_within_timeout(
-        views, buys, "user_id", "ts", "ts", 3600
-    ).collect()
-    k_match = {
-        (r["user_id"], r["create_us"], r["pay_us"])
-        for r in kernel
-        if r["result_type"] == "payed"
-    }
-    k_tmo = {
-        (r["user_id"], r["create_us"])
-        for r in kernel
-        if r["result_type"] == "timeout"
-    }
-    pat = (
-        Pattern.begin("create", F.col("event_type") == "view")
-        .followed_by("pay", F.col("event_type") == "purchase")
-        .within(3600)
-    )
-    s_match = {
-        (r["user_id"], r["create_us"], r["pay_us"])
-        for r in pat.detect(ev, "user_id", "ts").collect()
-    }
-    s_tmo = {
-        (r["user_id"], r["create_us"])
-        for r in pat.detect_timeouts(ev, "user_id", "ts").collect()
-    }
-    assert s_match == k_match and s_tmo == k_tmo
-    n_starts = views.select("user_id", F.unix_micros("ts")).distinct().count()
-    assert len(s_match) + len(s_tmo) == n_starts
-
-
 def test_merge_upsert_preserves_untouched_keys_in_touched_buckets(
     spark, tmp_path
 ):
